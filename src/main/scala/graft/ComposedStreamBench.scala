@@ -135,7 +135,7 @@ object ComposedStreamBench {
     val mixOut = Files.createTempDirectory("graft-csb-mix").toString
     val ckpt2 = Files.createTempDirectory("graft-csb-ckpt2").toString
     val t1 = System.nanoTime()
-    val q2 = kept.writeStream
+    val q2 = graft.streaming.StreamingConf.writeStream(kept.toDF())
       .outputMode("append")
       .option("checkpointLocation", ckpt2)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -66,7 +66,7 @@ object Jobs {
         to_json(struct(col("date_str"), col("vehicleType"), col("avg_spent"))).as("v"))
     val all = revenue.unionByName(avgSpent).persist()
     try {
-      all.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      all.foreachPartition { (it: Iterator[Row]) =>
         it.foreach(r => sink.put(r.getString(0), r.getString(1)))
       }
       all.count()
@@ -78,10 +78,34 @@ object Jobs {
     * [[StreamingConf.useRocksDbState]]. NOTE the scope: Spark exposes the
     * provider only as a session conf, so opting in switches state backing
     * for every stream started on this session afterwards, not just this
-    * job. Pass `rocksDbState = false` to leave the session conf untouched
-    * (existing checkpoints keep their original provider either way). */
+    * job. Pass `rocksDbState = false` to leave the provider untouched
+    * (existing checkpoints keep their original provider either way).
+    *
+    * Whatever `rocksDbState` is, every entry point starts its stream
+    * through [[StreamingConf.writeStream]], which sets the session's
+    * checkpoint manager to [[graft.streaming.LocalCheckpointFileManager]]:
+    * local checkpoint paths are written with `java.nio`, starting no
+    * process per file, and other schemes keep Spark's own manager. The
+    * same session-wide scope applies, and every stream starter sets the
+    * same value. Local checkpoints carry no `.crc` sidecars (Hadoop's
+    * local file system still reads them, and checkpoints written with
+    * sidecars restart here) and are not fsynced, the same as Hadoop's
+    * local file system. */
   private def configureState(spark: SparkSession, rocksDbState: Boolean): Unit =
     if (rocksDbState) StreamingConf.useRocksDbState(spark)
+
+  /** Start `df` into a per-row sink action, one `foreachPartition` per
+    * micro-batch: the shape every keyed streaming job below shares. */
+  private def startEach(df: DataFrame, outputMode: String, checkpoint: String,
+                        availableNow: Boolean)(each: Row => Unit): StreamingQuery = {
+    val writer = StreamingConf.writeStream(df)
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.foreachPartition { (it: Iterator[Row]) => it.foreach(each) }
+      }
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+  }
 
   /** §3.3 live view (reference repo-events): the slot materialized view as
     * a continuously-updating stream into a keyed sink — key
@@ -91,21 +115,18 @@ object Jobs {
                    checkpoint: String, availableNow: Boolean = true,
                    rocksDbState: Boolean = true): StreamingQuery = {
     configureState(spark, rocksDbState)
-    val updates = LiveSlotView.updates(EventDecode.decode(source.stream(spark))).toDF()
+    startEach(liveSlotUpdates(spark, source), "update", checkpoint, availableNow) { r =>
+      sink.put(r.getString(0), r.getString(1))
+    }
+  }
+
+  /** The live view's (k, v) update stream, before any sink. */
+  private[jobs] def liveSlotUpdates(spark: SparkSession, source: EventSource): DataFrame =
+    LiveSlotView.updates(EventDecode.decode(source.stream(spark))).toDF()
       .select(
         concat_ws("-", col("parkingLotId"), col("parkingSpotId")).as("k"),
         to_json(struct(col("parkingLotId"), col("parkingSpotId"),
           col("occupied"), col("plate"))).as("v"))
-    val writer = updates.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
 
   /** ST2/ST3 → S9: the watermarked hourly window stream delivered to a
     * keyed sink. Update mode emits only the (date, hour, lot) rows whose
@@ -125,15 +146,9 @@ object Jobs {
         concat_ws(":", lit("parking-stats"), lit("hourly"),
           col("date_str"), col("hour_str"), col("parkingLotId")).as("k"),
         to_json(struct(col("entries"), col("exits"), col("occupancy"))).as("v"))
-    val writer = agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    startEach(agg, "update", checkpoint, availableNow) { r =>
+      sink.put(r.getString(0), r.getString(1))
+    }
   }
 
   /** §3.2 alerting (reference srvc-alert): violation stream into a keyed
@@ -150,15 +165,9 @@ object Jobs {
         concat(lit("alert:"), col("event_id")).as("k"),
         to_json(struct(col("vehicle_plate"), col("spot_id"), col("lot_id"),
           col("violation_type"), col("severity"), col("event_time"))).as("v"))
-    val writer = alerts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    startEach(alerts, "append", checkpoint, availableNow) { r =>
+      sink.put(r.getString(0), r.getString(1))
+    }
   }
 
   /** §3.2 delivery leg (reference srvc-notifier AlertEventSubscriber.scala:
@@ -181,14 +190,8 @@ object Jobs {
           lit(" - Vehicle "), col("vehicle_plate"),
           lit(" at "), col("lot_id"), lit("/"), col("spot_id")).as("message"),
         col("event_time"))
-    val writer = alerts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => notifier.notify(r.getString(0), r.getString(1), r.getString(2)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    startEach(alerts, "append", checkpoint, availableNow) { r =>
+      notifier.notify(r.getString(0), r.getString(1), r.getString(2))
+    }
   }
 }

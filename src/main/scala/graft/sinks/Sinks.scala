@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.OutputStream
+import java.io.{BufferedInputStream, InputStream, OutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -179,7 +179,7 @@ object Resp {
 
 /** Redis JSON.SET sink over a raw socket (reference MainHourly.scala:
   * 173-188 semantics). Executor-side: one connection per partition via
-  * `foreachPartition`. Each put reads its FULL reply line synchronously —
+  * `foreachPartition`. Each put reads its FULL reply synchronously —
   * never `available()`-drains — so replies stay aligned with commands,
   * error replies are always seen, and EOF is an error, not a silent
   * success. Covered end-to-end against a loopback RESP server
@@ -188,33 +188,21 @@ object Resp {
 final class RedisKeyValueSink(host: String, port: Int = 6379) extends KeyValueSink {
   @transient private var socket: Socket = _
   @transient private var out: OutputStream = _
+  // one buffer per connection: a reply costs one read call, not one per byte
+  @transient private var in: InputStream = _
   private def ensure(): Unit = if (socket == null || socket.isClosed) {
     socket = new Socket(host, port)
     out = socket.getOutputStream
-  }
-
-  /** Read one CRLF-terminated reply line (simple string / error / integer
-    * replies — all JSON.SET can answer). Throws on EOF mid-reply. */
-  private def readReplyLine(): String = {
-    val in = socket.getInputStream
-    val sb = new StringBuilder
-    var prev = -1
-    while (true) {
-      val b = in.read()
-      if (b < 0) throw new RuntimeException("redis connection closed mid-reply")
-      if (prev == '\r' && b == '\n') return sb.dropRight(1).toString
-      sb.append(b.toChar)
-      prev = b
-    }
-    throw new IllegalStateException("unreachable")
+    in = new BufferedInputStream(socket.getInputStream)
   }
 
   def put(key: String, json: String): Unit = synchronized {
     ensure()
     out.write(Resp.encode(Resp.jsonSet(key, json)))
     out.flush()
-    val reply = readReplyLine()
-    if (reply.startsWith("-"))
-      throw new RuntimeException(s"redis error reply for $key: $reply")
+    Resp.readReply(in) match {
+      case Resp.Err(msg) => throw new RuntimeException(s"redis error reply for $key: -$msg")
+      case _ =>
+    }
   }
 }

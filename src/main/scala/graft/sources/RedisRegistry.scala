@@ -62,7 +62,7 @@ object RedisRegistry {
     val socket = new Socket(host, port)
     try {
       val out = socket.getOutputStream
-      val in = socket.getInputStream
+      val in = new java.io.BufferedInputStream(socket.getInputStream)
       def command(args: String*): Resp.Reply = {
         out.write(Resp.encode(args))
         out.flush()

@@ -98,7 +98,7 @@ object NoveltyScoreStream {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -131,7 +131,7 @@ object LmScoreStream {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -189,7 +189,7 @@ object SpanDedupStream {
              spanK: Int = 8,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -257,7 +257,7 @@ object LineDedupStream {
              outDir: String, stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -311,7 +311,7 @@ object SpanScrubStream {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -416,7 +416,7 @@ object ContainmentStream {
              minContainment: Double = 0.9, minShingles: Int = 5,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -513,7 +513,7 @@ object EvalDirtinessStream {
     // run many triggers persist benchGramFrame themselves (the
     // IdfEmbedStream frozen-frame convention)
     val vocab = benchGramFrame.select("g").distinct()
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -579,7 +579,7 @@ object WinnowingStream {
              minShared: Int = 2,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

@@ -120,7 +120,7 @@ object DedupGroupStream {
              stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    pairStream.writeStream
+    StreamingConf.writeStream(pairStream)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

@@ -69,8 +69,7 @@ object KafkaEventSink {
 
   def writer(df: DataFrame, keyCol: String, bootstrapServers: String,
              topic: String, checkpoint: String): DataStreamWriter[Row] =
-    shape(df, keyCol)
-      .writeStream
+    StreamingConf.writeStream(shape(df, keyCol))
       .format("kafka")
       .options(options(bootstrapServers, topic, checkpoint))
 }

@@ -22,7 +22,7 @@ object DsirScoreStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              model: DataFrame, outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -67,7 +67,7 @@ object SemDedupStream {
              minSim: Double = 0.8,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    vecs.writeStream
+    StreamingConf.writeStream(vecs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -126,7 +126,7 @@ object QualityScoreStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              model: DataFrame, outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -150,7 +150,7 @@ object LangIdStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              voted: DataFrame, outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -175,7 +175,7 @@ object BpeTokenizeStream {
              merges: Seq[graft.text.BpeTokenizer.Merge],
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -197,7 +197,7 @@ object RepetitionSignalsStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -217,7 +217,7 @@ object GopherQualityStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -248,7 +248,7 @@ object IndexIngestStream {
              cb: graft.ann.ProductQuantizer.Codebooks,
              indexPath: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
+    StreamingConf.writeStream(vecs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -275,7 +275,7 @@ object TwoLevelAssignStream {
              cells: Array[(Long, Long, Array[Float])], wSuper: Int,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
+    StreamingConf.writeStream(vecs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -302,7 +302,7 @@ object IdfEmbedStream {
              vocab: DataFrame, nDocs: Long,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -332,7 +332,7 @@ object BloomProbeStream {
              seenPos: DataFrame, seenFp: DataFrame, mBits: Long,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -370,7 +370,7 @@ object PrototypicalityStream {
              dropPct: Int = 25,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    vecs.writeStream
+    StreamingConf.writeStream(vecs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -423,7 +423,7 @@ object InertiaStream {
              cents: Array[(Long, Array[Float])],
              stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
+    StreamingConf.writeStream(vecs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -476,7 +476,7 @@ object KeyMassStream {
   def attach(docs: DataFrame, keyCol: String, textCol: String,
              stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -522,7 +522,7 @@ object LangGateStream {
              langCol: String, thresholds: DataFrame,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
+    StreamingConf.writeStream(docs)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -559,7 +559,7 @@ object MmrSearchStream {
     // truncated, so no micro-batch re-derives the corpus encode
     val index = graft.ann.ProductQuantizer
       .residualCodesIndex(emb, idCol, vecCol, cents, cb).localCheckpoint()
-    queries.writeStream
+    StreamingConf.writeStream(queries)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

@@ -1,16 +1,50 @@
 package graft.jobs
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.sql.{DataFrame, Row}
+
 import graft.SparkSpec
 import graft.ops.ParkingAnalytics
 import graft.schema.ParkingModel
 import graft.sinks.{InMemoryKeyValueSink, InMemoryTimeSeriesSink}
-import graft.streaming.FileEventSource
+import graft.streaming.{FileEventSource, StreamingConf}
 import org.apache.spark.sql.functions._
 
 class JobsSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** The sf0.001 events as the reference's nested JSON lines, in event_id
+    * order. */
+  private lazy val eventLines: Array[String] =
+    ParkingModel.parkingEvents(spark, sfDir).orderBy("event_id")
+      .select(to_json(struct(
+        col("event_id"), col("eventType"), col("ts").as("timestamp"),
+        struct(col("licensePlate"), col("vehicleType"), lit("gray").as("color")).as("vehicle"),
+        struct(col("parkingLotId"), col("parkingSpotId"), col("isSlotHandicapped")).as("parking"),
+        col("duration_ms").as("duration"))).as("l")).collect().map(_.getString(0))
+
+  /** Land `lines` in `dir` as file `i`, its mtime ordering it after every
+    * file of a lower index. */
+  private def land(dir: Path, i: Int, lines: Seq[String]): Unit = {
+    val f = dir.resolve(f"c$i%02d.json")
+    Files.write(f, lines.mkString("\n").getBytes)
+    f.toFile.setLastModified(1700000000000L + i * 60000L)
+  }
+
+  /** Numbered batch files of a checkpoint's offset or commit log. */
+  private def batchIds(log: Path): Seq[Long] =
+    if (!Files.isDirectory(log)) Seq.empty
+    else {
+      val s = Files.list(log)
+      try s.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.forall(_.isDigit)).map(_.toLong).toSeq.sorted
+      finally s.close()
+    }
 
   "hourlyStats job" should "publish one document per clock hour" in {
     val sink = new InMemoryKeyValueSink
@@ -44,13 +78,7 @@ class JobsSpec extends SparkSpec {
     // replay events as JSON through the file source (one file is enough —
     // cross-batch state is covered by StreamingParitySpec)
     val dir = Files.createTempDirectory("job-events")
-    val json = ParkingModel.parkingEvents(spark, sfDir).orderBy("event_id")
-      .select(to_json(struct(
-        col("event_id"), col("eventType"), col("ts").as("timestamp"),
-        struct(col("licensePlate"), col("vehicleType"), lit("gray").as("color")).as("vehicle"),
-        struct(col("parkingLotId"), col("parkingSpotId"), col("isSlotHandicapped")).as("parking"),
-        col("duration_ms").as("duration"))).as("l")).collect().map(_.getString(0))
-    Files.write(dir.resolve("events.json"), String.join("\n", json: _*).getBytes)
+    Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
     val sink = new InMemoryKeyValueSink
     val q = Jobs.liveSlotView(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 10),
       sink, Files.createTempDirectory("job-ckpt").toString)
@@ -65,17 +93,7 @@ class JobsSpec extends SparkSpec {
 
   "hourlyStatsStream job" should "converge the sink to the batch occupancyByLot rows" in {
     val dir = Files.createTempDirectory("job-hourly")
-    val json = ParkingModel.parkingEvents(spark, sfDir).orderBy("event_id")
-      .select(to_json(struct(
-        col("event_id"), col("eventType"), col("ts").as("timestamp"),
-        struct(col("licensePlate"), col("vehicleType"), lit("gray").as("color")).as("vehicle"),
-        struct(col("parkingLotId"), col("parkingSpotId"), col("isSlotHandicapped")).as("parking"),
-        col("duration_ms").as("duration"))).as("l")).collect().map(_.getString(0))
-    json.grouped(250).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"c$i%02d.json")
-      Files.write(f, ls.mkString("\n").getBytes)
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
+    eventLines.grouped(250).zipWithIndex.foreach { case (ls, i) => land(dir, i, ls) }
     val sink = new InMemoryKeyValueSink
     val q = Jobs.hourlyStatsStream(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 1),
       sink, Files.createTempDirectory("hourly-ckpt").toString)
@@ -91,18 +109,96 @@ class JobsSpec extends SparkSpec {
 
   "alertStream job" should "publish exactly the batch violations as alert documents" in {
     val dir = Files.createTempDirectory("job-alerts")
-    val json = ParkingModel.parkingEvents(spark, sfDir).orderBy("event_id")
-      .select(to_json(struct(
-        col("event_id"), col("eventType"), col("ts").as("timestamp"),
-        struct(col("licensePlate"), col("vehicleType"), lit("gray").as("color")).as("vehicle"),
-        struct(col("parkingLotId"), col("parkingSpotId"), col("isSlotHandicapped")).as("parking"),
-        col("duration_ms").as("duration"))).as("l")).collect().map(_.getString(0))
-    Files.write(dir.resolve("events.json"), String.join("\n", json: _*).getBytes)
+    Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
     val sink = new InMemoryKeyValueSink
     val q = Jobs.alertStream(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 10),
       sfDir, sink, Files.createTempDirectory("alert-ckpt").toString)
     q.awaitTermination(120000)
     sink.store.size.toLong shouldBe ParkingAnalytics.violations(spark, sfDir).count()
     sink.store.values.foreach(_ should include("\"violation_type\":"))
+  }
+
+  "local streaming checkpoints" should "start no chmod, readlink, stat or ls process" in {
+    val dir = Files.createTempDirectory("job-noproc")
+    eventLines.grouped(eventLines.length / 3 + 1).zipWithIndex.foreach { case (ls, i) =>
+      land(dir, i, ls)
+    }
+    val source = FileEventSource(dir.toString, maxFilesPerTrigger = 1)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val queries = try {
+      // a process the recording must see, so an empty record cannot pass
+      new ProcessBuilder("true").start().waitFor()
+      val qs = Seq(
+        Jobs.liveSlotView(spark, source, new InMemoryKeyValueSink,
+          Files.createTempDirectory("noproc-view").toString),
+        Jobs.alertStream(spark, source, sfDir, new InMemoryKeyValueSink,
+          Files.createTempDirectory("noproc-alert").toString))
+      qs.foreach(_.awaitTermination(120000))
+      qs
+    } finally rec.stop()
+    val jfr = Files.createTempFile("process-starts", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    queries.foreach { q =>
+      q.isActive shouldBe false
+      q.recentProgress.count(_.numInputRows > 0) shouldBe 3
+    }
+    val programs = RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command").trim.split("\\s+").head.split('/').last)
+    programs should contain("true")
+    programs.filter(Set("chmod", "readlink", "stat", "ls")) shouldBe empty
+  }
+
+  "liveSlotView" should "restart on a checkpoint Spark's default manager wrote" in {
+    val dir = Files.createTempDirectory("job-restart")
+    val files = eventLines.grouped(eventLines.length / 6 + 1).toSeq
+    files.indices.take(4).foreach(i => land(dir, i, files(i)))
+    val ckpt = Files.createTempDirectory("restart-ckpt")
+    val source = FileEventSource(dir.toString, maxFilesPerTrigger = 1)
+    val sink = new InMemoryKeyValueSink
+    val prev = spark.conf.getOption(StreamingConf.CheckpointFileManagerKey)
+    try {
+      // leg 1: the live view's own plan under Spark's default manager,
+      // stopped once two batches are committed
+      spark.conf.unset(StreamingConf.CheckpointFileManagerKey)
+      StreamingConf.useRocksDbState(spark)
+      val q1 = Jobs.liveSlotUpdates(spark, source).writeStream
+        .outputMode("update")
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.collect().foreach((r: Row) => sink.put(r.getString(0), r.getString(1)))
+        }
+        .start()
+      try {
+        val deadline = System.currentTimeMillis() + 120000
+        while (batchIds(ckpt.resolve("commits")).size < 2 && q1.isActive &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+      } finally q1.stop()
+      val firstLeg = batchIds(ckpt.resolve("commits"))
+      firstLeg.take(2) shouldBe Seq(0L, 1L)
+      val walk = Files.walk(ckpt)
+      try walk.iterator.asScala.exists(_.getFileName.toString.endsWith(".crc")) shouldBe true
+      finally walk.close()
+
+      // leg 2: more files land, and the job restarts on the same checkpoint
+      files.indices.drop(4).foreach(i => land(dir, i, files(i)))
+      val q2 = Jobs.liveSlotView(spark, source, sink, ckpt.toString)
+      q2.awaitTermination(120000) shouldBe true
+      val secondLeg = q2.recentProgress.map(_.batchId).toSeq
+      val all = firstLeg ++ secondLeg
+      all shouldBe (0L until all.size.toLong)
+      batchIds(ckpt.resolve("commits")) shouldBe all
+      batchIds(ckpt.resolve("offsets")) shouldBe all
+    } finally prev match {
+      case Some(v) => spark.conf.set(StreamingConf.CheckpointFileManagerKey, v)
+      case None => spark.conf.unset(StreamingConf.CheckpointFileManagerKey)
+    }
+    val expected = ParkingAnalytics.latestSlotState(spark, sfDir)
+      .select(concat_ws("-", col("parkingLotId"), col("parkingSpotId")),
+        to_json(struct(col("parkingLotId"), col("parkingSpotId"), col("occupied"), col("plate"))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    sink.store.toMap shouldBe expected
   }
 }

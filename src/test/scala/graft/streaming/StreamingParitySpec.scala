@@ -22,8 +22,10 @@ class StreamingParitySpec extends SparkSpec {
 
   // the parity gate runs under the production state store (SURVEY §4):
   // every stateful query below keeps its mapGroupsWithState / windowed
-  // state in RocksDB, not executor heap.
+  // state in RocksDB, not executor heap, and checkpoints through the
+  // engine's local checkpoint manager, as the Jobs entry points do.
   StreamingConf.useRocksDbState(spark)
+  StreamingConf.useLocalCheckpoints(spark)
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val jsonDir: String = dumpEventsAsJson()
@@ -70,6 +72,11 @@ class StreamingParitySpec extends SparkSpec {
   "StreamingConf" should "have the RocksDB provider active for this suite" in {
     spark.conf.get("spark.sql.streaming.stateStore.providerClass") should
       endWith("RocksDBStateStoreProvider")
+  }
+
+  it should "have the local checkpoint manager active for this suite" in {
+    spark.conf.get(StreamingConf.CheckpointFileManagerKey) shouldBe
+      classOf[LocalCheckpointFileManager].getName
   }
 
   "EventDecode" should "drop undecodable payloads and keep valid ones (ST6)" in {
