@@ -8,7 +8,9 @@ import graft.text.TextDedup
   * the full ladder; this main runs ONLY the CC rung `reps` times in one
   * JVM plus reports per-run wall, rounds, and GC time, so the band (and
   * any memory-shape fix) can be quantified without paying the whole
-  * ladder per sample.
+  * ladder per sample. It forces the iterative path
+  * (`localEdgeThreshold = 0`) so the loop is measured at any edge count,
+  * never absorbed by the union-find path.
   *
   * Run idle with `SPARK_DRIVER_MEM=32g sbt "runMain graft.CcBench
   * [edges] [reps]"`. One JSON line per run.
@@ -33,7 +35,8 @@ object CcBench {
       edges.count()
       val gc0 = gcMillis()
       val (sec, _, snap) = TaskStats.scoped(spark) {
-        DevBench.mat(TextDedup.duplicateGroups(edges, "doc_a", "doc_b"))
+        DevBench.mat(TextDedup.duplicateGroups(edges, "doc_a", "doc_b",
+          localEdgeThreshold = 0L))
       }
       val gcSec = (gcMillis() - gc0) / 1000.0
       edges.unpersist(true)

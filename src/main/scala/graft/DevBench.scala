@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared recipe for the dev measurement harnesses ([[ScaleBench]],
-  * [[ScaleCorpusBench]], [[ScaleAnnBench]], [[CcProbe]]): one place for
+  * [[ScaleCorpusBench]], [[ScaleAnnBench]], [[CcBench]]): one place for
   * the bench session config so a future knob change (AQE, memory, shuffle
   * sizing) cannot leave the harnesses measuring under silently different
   * configs, plus the wall-clock and noop-materialization helpers. Heap

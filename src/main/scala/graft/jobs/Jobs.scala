@@ -73,38 +73,29 @@ object Jobs {
     } finally all.unpersist(false)
   }
 
-  /** Every streaming entry point below takes `rocksDbState` (default true):
-    * when set, the job configures the RocksDB state-store provider via
-    * [[StreamingConf.useRocksDbState]]. NOTE the scope: Spark exposes the
-    * provider only as a session conf, so opting in switches state backing
-    * for every stream started on this session afterwards, not just this
-    * job. Pass `rocksDbState = false` to leave the provider untouched
-    * (existing checkpoints keep their original provider either way).
+  /** Every streaming entry point below runs on RocksDB-backed state
+    * ([[StreamingConf.useRocksDbState]]). NOTE the scope: Spark exposes the
+    * provider only as a session conf, so it applies to every stream started
+    * on this session afterwards, not just this job (existing checkpoints
+    * keep their original provider).
     *
-    * Whatever `rocksDbState` is, every entry point starts its stream
-    * through [[StreamingConf.writeStream]], which sets the session's
-    * checkpoint manager to [[graft.streaming.LocalCheckpointFileManager]]:
-    * local checkpoint paths are written with `java.nio`, starting no
-    * process per file, and other schemes keep Spark's own manager. The
-    * same session-wide scope applies, and every stream starter sets the
-    * same value. Local checkpoints carry no `.crc` sidecars (Hadoop's
-    * local file system still reads them, and checkpoints written with
-    * sidecars restart here) and are not fsynced, the same as Hadoop's
-    * local file system. */
-  private def configureState(spark: SparkSession, rocksDbState: Boolean): Unit =
-    if (rocksDbState) StreamingConf.useRocksDbState(spark)
-
-  /** Start `df` into a per-row sink action, one `foreachPartition` per
-    * micro-batch: the shape every keyed streaming job below shares. */
+    * Every entry point starts its stream through
+    * [[StreamingConf.eachBatch]], which installs the session's checkpoint
+    * manager, [[graft.streaming.LocalCheckpointFileManager]] (same
+    * session-wide scope; its limits are in [[StreamingConf]]).
+    *
+    * Start `df` into a per-row sink action, one `foreachPartition` per
+    * micro-batch: the shape every keyed streaming job below shares.
+    * `availableNow = false` keeps Spark's default trigger,
+    * `ProcessingTime(0)`: the next micro-batch starts as soon as the last
+    * one ends. */
   private def startEach(df: DataFrame, outputMode: String, checkpoint: String,
                         availableNow: Boolean)(each: Row => Unit): StreamingQuery = {
-    val writer = StreamingConf.writeStream(df)
-      .outputMode(outputMode)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[Row]) => it.foreach(each) }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    StreamingConf.useRocksDbState(df.sparkSession)
+    val trigger = if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0L)
+    StreamingConf.eachBatch(df, checkpoint, trigger, outputMode) { (batch, _) =>
+      batch.foreachPartition { (it: Iterator[Row]) => it.foreach(each) }
+    }
   }
 
   /** §3.3 live view (reference repo-events): the slot materialized view as
@@ -112,13 +103,10 @@ object Jobs {
     * `"$lot-$spot"` exactly like RepoEventsApi.scala:39. Returns the
     * running query; callers own its lifecycle. */
   def liveSlotView(spark: SparkSession, source: EventSource, sink: KeyValueSink,
-                   checkpoint: String, availableNow: Boolean = true,
-                   rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
+                   checkpoint: String, availableNow: Boolean = true): StreamingQuery =
     startEach(liveSlotUpdates(spark, source), "update", checkpoint, availableNow) { r =>
       sink.put(r.getString(0), r.getString(1))
     }
-  }
 
   /** The live view's (k, v) update stream, before any sink. */
   private[jobs] def liveSlotUpdates(spark: SparkSession, source: EventSource): DataFrame =
@@ -137,9 +125,7 @@ object Jobs {
     * the cross-lot document of the batch job needs the whole hour and
     * remains [[hourlyStats]]'s output. */
   def hourlyStatsStream(spark: SparkSession, source: EventSource, sink: KeyValueSink,
-                        checkpoint: String, availableNow: Boolean = true,
-                        rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
+                        checkpoint: String, availableNow: Boolean = true): StreamingQuery = {
     val agg = graft.streaming.HourlyStatsStream.aggregates(
       EventDecode.decode(source.stream(spark)))
       .select(
@@ -156,9 +142,7 @@ object Jobs {
     * idempotent). */
   def alertStream(spark: SparkSession, source: EventSource, usersDir: String,
                   sink: KeyValueSink, checkpoint: String,
-                  availableNow: Boolean = true,
-                  rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
+                  availableNow: Boolean = true): StreamingQuery = {
     val alerts = ViolationStream.alerts(
       EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
       .select(
@@ -179,9 +163,7 @@ object Jobs {
     * stream. */
   def alertNotifierStream(spark: SparkSession, source: EventSource, usersDir: String,
                           notifier: AlertNotifier, checkpoint: String,
-                          availableNow: Boolean = true,
-                          rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
+                          availableNow: Boolean = true): StreamingQuery = {
     val alerts = ViolationStream.alerts(
       EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
       .select(

@@ -39,22 +39,24 @@ object Adaptive {
     *    branch stages) with NO separate eager job. Round 16 shipped these
     *    boundaries EAGER, which billed one extra Spark job per call site;
     *    at sf0.1 that job is 0.2–0.6 s of pure scheduling against saved
-    *    work of ~0 (the r16 p106/p110/p119 local regressions). Lazy keeps
+    *    work of ~0 (the r16 p106/p110/p119 local regressions,
+    *    OPTIMIZATION_r17.md; the eager arm was deleted and can be
+    *    recovered at `390d7f1`). Lazy keeps
     *    the single-computation plan shape at every scale and drops the
     *    extra job — strictly at-most-one materialization pass either way.
     *    (AQE note: constructing the checkpoint RDD still runs the frame's
     *    upstream exchange stages at call time — only the result stage
     *    moves into the first consumer's job.)
-    *  - **`eager`**: the round-16 behavior (eager `localCheckpoint`),
-    *    kept as the A/B arm.
     *  - **`reliable`**: `persist(MEMORY_AND_DISK)` with lineage KEPT —
     *    the cluster-safe mode: a `localCheckpoint` stores blocks
     *    unreplicated and truncates lineage, so on a preemptible cluster
     *    a lost executor fails the job; persist lets Spark recompute lost
     *    blocks from lineage. Branch sharing still holds (both consumers
     *    reference this exact frame, so the cache manager substitutes the
-    *    same InMemoryRelation). Blocks are released by the context
-    *    cleaner when the frame is unreferenced, as with checkpoints.
+    *    same InMemoryRelation). Its blocks are NOT released when the
+    *    frame becomes unreachable: 5 of 5 persisted frames were still
+    *    held by the CacheManager after GC, against 0 of 5 under `local`
+    *    (measured; the fix is ROADMAP.md item 2).
     *
     * NOT routed through here: the iterative-loop checkpoints (CC label
     * rounds, MMR greedy stages) — those manage per-round storage levels
@@ -63,7 +65,6 @@ object Adaptive {
     * periodic-checkpoint trade; see the iterativeGroups scaladoc). */
   def materialize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     sys.props.getOrElse("graft.materialize", "local") match {
-      case "eager"    => df.localCheckpoint()
       case "reliable" => df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       case _          => df.localCheckpoint(false)
     }
@@ -82,35 +83,6 @@ object Adaptive {
     require(floor >= 1 && cap >= floor, "need 1 <= floor <= cap")
     val want = (rows + RowsPerRange - 1) / RowsPerRange
     math.min(cap.toLong, math.max(floor.toLong, want)).toInt
-  }
-
-  /** Shuffle-partition count for an ITERATIVE loop whose per-round
-    * join/aggregate state is linear in `rows`: under the session's
-    * constant (tuned to the core count for the sub-second bench queries),
-    * per-task sort/hash state grows linearly with the input until it
-    * spills — the r16 500M-edge CC rung measured 222 GB of disk spill and
-    * superlinear tail rounds from exactly this (47M rows per task at 32
-    * partitions). ~4M narrow rows per partition keeps per-task state
-    * ~128 MB (inside a standard 4 GB / 4-core executor's per-task share),
-    * the floor — the CURRENT session setting — leaves every plan at
-    * bench scale bit-identical, and the cap bounds the per-round shuffle
-    * block count (cap² blocks; guide §2.2).
-    *
-    * EXPERIMENT-ONLY for now: wired into the CC loop behind
-    * `-Dgraft.cc.parts=adaptive`, because the r16 500M rung measured the
-    * derived count WORSE on a single-disk box (see
-    * [[graft.text.TextDedup]] iterativeGroups scaladoc and
-    * bench_records/r16_cc.md) — combine-free exchanges past the
-    * bypass-merge threshold rewrite every shuffle byte through the
-    * sort-based writer's spill-merge, doubling disk write volume. On a
-    * multi-disk cluster the trade may flip; re-measure there before
-    * promoting to a default. */
-  def loopShufflePartitions(rows: Long, current: Int,
-                            rowsPerPartition: Long = 4000000L,
-                            cap: Int = 4096): Int = {
-    require(current >= 1 && rowsPerPartition >= 1, "need positive inputs")
-    val want = (rows + rowsPerPartition - 1) / rowsPerPartition
-    math.min(math.max(want, current.toLong), math.max(cap, current).toLong).toInt
   }
 
   /** IVF quantizer size by the standard `nlist ≈ sqrt(n)` rule: per-query

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.TextPrims.tokens
 import graft.text.TextCuration
+import StreamingConf.{eachBatch, writeBatch}
 
 /** Streaming twin of the p81 context-window chunking
   * ([[graft.text.TextCuration.tokenChunks]]). Chunking is row-local —
@@ -86,9 +87,10 @@ object PackingStream {
   * against a FROZEN model table — the split a production pipeline
   * actually runs (train once offline on a reference corpus, score the
   * ingest stream forever). Scoring is per-document given the model, so
-  * each micro-batch runs the exact batch scorer via `foreachBatch` and
-  * appends its rows; parity with the batch operator is row-exact by
-  * construction and pinned by the replay test. The model is a plain
+  * each micro-batch runs the exact batch scorer and overwrites its own
+  * `batch=` partition ([[StreamingConf.writeBatch]]); parity with the
+  * batch operator is row-exact by construction and pinned by the
+  * replay test. The model is a plain
   * distributed table — at 100 TB it joins by shuffle or broadcast just
   * like the batch path, never a driver-side map. */
 object NoveltyScoreStream {
@@ -98,20 +100,10 @@ object NoveltyScoreStream {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // one OVERWRITTEN partition per batch id: a replayed batch (failure
-        // between the write and the checkpoint commit) rewrites its own
-        // partition instead of appending duplicates — foreachBatch's
-        // exactly-once contract. Readers discover `batch` as a partition
-        // column and drop it.
-        graft.text.TextStats.bigramScore(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextStats.bigramScore(batch, idCol, textCol, model),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p138 conditional-LM surprisal scorer
@@ -131,15 +123,10 @@ object LmScoreStream {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.TextStats.lmScore(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextStats.lmScore(batch, idCol, textCol, model),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p87 span-level dedup
@@ -189,50 +176,41 @@ object SpanDedupStream {
              spanK: Int = 8,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val tok = TextDedup.spanTokenFrame(batch, idCol, textCol)
-        // persisted for the batch scope: the cleaned-output write AND the
-        // state write both consume the occurrence rows — without the
-        // persist the second action re-runs the whole tokenize/hash/
-        // explode fold (the recompute the batch operator's shared
-        // exchange exists to avoid)
-        val occ = TextDedup.spanOccurrences(tok, spanK)
-          .repartition(col("wh")).persist()
-        try {
-          val seen = latestState(spark, stateDir, Some(batchId)).getOrElse(
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seenSchema))
-          // batch keeper per key; an occurrence survives only as the first
-          // occurrence of a never-before-seen key
-          val grp = occ.groupBy("wh")
-            .agg(min(struct(col("id"), col("pos"))).as("keep"))
-          val starts = occ.join(grp, Seq("wh"))
-            .join(seen.select(col("wh"), lit(true).as("__seen")), Seq("wh"), "left")
-            .filter(col("__seen").isNotNull ||
-              col("id") =!= col("keep.id") || col("pos") =!= col("keep.pos"))
-            .groupBy("id").agg(sort_array(collect_list(col("pos"))).as("starts"))
-          // one OVERWRITTEN partition per batch id — a replayed batch
-          // rewrites its own partition instead of appending duplicates;
-          // readers discover `batch` as a partition column and drop it
-          TextDedup.spanCleanup(tok, starts, spanK)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          // state write: the batch's NOVEL keys only — deltas are disjoint
-          // from everything before them by construction, so the reader's
-          // union needs no dedup
-          val novel = grp.select("wh").join(seen, Seq("wh"), "left_anti")
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-            VersionedState.write(seen.union(novel), stateDir, batchId, compact = true)
-          else
-            VersionedState.write(novel, stateDir, batchId, compact = false)
-        } finally occ.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val tok = TextDedup.spanTokenFrame(batch, idCol, textCol)
+      // persisted for the batch scope: the cleaned-output write AND the
+      // state write both consume the occurrence rows — without the
+      // persist the second action re-runs the whole tokenize/hash/
+      // explode fold (the recompute the batch operator's shared
+      // exchange exists to avoid)
+      val occ = TextDedup.spanOccurrences(tok, spanK)
+        .repartition(col("wh")).persist()
+      try {
+        val seen = latestState(spark, stateDir, Some(batchId)).getOrElse(
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seenSchema))
+        // batch keeper per key; an occurrence survives only as the first
+        // occurrence of a never-before-seen key
+        val grp = occ.groupBy("wh")
+          .agg(min(struct(col("id"), col("pos"))).as("keep"))
+        val starts = occ.join(grp, Seq("wh"))
+          .join(seen.select(col("wh"), lit(true).as("__seen")), Seq("wh"), "left")
+          .filter(col("__seen").isNotNull ||
+            col("id") =!= col("keep.id") || col("pos") =!= col("keep.pos"))
+          .groupBy("id").agg(sort_array(collect_list(col("pos"))).as("starts"))
+        writeBatch(TextDedup.spanCleanup(tok, starts, spanK), outDir, batchId)
+        // state write: the batch's NOVEL keys only — deltas are disjoint
+        // from everything before them by construction, so the reader's
+        // union needs no dedup
+        val novel = grp.select("wh").join(seen, Seq("wh"), "left_anti")
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+          VersionedState.write(seen.union(novel), stateDir, batchId, compact = true)
+        else
+          VersionedState.write(novel, stateDir, batchId, compact = false)
+      } finally occ.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }
 
 /** Streaming twin of the p137 corpus-wide line dedup
@@ -257,41 +235,35 @@ object LineDedupStream {
              outDir: String, stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val lf = TextDedup.lineFrame(batch, idCol, textCol)
-        val occ = TextDedup.lineOccurrences(lf)
-          .repartition(col("h1"), col("h2")).persist()
-        try {
-          val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              seenSchema))
-          val grp = occ.groupBy("h1", "h2")
-            .agg(min(struct(col("id"), col("lpos"))).as("keep"))
-          val removals = occ.join(grp, Seq("h1", "h2"))
-            .join(seen.select(col("h1"), col("h2"), lit(true).as("__seen")),
-              Seq("h1", "h2"), "left")
-            .filter(col("__seen").isNotNull ||
-              col("id") =!= col("keep.id") || col("lpos") =!= col("keep.lpos"))
-            .groupBy("id").agg(sort_array(collect_list(col("lpos"))).as("rm"))
-          TextDedup.lineCleanup(lf, removals)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          val novel = grp.select("h1", "h2")
-            .join(seen, Seq("h1", "h2"), "left_anti")
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-            VersionedState.write(seen.union(novel), stateDir, batchId,
-              compact = true)
-          else
-            VersionedState.write(novel, stateDir, batchId, compact = false)
-        } finally occ.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val lf = TextDedup.lineFrame(batch, idCol, textCol)
+      val occ = TextDedup.lineOccurrences(lf)
+        .repartition(col("h1"), col("h2")).persist()
+      try {
+        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            seenSchema))
+        val grp = occ.groupBy("h1", "h2")
+          .agg(min(struct(col("id"), col("lpos"))).as("keep"))
+        val removals = occ.join(grp, Seq("h1", "h2"))
+          .join(seen.select(col("h1"), col("h2"), lit(true).as("__seen")),
+            Seq("h1", "h2"), "left")
+          .filter(col("__seen").isNotNull ||
+            col("id") =!= col("keep.id") || col("lpos") =!= col("keep.lpos"))
+          .groupBy("id").agg(sort_array(collect_list(col("lpos"))).as("rm"))
+        writeBatch(TextDedup.lineCleanup(lf, removals), outDir, batchId)
+        val novel = grp.select("h1", "h2")
+          .join(seen, Seq("h1", "h2"), "left_anti")
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+          VersionedState.write(seen.union(novel), stateDir, batchId,
+            compact = true)
+        else
+          VersionedState.write(novel, stateDir, batchId, compact = false)
+      } finally occ.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }
 
 /** Streaming twin of the p90 span-level decontamination scrub
@@ -311,15 +283,10 @@ object SpanScrubStream {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.text.TextDedup.spanScrub(batch, benchmark, idCol, textCol, spanK)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextDedup.spanScrub(batch, benchmark, idCol, textCol, spanK),
+        outDir, batchId)
+    }
 }
 
 /** One row entering the streaming mixture sampler: key, id, weight. */
@@ -416,59 +383,54 @@ object ContainmentStream {
              minContainment: Double = 0.9, minShingles: Int = 5,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // the batch's postings — persisted because the pair join, the
-        // size table, and the state write all consume them
-        val exNew = TextDedup.shingleFrame(batch, idCol, textCol, shingleK)
-          .select(col("id"), size(col("sh")).cast("long").as("n"),
-            explode(col("sh")).as("g"))
-          .filter(col("n") >= lit(minShingles))
-          .persist()
-        try {
-          // a replayed batch reads its PREDECESSOR's state, never the
-          // delta its own failed attempt wrote (the SpanDedupStream rule)
-          val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema))
-          val allF = seen.withColumn("is_new", lit(false))
-            .unionByName(exNew.withColumn("is_new", lit(true)))
-          val ex =
-            if (maxShingleDf.value <= 0) allF
-            else allF.join(
-              allF.groupBy("g").agg(count(lit(1)).as("df"))
-                .filter(col("df") <= maxShingleDf.value).select("g"),
-              Seq("g"))
-          // pairs with at least one new side: old×old pairs were emitted
-          // by an earlier batch and are excluded by the join predicate
-          val inter = ex.as("x").join(ex.as("y"),
-              col("x.g") === col("y.g") && col("x.id") < col("y.id") &&
-                (col("x.is_new") || col("y.is_new")))
-            .groupBy(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
-            .agg(count(lit(1)).as("inter"))
-          val sizes = allF.select("id", "n").distinct()
-          inter
-            .join(sizes.as("sa"), col("doc_a") === col("sa.id"))
-            .join(sizes.as("sb"), col("doc_b") === col("sb.id"))
-            .withColumn("containment",
-              col("inter").cast("double") / least(col("sa.n"), col("sb.n")))
-            .filter(col("containment") >= minContainment)
-            .select("doc_a", "doc_b", "containment")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          val delta = exNew.select("id", "n", "g")
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-            VersionedState.write(seen.unionByName(delta), stateDir, batchId,
-              compact = true)
-          else
-            VersionedState.write(delta, stateDir, batchId, compact = false)
-        } finally exNew.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the batch's postings — persisted because the pair join, the
+      // size table, and the state write all consume them
+      val exNew = TextDedup.shingleFrame(batch, idCol, textCol, shingleK)
+        .select(col("id"), size(col("sh")).cast("long").as("n"),
+          explode(col("sh")).as("g"))
+        .filter(col("n") >= lit(minShingles))
+        .persist()
+      try {
+        // a replayed batch reads its PREDECESSOR's state, never the
+        // delta its own failed attempt wrote (the SpanDedupStream rule)
+        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema))
+        val allF = seen.withColumn("is_new", lit(false))
+          .unionByName(exNew.withColumn("is_new", lit(true)))
+        val ex =
+          if (maxShingleDf.value <= 0) allF
+          else allF.join(
+            allF.groupBy("g").agg(count(lit(1)).as("df"))
+              .filter(col("df") <= maxShingleDf.value).select("g"),
+            Seq("g"))
+        // pairs with at least one new side: old×old pairs were emitted
+        // by an earlier batch and are excluded by the join predicate
+        val inter = ex.as("x").join(ex.as("y"),
+            col("x.g") === col("y.g") && col("x.id") < col("y.id") &&
+              (col("x.is_new") || col("y.is_new")))
+          .groupBy(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
+          .agg(count(lit(1)).as("inter"))
+        val sizes = allF.select("id", "n").distinct()
+        val pairs = inter
+          .join(sizes.as("sa"), col("doc_a") === col("sa.id"))
+          .join(sizes.as("sb"), col("doc_b") === col("sb.id"))
+          .withColumn("containment",
+            col("inter").cast("double") / least(col("sa.n"), col("sb.n")))
+          .filter(col("containment") >= minContainment)
+          .select("doc_a", "doc_b", "containment")
+        writeBatch(pairs, outDir, batchId)
+        val delta = exNew.select("id", "n", "g")
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+          VersionedState.write(seen.unionByName(delta), stateDir, batchId,
+            compact = true)
+        else
+          VersionedState.write(delta, stateDir, batchId, compact = false)
+      } finally exNew.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }
 
 /** Streaming twin of the p153 eval-set dirtiness audit
@@ -513,26 +475,21 @@ object EvalDirtinessStream {
     // run many triggers persist benchGramFrame themselves (the
     // IdfEmbedStream frozen-frame convention)
     val vocab = benchGramFrame.select("g").distinct()
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-          .getOrElse(emptyHits(spark))
-        val batchHits = TextCuration.docGrams(batch, idCol, textCol, k)
-          .select(explode(col("g")).as("g"))
-          .join(broadcast(vocab), Seq("g"), "left_semi")
-          .distinct()
-        val novel = batchHits.join(seen, Seq("g"), "left_anti")
-        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-          VersionedState.write(seen.union(novel), stateDir, batchId, compact = true)
-        else
-          VersionedState.write(novel, stateDir, batchId, compact = false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+        .getOrElse(emptyHits(spark))
+      val batchHits = TextCuration.docGrams(batch, idCol, textCol, k)
+        .select(explode(col("g")).as("g"))
+        .join(broadcast(vocab), Seq("g"), "left_semi")
+        .distinct()
+      val novel = batchHits.join(seen, Seq("g"), "left_anti")
+      if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+        VersionedState.write(seen.union(novel), stateDir, batchId, compact = true)
+      else
+        VersionedState.write(novel, stateDir, batchId, compact = false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
   }
 
   /** The dirtiness report over the drained hit-set state — the batch
@@ -579,51 +536,45 @@ object WinnowingStream {
              minShared: Int = 2,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // persisted: the pair join consumes both sides and the state
-        // write re-reads the batch postings
-        val fpNew = TextDedup.winnowingFingerprints(batch, idCol, textCol, k, w)
-          .persist()
-        try {
-          val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema))
-          val allF = seen.withColumn("is_new", lit(false))
-            .unionByName(fpNew.withColumn("is_new", lit(true)))
-          val dfs = allF.groupBy("fp").agg(count(lit(1)).as("df"))
-          // precondition audit: a fingerprint crossing the cap NOW that
-          // already sat in earlier state may have inflated pairs emitted
-          // BEFORE the cap bit — batch winnowingPairs would exclude it
-          // everywhere. Surface the violation (an underscore dir, so
-          // readers of the pair output never see it) instead of letting
-          // the stream diverge from batch silently.
-          dfs.filter(col("df") > maxFpDf.value)
-            .join(seen.select("fp").distinct(), Seq("fp"), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$outDir/_cap_crossings/batch=$batchId")
-          val ex = allF.join(
-            dfs.filter(col("df") <= maxFpDf.value).select("fp"),
-            Seq("fp"))
-          ex.as("x").join(ex.as("y"),
-              col("x.fp") === col("y.fp") && col("x.id") < col("y.id") &&
-                (col("x.is_new") || col("y.is_new")))
-            .groupBy(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
-            .agg(count(lit(1)).as("n_shared"))
-            .filter(col("n_shared") >= minShared)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-            VersionedState.write(seen.unionByName(fpNew.select("id", "fp")),
-              stateDir, batchId, compact = true)
-          else
-            VersionedState.write(fpNew.select("id", "fp"), stateDir, batchId,
-              compact = false)
-        } finally fpNew.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // persisted: the pair join consumes both sides and the state
+      // write re-reads the batch postings
+      val fpNew = TextDedup.winnowingFingerprints(batch, idCol, textCol, k, w)
+        .persist()
+      try {
+        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema))
+        val allF = seen.withColumn("is_new", lit(false))
+          .unionByName(fpNew.withColumn("is_new", lit(true)))
+        val dfs = allF.groupBy("fp").agg(count(lit(1)).as("df"))
+        // precondition audit: a fingerprint crossing the cap NOW that
+        // already sat in earlier state may have inflated pairs emitted
+        // BEFORE the cap bit — batch winnowingPairs would exclude it
+        // everywhere. Surface the violation (an underscore dir, so
+        // readers of the pair output never see it) instead of letting
+        // the stream diverge from batch silently.
+        val crossings = dfs.filter(col("df") > maxFpDf.value)
+          .join(seen.select("fp").distinct(), Seq("fp"), "left_semi")
+        writeBatch(crossings, s"$outDir/_cap_crossings", batchId)
+        val ex = allF.join(
+          dfs.filter(col("df") <= maxFpDf.value).select("fp"),
+          Seq("fp"))
+        val pairs = ex.as("x").join(ex.as("y"),
+            col("x.fp") === col("y.fp") && col("x.id") < col("y.id") &&
+              (col("x.is_new") || col("y.is_new")))
+          .groupBy(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
+          .agg(count(lit(1)).as("n_shared"))
+          .filter(col("n_shared") >= minShared)
+        writeBatch(pairs, outDir, batchId)
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+          VersionedState.write(seen.unionByName(fpNew.select("id", "fp")),
+            stateDir, batchId, compact = true)
+        else
+          VersionedState.write(fpNew.select("id", "fp"), stateDir, batchId,
+            compact = false)
+      } finally fpNew.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }

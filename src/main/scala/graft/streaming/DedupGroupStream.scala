@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.text.TextDedup
+import StreamingConf.eachBatch
 
 /** Streaming twin of [[graft.text.TextDedup.duplicateGroups]]: incremental
   * connected components over a STREAM of near-dup pairs (the output shape
@@ -120,38 +121,33 @@ object DedupGroupStream {
              stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(pairStream)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // null ids carry no linkage — same up-front filter as the batch
-        // operator, so contraction joins and CC agree with it
-        val fresh = batch.select(
-            col(aCol).cast("long").as("doc_a"), col(bCol).cast("long").as("doc_b"))
-          .filter(col("doc_a").isNotNull && col("doc_b").isNotNull)
-          .persist()
-        try {
-          val prevOpt = VersionedState.readKeyed(spark, stateDir, "doc_id", Some(batchId))
-          val delta = prevOpt match {
-            case None => TextDedup.duplicateGroups(fresh, "doc_a", "doc_b")
-            case Some(prev) => incrementalDelta(fresh, prev)
+    eachBatch(pairStream, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // null ids carry no linkage — same up-front filter as the batch
+      // operator, so contraction joins and CC agree with it
+      val fresh = batch.select(
+          col(aCol).cast("long").as("doc_a"), col(bCol).cast("long").as("doc_b"))
+        .filter(col("doc_a").isNotNull && col("doc_b").isNotNull)
+        .persist()
+      try {
+        val prevOpt = VersionedState.readKeyed(spark, stateDir, "doc_id", Some(batchId))
+        val delta = prevOpt match {
+          case None => TextDedup.duplicateGroups(fresh, "doc_a", "doc_b")
+          case Some(prev) => incrementalDelta(fresh, prev)
+        }
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery)) {
+          // fold the delta over the prior state — an anti-join on the
+          // delta's (batch-bounded, broadcast) key set, NOT a CC re-run
+          val full = prevOpt match {
+            case None => delta
+            case Some(prev) => prev
+              .join(broadcast(delta.select("doc_id")), Seq("doc_id"), "left_anti")
+              .unionByName(delta)
           }
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery)) {
-            // fold the delta over the prior state — an anti-join on the
-            // delta's (batch-bounded, broadcast) key set, NOT a CC re-run
-            val full = prevOpt match {
-              case None => delta
-              case Some(prev) => prev
-                .join(broadcast(delta.select("doc_id")), Seq("doc_id"), "left_anti")
-                .unionByName(delta)
-            }
-            VersionedState.write(full, stateDir, batchId, compact = true)
-          } else
-            VersionedState.write(delta, stateDir, batchId, compact = false)
-        } finally fresh.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+          VersionedState.write(full, stateDir, batchId, compact = true)
+        } else
+          VersionedState.write(delta, stateDir, batchId, compact = false)
+      } finally fresh.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import StreamingConf.{eachBatch, writeBatch}
 
 /** Streaming twin of the p104 DSIR scorer
   * ([[graft.text.ImportanceSampler.dsirScore]]): score a document STREAM
@@ -22,15 +23,10 @@ object DsirScoreStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              model: DataFrame, outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.ImportanceSampler.dsirScore(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.ImportanceSampler.dsirScore(batch, idCol, textCol, model),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p103 SemDeDup prune
@@ -67,49 +63,43 @@ object SemDedupStream {
              minSim: Double = 0.8,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(vecs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // row-local cell assignment against the frozen quantizer —
-        // persisted because the pair join, the keep anti-join, and the
-        // state write all consume it
-        val assignedNew = graft.ann.Similarity
-          .assignCells(batch, idCol, vecCol, cents)
-          .persist()
-        try {
-          // a replayed batch reads its PREDECESSOR's state, never its own
-          // failed attempt's delta (the SpanDedupStream rule)
-          val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema))
-          val all = seen.unionByName(assignedNew)
-          // candidate pairs carry ids only; vectors rejoin by id
-          val newCells = assignedNew.select(col("vec_id"), col("cell"))
-          val pairs = all.select(col("vec_id").as("va"), col("cell"))
-            .join(newCells.select(col("vec_id").as("vb"), col("cell")), Seq("cell"))
-            .filter(col("va") < col("vb"))
-            .select("va", "vb")
-          val v = all.select(col("vec_id").as("vid"), col("e"))
-          val dups = pairs
-            .join(v.select(col("vid").as("va"), col("e").as("ea")), Seq("va"))
-            .join(v.select(col("vid").as("vb"), col("e").as("eb")), Seq("vb"))
-            .filter(AnnPrims.cosine(col("ea"), col("eb")) >= minSim)
-            .select(col("vb").as("vec_id"))
-          newCells.join(dups, Seq("vec_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          val delta = assignedNew.select("vec_id", "cell", "e")
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-            VersionedState.write(seen.unionByName(delta), stateDir, batchId,
-              compact = true)
-          else
-            VersionedState.write(delta, stateDir, batchId, compact = false)
-        } finally assignedNew.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // row-local cell assignment against the frozen quantizer —
+      // persisted because the pair join, the keep anti-join, and the
+      // state write all consume it
+      val assignedNew = graft.ann.Similarity
+        .assignCells(batch, idCol, vecCol, cents)
+        .persist()
+      try {
+        // a replayed batch reads its PREDECESSOR's state, never its own
+        // failed attempt's delta (the SpanDedupStream rule)
+        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema))
+        val all = seen.unionByName(assignedNew)
+        // candidate pairs carry ids only; vectors rejoin by id
+        val newCells = assignedNew.select(col("vec_id"), col("cell"))
+        val pairs = all.select(col("vec_id").as("va"), col("cell"))
+          .join(newCells.select(col("vec_id").as("vb"), col("cell")), Seq("cell"))
+          .filter(col("va") < col("vb"))
+          .select("va", "vb")
+        val v = all.select(col("vec_id").as("vid"), col("e"))
+        val dups = pairs
+          .join(v.select(col("vid").as("va"), col("e").as("ea")), Seq("va"))
+          .join(v.select(col("vid").as("vb"), col("e").as("eb")), Seq("vb"))
+          .filter(AnnPrims.cosine(col("ea"), col("eb")) >= minSim)
+          .select(col("vb").as("vec_id"))
+        writeBatch(newCells.join(dups, Seq("vec_id"), "left_anti"), outDir, batchId)
+        val delta = assignedNew.select("vec_id", "cell", "e")
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+          VersionedState.write(seen.unionByName(delta), stateDir, batchId,
+            compact = true)
+        else
+          VersionedState.write(delta, stateDir, batchId, compact = false)
+      } finally assignedNew.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }
 
 /** Streaming twin of the p99/p107 quality scorer's SCORE half
@@ -126,15 +116,10 @@ object QualityScoreStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              model: DataFrame, outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.QualityScorer.qualityScore(batch, idCol, textCol, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.QualityScorer.qualityScore(batch, idCol, textCol, model),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p112 language-id scorer's SCORE half
@@ -150,15 +135,10 @@ object LangIdStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              voted: DataFrame, outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.LangClassifier.langScore(batch, idCol, textCol, voted)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.LangClassifier.langScore(batch, idCol, textCol, voted),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p114 BPE tokenizer's APPLY half
@@ -175,15 +155,10 @@ object BpeTokenizeStream {
              merges: Seq[graft.text.BpeTokenizer.Merge],
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.BpeTokenizer.tokenize(batch, idCol, textCol, merges)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.BpeTokenizer.tokenize(batch, idCol, textCol, merges),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p131 Gopher repetition signals
@@ -197,15 +172,10 @@ object RepetitionSignalsStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.TextStats.repetitionSignals(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextStats.repetitionSignals(batch, idCol, textCol),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p133 Gopher quality rules
@@ -217,15 +187,10 @@ object GopherQualityStream {
   def attach(docs: DataFrame, idCol: String, textCol: String,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.TextStats.gopherQualityRules(batch, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextStats.gopherQualityRules(batch, idCol, textCol),
+        outDir, batchId)
+    }
 }
 
 /** Streaming INGEST into the p128 cell-partitioned ANN store: encode a
@@ -248,17 +213,12 @@ object IndexIngestStream {
              cb: graft.ann.ProductQuantizer.Codebooks,
              indexPath: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(vecs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ann.ProductQuantizer
-          .residualCodesIndex(batch, idCol, vecCol, cents, cb)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexPath/batch=$batchId")
-      }
-      .start()
+    eachBatch(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ann.ProductQuantizer
+        .residualCodesIndex(batch, idCol, vecCol, cents, cb)
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$indexPath/batch=$batchId")
+    }
 }
 
 /** Streaming twin of the p125 two-level assignment
@@ -275,17 +235,11 @@ object TwoLevelAssignStream {
              cells: Array[(Long, Long, Array[Float])], wSuper: Int,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(vecs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col(idCol).cast("long").as("vec_id"),
-            graft.ann.Similarity.cellOfTwoLevel(
-              col(vecCol), supers, cells, wSuper).as("cell"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      val assigned = batch.select(col(idCol).cast("long").as("vec_id"),
+        graft.ann.Similarity.cellOfTwoLevel(col(vecCol), supers, cells, wSuper).as("cell"))
+      writeBatch(assigned, outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p126 idf-weighted hashed embedding's SCORE half
@@ -302,16 +256,10 @@ object IdfEmbedStream {
              vocab: DataFrame, nDocs: Long,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.TextStats
-          .hashedEmbeddingIdfWith(batch, idCol, textCol, vocab, nDocs)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextStats
+        .hashedEmbeddingIdfWith(batch, idCol, textCol, vocab, nDocs), outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p108 Bloom probe's PROBE half
@@ -332,16 +280,11 @@ object BloomProbeStream {
              seenPos: DataFrame, seenFp: DataFrame, mBits: Long,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.TextCuration
-          .bloomProbeAgainst(batch, idCol, textCol, seenPos, seenFp, mBits)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextCuration
+        .bloomProbeAgainst(batch, idCol, textCol, seenPos, seenFp, mBits),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p147 D4 prototypicality prune
@@ -370,32 +313,27 @@ object PrototypicalityStream {
              dropPct: Int = 25,
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
-    StreamingConf.writeStream(vecs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val scoredNew = graft.ann.Similarity
-          .protoScore(batch, idCol, vecCol, cents)
-          .persist()
-        try {
-          // a replayed batch reads its PREDECESSOR's state, never its own
-          // failed attempt's delta (the SpanDedupStream rule)
-          val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema))
-          val all = seen.unionByName(scoredNew)
-          graft.ann.Similarity.prototypicalityVerdict(all, dropPct)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-            VersionedState.write(all, stateDir, batchId, compact = true)
-          else
-            VersionedState.write(scoredNew, stateDir, batchId, compact = false)
-        } finally scoredNew.unpersist(false)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val scoredNew = graft.ann.Similarity
+        .protoScore(batch, idCol, vecCol, cents)
+        .persist()
+      try {
+        // a replayed batch reads its PREDECESSOR's state, never its own
+        // failed attempt's delta (the SpanDedupStream rule)
+        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema))
+        val all = seen.unionByName(scoredNew)
+        writeBatch(graft.ann.Similarity.prototypicalityVerdict(all, dropPct),
+          outDir, batchId)
+        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
+          VersionedState.write(all, stateDir, batchId, compact = true)
+        else
+          VersionedState.write(scoredNew, stateDir, batchId, compact = false)
+      } finally scoredNew.unpersist(false)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 }
 
 /** Streaming twin of the p159 quantizer inertia audit
@@ -423,24 +361,19 @@ object InertiaStream {
              cents: Array[(Long, Array[Float])],
              stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(vecs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-          .getOrElse(emptyState(spark))
-        val merged = seen
-          .unionByName(graft.ann.Similarity
-            .inertiaPartials(batch, idCol, vecCol, cents))
-          .groupBy("cell")
-          .agg(sum(col("n_vecs")).as("n_vecs"),
-            sum(col("sse_q20")).as("sse_q20"))
-        VersionedState.write(merged, stateDir, batchId, compact = true)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+        .getOrElse(emptyState(spark))
+      val merged = seen
+        .unionByName(graft.ann.Similarity
+          .inertiaPartials(batch, idCol, vecCol, cents))
+        .groupBy("cell")
+        .agg(sum(col("n_vecs")).as("n_vecs"),
+          sum(col("sse_q20")).as("sse_q20"))
+      VersionedState.write(merged, stateDir, batchId, compact = true)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 
   /** The inertia report over the drained per-cell partials — the batch
     * operator's report half verbatim. */
@@ -476,23 +409,18 @@ object KeyMassStream {
   def attach(docs: DataFrame, keyCol: String, textCol: String,
              stateDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-          .getOrElse(emptyState(spark))
-        val merged = seen
-          .unionByName(TextCuration.keyMassPartials(batch, keyCol, textCol))
-          .groupBy("key")
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"))
-        VersionedState.write(merged, stateDir, batchId, compact = true)
-        VersionedState.prune(spark, stateDir, batchId)
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
+        .getOrElse(emptyState(spark))
+      val merged = seen
+        .unionByName(TextCuration.keyMassPartials(batch, keyCol, textCol))
+        .groupBy("key")
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_tokens")).as("n_tokens"))
+      VersionedState.write(merged, stateDir, batchId, compact = true)
+      VersionedState.prune(spark, stateDir, batchId)
+    }
 
   def weightsReport(spark: org.apache.spark.sql.SparkSession,
                     stateDir: String): DataFrame =
@@ -522,16 +450,11 @@ object LangGateStream {
              langCol: String, thresholds: DataFrame,
              outDir: String, checkpointDir: String,
              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    StreamingConf.writeStream(docs)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.TextStats
-          .langQualityGateWith(batch, idCol, textCol, langCol, thresholds)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.text.TextStats
+        .langQualityGateWith(batch, idCol, textCol, langCol, thresholds),
+        outDir, batchId)
+    }
 }
 
 /** Streaming twin of the p161 retrieval stack (MMR over IVFADC+R):
@@ -559,20 +482,15 @@ object MmrSearchStream {
     // truncated, so no micro-batch re-derives the corpus encode
     val index = graft.ann.ProductQuantizer
       .residualCodesIndex(emb, idCol, vecCol, cents, cb).localCheckpoint()
-    StreamingConf.writeStream(queries)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qs = batch.select(col("query_id").cast("long").as("query_id"),
-          col("qe"))
-        val searched = graft.ann.ProductQuantizer.rerankExact(
-          graft.ann.ProductQuantizer.searchResidualIndexLut(
-            index, qs, cents, cb, kShort, nProbe),
-          emb, idCol, vecCol, qs, k = graft.ann.Similarity.MmrKCand)
-        graft.ann.Similarity.mmrOverSearch(searched, emb, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    eachBatch(queries, checkpointDir, trigger) { (batch, batchId) =>
+      val qs = batch.select(col("query_id").cast("long").as("query_id"),
+        col("qe"))
+      val searched = graft.ann.ProductQuantizer.rerankExact(
+        graft.ann.ProductQuantizer.searchResidualIndexLut(
+          index, qs, cents, cb, kShort, nProbe),
+        emb, idCol, vecCol, qs, k = graft.ann.Similarity.MmrKCand)
+      writeBatch(graft.ann.Similarity.mmrOverSearch(searched, emb, idCol, vecCol),
+        outDir, batchId)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Session configuration for the engine's streams.
   *
@@ -12,8 +12,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * block cache, and changelog checkpointing ships per-batch deltas instead
   * of full snapshots, so state size is bounded by disk, not heap. Callers
   * opt in per session (the streaming job entry points in
-  * [[graft.jobs.Jobs]] do it by default); Spark reads the provider at
-  * query start, and existing checkpoints keep their original provider.
+  * [[graft.jobs.Jobs]] always do); Spark reads the provider at query
+  * start, and existing checkpoints keep their original provider.
   *
   * Checkpoint I/O: every engine function that starts a stream goes through
   * [[writeStream]], which installs [[LocalCheckpointFileManager]] for the
@@ -61,4 +61,28 @@ object StreamingConf {
     useLocalCheckpoints(df.sparkSession)
     df.writeStream
   }
+
+  /** Start `df` as a stream whose sink is `f(batch, batchId)`, run once per
+    * micro-batch: the one way the engine starts a `foreachBatch` stream.
+    * The sink path is at-least-once (a batch that fails between its sink
+    * writes and the checkpoint commit is replayed under the same id), so
+    * every `f` must be idempotent per batch id: [[writeBatch]] overwrites
+    * the batch's own partition, keyed sinks upsert, and [[VersionedState]]
+    * reads only the versions below the batch. */
+  def eachBatch(df: DataFrame, checkpoint: String, trigger: Trigger,
+                outputMode: String = "append")
+               (f: (DataFrame, Long) => Unit): StreamingQuery =
+    writeStream(df)
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(f)
+      .start()
+
+  /** Overwrite `dir/batch=<batchId>` with `df` as parquet: the per-batch
+    * output of the streaming twins. A replayed batch rewrites its own
+    * partition instead of appending duplicates; readers discover `batch`
+    * as a partition column and drop it. */
+  def writeBatch(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
 }

@@ -643,7 +643,8 @@ object TextDedup {
     * label to another same-component node id, and a round with zero
     * changes proves label(a) ≤ label(b) across every edge in both
     * directions — the exact component-min fixpoint, identical to the old
-    * full-map form and to the union-find path (EquivalencePropertySpec).
+    * full-map form and to the union-find path (the random-graph test in
+    * TextDedupSpec pins the two paths equal, in both frontier modes).
     * The changed-map jump heals a stale label one round after the race
     * that copied it (see the round comment), so convergence stays
     * jump-accelerated — measured on the sf0.1 simhash pair graph
@@ -660,19 +661,21 @@ object TextDedup {
     * 222 GB spill at 500M edges); the frontier loop's rounds ≥ 1 shuffle
     * the frontier, the matched edges' aggregate, and the candidate merge
     * — all frontier-sized — and once the frontier fits a broadcast
-    * ([[frontierBroadcastRows]]) the full label frame stops moving at
-    * all: its hash(id) partitioning and in-partition ordering flow from
-    * checkpoint to checkpoint, so the merge join re-exchanges and
-    * re-sorts nothing. Each label frame is lazily `localCheckpoint`ed
-    * (the convergence probe materializes it), which truncates lineage,
-    * so round r plans over flat inputs instead of re-planning all r
-    * prior rounds — without the truncation the loop is O(rounds²) in
-    * executed stages. Convergence is the probe's changed-label count
-    * (0 = fixpoint), which also feeds the next round's
-    * broadcast-vs-shuffle choice. The symmetric edge list is checkpointed
-    * pre-partitioned by the join key so it never re-shuffles, and the
-    * caller's raw edge cache + round-0 shuffle are released as soon as it
-    * is materialized (the r16 1B-rung live-set fix). Local checkpoints
+    * ([[FrontierBroadcastRows]]) both frontier joins run broadcast-hash.
+    * Under AQE (Spark's default) a `localCheckpoint` keeps neither the
+    * partitioning nor the ordering of the plan it truncates, so every
+    * round still shuffles the full label frame by id for the merge, and
+    * every shuffle-mode round re-shuffles and re-sorts the symmetric edge
+    * list (visible in the per-round executed plans). Each label frame is
+    * lazily `localCheckpoint`ed (the convergence probe materializes it),
+    * which truncates lineage, so round r plans over flat inputs instead
+    * of re-planning all r prior rounds — without the truncation the loop
+    * is O(rounds²) in executed stages. Convergence is the probe's
+    * changed-label count (0 = fixpoint), which also feeds the next
+    * round's broadcast-vs-shuffle choice. The symmetric edge list is
+    * checkpointed once, and the caller's raw edge cache + round-0
+    * shuffle are released as soon as it is materialized (the r16 1B-rung
+    * live-set fix). Local checkpoints
     * trade executor-loss recomputability for bounded lineage — the
     * standard iterative-graph trade, same as GraphX's periodic
     * checkpointing (swap for reliable `checkpoint()` on preemptible
@@ -713,14 +716,14 @@ object TextDedup {
       // pure overhead, at ANY cluster size.
       val edgeCount = e.count()
       if (edgeCount <= localEdgeThreshold) localUnionFind(e)
-      else iterativeGroups(e, maxIters, edgeCount)
+      else iterativeGroups(e, maxIters)
     } finally { e.unpersist(false) }
   }
 
   /** Single-task exact union-find with path compression; union links the
     * larger root under the smaller, so each component's terminal root is
     * its minimum member — the same labeling the iterative path converges
-    * to (EquivalencePropertySpec pins them equal on random graphs). The
+    * to (TextDedupSpec's random-graph test pins them equal). The
     * result is eagerly checkpointed so the caller's plan reads the
     * computed blocks, not the mining lineage. */
   private def localUnionFind(e: DataFrame): DataFrame = {
@@ -758,71 +761,33 @@ object TextDedup {
     flat.orderBy("doc_id")
   }
 
+  /** Frontier rows at or below this broadcast in the frontier rounds:
+    * 2M (long, long) rows is a ~64 MB broadcast relation — comfortably
+    * inside the driver/executor budget at any deployment size, far under
+    * the 8 GB broadcast cap. */
+  private[text] val FrontierBroadcastRows: Long = 2000000L
+
   /** The distributed path: iterative min-label propagation with pointer
-    * jumping over the (already persisted) edge list.
+    * jumping over the (already persisted) edge list, at the session's
+    * `spark.sql.shuffle.partitions`. `frontierBroadcastRows` is a test
+    * seam (0 forces every frontier round into shuffle mode).
     *
-    * Partitioning stays at the session's `spark.sql.shuffle.partitions`.
-    * The obvious "fix" for the 500M-edge rung's spill (222 GB disk spill
-    * from 47M-row tasks at the 32-partition session constant) — deriving
-    * the loop's partition count from the measured edge count
-    * ([[graft.ops.Adaptive.loopShufflePartitions]], ~4M sym rows per
-    * partition) — was implemented and MEASURED WORSE on the r16 rung:
-    * rounds 0/1 slowed 559/540 s vs 180/632 s and the run died of disk
-    * exhaustion mid-loop (bench_records/r16_cc.md). Plausible mechanism:
-    * at >200 reduce partitions the loop's combine-free exchanges
-    * (repartition, label-side join shuffles) leave the bypass-merge
-    * shuffle writer (`spark.shuffle.sort.bypassMergeThreshold`) for the
-    * sort-based writer, which buffers, spills and merge-rewrites every
-    * shuffle byte — doubling write volume on a single-disk box. The
-    * derivation is kept behind `-Dgraft.cc.parts=adaptive` (the CcBench
-    * experiment-knob convention, like graft.cc.sym/join/ckpt) for
-    * re-measurement on multi-disk clusters where the trade may flip;
-    * production default = the measured-good session constant. The knob
-    * scopes the conf for the loop and restores it on exit; results are
-    * partitioning-independent (min-label fixpoint; callers order).
-    *
-    * Two scope caveats the knob's user must know (it is an EXPERIMENT
-    * knob, not a production default, precisely because of these):
-    * the session-conf mutation assumes ONE query at a time on the
-    * SparkSession — a concurrent query planned during the loop silently
-    * inherits the scoped count, and two concurrent duplicateGroups calls
-    * can clobber each other's saved value (run the loop in
-    * `spark.newSession()` if that ever matters); and the returned frame's
-    * final `orderBy(doc_id)` plans lazily at the CALLER's action, after
-    * the finally has restored the constant — the loop's joins/aggregates
-    * run scoped, the final ~|V|-row range sort deliberately does not
-    * (it is outside the loop the knob exists to measure).
-    *
-    * `rowsPerPartition` is the derivation's density target, threaded as a
-    * parameter so tests can force a scoped value different from the
-    * session constant on a small graph and assert the restore actually
-    * happens (TextDedupSpec). */
-  private[graft] def iterativeGroups(e: DataFrame, maxIters: Int,
-                                     edgeCount: Long,
-                                     rowsPerPartition: Long = 4000000L): DataFrame = {
-    if (!sys.props.get("graft.cc.parts").contains("adaptive"))
-      iterativeGroupsBody(e, maxIters)
-    else {
-      val spark = e.sparkSession
-      val partKey = "spark.sql.shuffle.partitions"
-      val sessionParts = spark.conf.get(partKey).toInt
-      // sym rows = 2·|E| (the loop's biggest table; self-loops are gone)
-      val nPart = graft.ops.Adaptive.loopShufflePartitions(
-        2L * edgeCount, sessionParts, rowsPerPartition)
-      spark.conf.set(partKey, nPart)
-      try iterativeGroupsBody(e, maxIters)
-      finally spark.conf.set(partKey, sessionParts)
-    }
-  }
-
-  /** Frontier rows at or below this broadcast in the frontier rounds
-    * (`-Dgraft.cc.bcast=<rows>` overrides): 2M (long, long) rows is a
-    * ~64 MB broadcast relation — comfortably inside the driver/executor
-    * budget at any deployment size, far under the 8 GB broadcast cap. */
-  private def frontierBroadcastRows: Long =
-    sys.props.get("graft.cc.bcast").map(_.toLong).getOrElse(2000000L)
-
-  private def iterativeGroupsBody(e: DataFrame, maxIters: Int): DataFrame = {
+    * Closed A/Bs, whose losing arms were deleted (recoverable at
+    * `390d7f1`):
+    *  - An edge-derived loop partition count (~4M sym rows per partition)
+    *    measured worse at 500M edges: rounds 0/1 took 559/540 s against
+    *    180/632 s and the run ran out of disk (bench_records/r16_cc.md).
+    *  - Deserialized label checkpoints matched serialized ones on wall
+    *    time at 30M edges with about 3× the GC time
+    *    (bench_records/r11_scaling.md).
+    *  - An unsorted `sym` paid a 2·|E|-row sort in every shuffle-mode
+    *    round; sorting it once won all three paired 30M-edge reps, min of
+    *    three by 16% (bench_records/r14_cc_sym.md).
+    *  - A SHUFFLE_HASH hint on the frontier side did not beat the sorted
+    *    merge join's min of three at 30M edges (bench_records/r14_cc_sym.md). */
+  private[text] def iterativeGroups(e: DataFrame, maxIters: Int,
+                                    frontierBroadcastRows: Long = FrontierBroadcastRows)
+      : DataFrame = {
     val undirected = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     // Round-0 labels straight from the undirected edges: lab1 =
     // min(own id, min in-neighbor) = least(src, min(dst)). Persisted for
@@ -833,15 +798,10 @@ object TextDedup {
     val lab0 = undirected.groupBy(col("src").as("id")).agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("lab1"))
       .persist()
-    // checkpoint storage is an experiment knob for CcBench only
-    // (-Dgraft.cc.ckpt=heap reverts to deserialized MEMORY_AND_DISK):
     // each round's label table is #nodes UnsafeRow objects; serialized
     // storage packs them into per-partition byte arrays, shrinking the
     // old-gen object census the 30M-edge rung's GC band was traced to.
-    val ckptLevel =
-      if (sys.props.get("graft.cc.ckpt").contains("heap"))
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val ckptLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     // symmetric closure (2·|E| rows — the per-node self-loops are gone:
     // the merge step below folds each node's own label in directly),
     // partitioned by dst — the key of EVERY round's edge⋈frontier join —
@@ -851,8 +811,9 @@ object TextDedup {
     // rounds merge-join against it, and an UNSORTED cached sym pays a
     // fresh 2·|E|-row SortExec on the edge side in EVERY such round —
     // the dominant per-round cost the r13 100M rung surfaced (measured on
-    // the 30M rung — r14_cc_sym.md; -Dgraft.cc.sym=unsorted reverts for
-    // the experiment's baseline arm). A lazy LOCAL CHECKPOINT rather than
+    // the 30M rung, on a persisted sym — r14_cc_sym.md; the checkpoint
+    // below keeps neither property under AQE, see the scaladoc of
+    // duplicateGroups). A lazy LOCAL CHECKPOINT rather than
     // a persist: it materializes at its first consumer (round 1's
     // candidate join) exactly like the persist did, but truncates lineage,
     // so the repartition's shuffle files and the caller's edge cache stop
@@ -861,11 +822,8 @@ object TextDedup {
     // sym simultaneously (bench_records/r16_cc.md); after round 1 the
     // loop now frees the first two eagerly (the executor-loss trade is
     // the loop's documented localCheckpoint trade, unchanged).
-    val symBase = undirected.repartition(col("dst"))
-    val symSorted =
-      if (sys.props.get("graft.cc.sym").contains("unsorted")) symBase
-      else symBase.sortWithinPartitions("dst")
-    val sym = symSorted.localCheckpoint(false, ckptLevel)
+    val sym = undirected.repartition(col("dst")).sortWithinPartitions("dst")
+      .localCheckpoint(false, ckptLevel)
     try {
       var labels: DataFrame = null
       var frontierRows = 0L
@@ -896,19 +854,11 @@ object TextDedup {
             val fr = labels.filter(col("chg"))
             val small = frontierRows <= frontierBroadcastRows
             // when the frontier fits a broadcast, BOTH frontier joins run
-            // broadcast-hash: the round then shuffles only the candidate
-            // aggregate's matched edges, and the label frame's hash(id)
-            // partitioning + ordering flow through the whole round, so
-            // the merge join below never re-exchanges or re-sorts the
-            // full label side.
+            // broadcast-hash, so neither the edge list nor the label frame
+            // shuffles for them.
             def maybeBcast(df: DataFrame): DataFrame =
               if (small) broadcast(df) else df
-            // experiment knob (-Dgraft.cc.join=shj): in shuffle mode,
-            // build a per-partition hash table on the frontier side
-            // instead of merge-joining against the sorted sym
-            val fd0 = fr.select(col("id").as("dst"), col("label").as("dl"))
-            val fd = if (!small && sys.props.get("graft.cc.join").contains("shj"))
-              fd0.hint("SHUFFLE_HASH") else fd0
+            val fd = fr.select(col("id").as("dst"), col("label").as("dl"))
             // candidate updates: min changed-neighbor label per vertex
             // adjacent to the frontier — the only edge work this round
             val cand = sym.join(maybeBcast(fd), Seq("dst"))
@@ -924,8 +874,8 @@ object TextDedup {
             // lowers a label to another same-component node id, and a
             // round with zero changes proves label(a) ≤ label(b) across
             // every edge in both directions — the exact component-min
-            // fixpoint, same as the full-map form (EquivalencePropertySpec
-            // pins it against the union-find path).
+            // fixpoint, same as the full-map form (TextDedupSpec's
+            // random-graph test pins it against the union-find path).
             val jmpM = maybeBcast(
               fr.select(col("id").as("id2"), col("label").as("jmp")))
             labels.select(col("id"), col("label"))

@@ -35,23 +35,6 @@ class AdaptiveFormulaSpec extends AnyFlatSpec with Matchers {
     Adaptive.resolveRanges(Adaptive.Auto, 10L) shouldBe 32
   }
 
-  "Adaptive.loopShufflePartitions" should "hold the session floor at bench scale and grow with rows" in {
-    // bench scale (sf0.1 pair graphs are « 4M rows): the current session
-    // setting wins, so every bench-scale plan stays bit-identical
-    Adaptive.loopShufflePartitions(0L, current = 32) shouldBe 32
-    Adaptive.loopShufflePartitions(1000000L, current = 32) shouldBe 32
-    Adaptive.loopShufflePartitions(1000000L, current = 8) shouldBe 8
-    // past the floor: ceil(rows / 4M) — the 500M-edge rung (sym = 1.5B
-    // rows) gets 375 partitions instead of the constant 32
-    Adaptive.loopShufflePartitions(1500000000L, current = 32) shouldBe 375
-    // capped (shuffle block count is cap², guide §2.2) — unless the
-    // session itself is set higher, which always wins
-    Adaptive.loopShufflePartitions(100000000000L, current = 32) shouldBe 4096
-    Adaptive.loopShufflePartitions(100L, current = 8192) shouldBe 8192
-    an[IllegalArgumentException] should be thrownBy
-      Adaptive.loopShufflePartitions(10L, current = 0)
-  }
-
   "Adaptive.ivfCells" should "follow the sqrt rule between floor and cap" in {
     Adaptive.ivfCells(0L) shouldBe 8
     Adaptive.ivfCells(100L) shouldBe 10

@@ -165,40 +165,82 @@ class TextDedupSpec extends SparkSpec {
         (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)
       }.filter { case (a, b) => a != b }
       val pairs = edges.toDF("doc_a", "doc_b")
-      val local = TextDedup.duplicateGroups(pairs, "doc_a", "doc_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val iter = TextDedup.duplicateGroups(pairs, "doc_a", "doc_b",
-          localEdgeThreshold = Iterative)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      withClue(s"trial $trial (${edges.length} edges): ") { local shouldBe iter }
+      def groups(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = groups(TextDedup.duplicateGroups(pairs, "doc_a", "doc_b"))
+      val iter = groups(TextDedup.duplicateGroups(pairs, "doc_a", "doc_b",
+        localEdgeThreshold = Iterative))
+      // broadcast threshold 0: every frontier round runs in shuffle mode,
+      // the mode that runs of 100M+ edges take
+      val shuffled = groups(TextDedup.iterativeGroups(
+        pairs.toDF("src", "dst"), maxIters = 25, frontierBroadcastRows = 0L))
+      withClue(s"trial $trial (${edges.length} edges): ") {
+        local shouldBe iter
+        local shouldBe shuffled
+      }
     }
   }
 
-  it should "restore the session shuffle-partition setting after the iterative loop" in {
-    // under -Dgraft.cc.parts=adaptive the loop scopes
-    // spark.sql.shuffle.partitions to the edge-derived count
-    // (Adaptive.loopShufflePartitions) — a leak of that scoped value
-    // would silently re-partition every LATER query in the session
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    val pairs = (1L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val e = pairs.selectExpr("doc_a as src", "doc_b as dst")
-    System.setProperty("graft.cc.parts", "adaptive")
+  it should "keep the shuffle-mode edge table sorted by dst and stored serialized" in {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.storage.{RDDBlockId, StorageLevel}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    // the symmetric edge table is the loop's only (src, dst) checkpoint
+    def isSym(p: SparkPlan): Boolean = p.output.map(_.name) == Seq("src", "dst")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[(Int, StorageLevel)]()
+    val planListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // removals carry an invalid level
+    val blockListener = new SparkListener {
+      override def onBlockUpdated(u: SparkListenerBlockUpdated): Unit =
+        u.blockUpdatedInfo.blockId match {
+          case RDDBlockId(rdd, _) if u.blockUpdatedInfo.storageLevel.isValid =>
+            levels.add(rdd -> u.blockUpdatedInfo.storageLevel)
+          case _ => ()
+        }
+    }
+    spark.listenerManager.register(planListener)
+    spark.sparkContext.addSparkListener(blockListener)
     try {
-      // rowsPerPartition = 1 forces the derived count (2·9 = 18) above the
-      // session constant (4), so the scoped value actually DIFFERS from the
-      // restored one — at the default density target a 9-edge graph derives
-      // exactly the session floor and this test would pass even with the
-      // finally-restore deleted (the round-16 advice)
-      TextDedup.iterativeGroups(e, maxIters = 25, edgeCount = 9L,
-        rowsPerPartition = 1L).collect()
-      spark.conf.get(key) shouldBe before
-      // ...and restored even when the loop throws (non-convergence)
-      an[IllegalStateException] should be thrownBy
-        TextDedup.iterativeGroups(e, maxIters = 2, edgeCount = 9L,
-          rowsPerPartition = 1L).collect()
-      spark.conf.get(key) shouldBe before
-    } finally System.clearProperty("graft.cc.parts")
+      val chain = (1L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+      TextDedup.iterativeGroups(chain, maxIters = 25, frontierBroadcastRows = 0L)
+        .collect().map(_.getLong(1)).distinct shouldBe Array(1L)
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        val captured = plans.toArray(Array.empty[SparkPlan]).toSeq
+        // the sym checkpoint itself: sorted by the candidate join's key
+        val symPlan = captured.find(isSym)
+        symPlan should not be empty
+        nodes(symPlan.get).collect {
+          case s: SortExec => s.sortOrder.flatMap(_.references.map(_.name))
+        } should contain(Seq("dst"))
+        // ...and read by every frontier round from serialized blocks
+        val symRdds = captured.flatMap(nodes).collect {
+          case r: RDDScanExec if isSym(r) => r.rdd.id
+        }.distinct
+        symRdds should have size 1
+        val stored = levels.toArray(Array.empty[(Int, StorageLevel)]).toSeq
+          .collect { case (id, level) if id == symRdds.head => level }
+        stored should not be empty
+        all(stored.map(_.deserialized)) shouldBe false
+      }
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(blockListener)
+    }
   }
 
   it should "return a lineage-truncated plan (no join survives the loop)" in {
