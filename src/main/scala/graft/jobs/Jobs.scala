@@ -7,7 +7,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{HourlyDocs, ParkingAnalytics}
 import graft.schema.ParkingModel
 import graft.sinks.{AlertNotifier, KeyValueSink, TimeSeriesSink}
-import graft.sources.Tables
 import graft.streaming.{EventDecode, EventSource, LiveSlotView, StreamingConf, ViolationStream}
 
 /** The reference's job entry points (SURVEY.md §3) as library functions:
@@ -15,31 +14,30 @@ import graft.streaming.{EventDecode, EventSource, LiveSlotView, StreamingConf, V
   * Where the reference scheduled three Spark apps and three consumer
   * services, a user of this engine calls one function per pipeline (or
   * schedules them; the plans are identical either way).
+  *
+  * Each batch job executes one plan once: the hourly and weekly jobs
+  * through [[publish]], whose accumulator gives the returned count, the
+  * daily job through one `collect` of at most a row per day.
   */
 object Jobs {
 
   /** §3.1 hourly stats (reference srvc_stats.MainHourly.main): full-shape
     * JSON documents keyed `parking-stats:hourly:$date:$hour` (same keys →
     * reruns overwrite idempotently, like the reference's "@every 1m"
-    * schedule). Fails fast on an empty input window (P7). */
+    * schedule). Returns the number of documents put; an empty input window
+    * puts none and fails with `IllegalStateException` (P7). */
   def hourlyStats(spark: SparkSession, dir: String, sink: KeyValueSink): Long = {
-    val events = Tables.requireNonEmpty(
-      ParkingModel.parkingEvents(spark, dir), s"hourly stats over $dir")
-    // persisted so the publish and the returned count share one execution
-    // of the aggregation plan instead of recomputing it from the scan.
-    val docs = HourlyDocs.docsFrom(events).persist()
-    try {
-      HourlyDocs.publish(docs, sink)
-      docs.count()
-    } finally docs.unpersist(false)
+    val n = publish(HourlyDocs.documents(spark, dir).select("redis_key", "doc"), sink)
+    if (n == 0) throw new IllegalStateException(s"no input rows for hourly stats over $dir")
+    n
   }
 
   /** §3.1 daily job (reference MainDaily): daily entry/exit/revenue points
     * into the time-series sink under the reference's series names
-    * (`parking-events:daily:…`, MainDaily.scala:264-288). */
+    * (`parking-events:daily:…`, MainDaily.scala:264-288). Returns the
+    * number of days written. */
   def dailyRollup(spark: SparkSession, dir: String, sink: TimeSeriesSink): Long = {
-    val daily = ParkingAnalytics.dailyRollup(spark, dir)
-      .join(ParkingAnalytics.dailyRevenue(spark, dir), Seq("date_str"))
+    val daily = ParkingAnalytics.dailyTotals(spark, dir)
       .collect() // ≤ one row per day — driver-side is the correct scale here
     daily.foreach { r =>
       val epoch = java.time.LocalDate.parse(r.getAs[String]("date_str"))
@@ -53,24 +51,36 @@ object Jobs {
 
   /** §3.1 weekly job (reference MainWeekly): revenue by type and average
     * spend per (day, type) as keyed documents
-    * (`parking-stats:weekly:…`, MainWeekly.scala:271-319). */
+    * (`parking-stats:weekly:…`, MainWeekly.scala:271-319), both from one
+    * read of the paired sessions. Returns the number of documents put. */
   def weeklyStats(spark: SparkSession, dir: String, sink: KeyValueSink): Long = {
-    val revenue = ParkingAnalytics.revenueByType(spark, dir)
+    val sessions = ParkingAnalytics.sessionPairing(spark, dir)
+    val revenue = ParkingAnalytics.revenueByTypeOf(sessions)
       .select(
         concat(lit("parking-stats:weekly:revenue-by-type:"), col("vehicleType")).as("k"),
         to_json(struct(col("vehicleType"), col("n_sessions"), col("revenue"))).as("v"))
-    val avgSpent = ParkingAnalytics.avgSpentByTypeDay(spark, dir)
+    val avgSpent = ParkingAnalytics.avgSpentByTypeDayOf(sessions)
       .select(
         concat(lit("parking-stats:weekly:avgspent:"), col("vehicleType"),
           lit(":"), col("date_str")).as("k"),
         to_json(struct(col("date_str"), col("vehicleType"), col("avg_spent"))).as("v"))
-    val all = revenue.unionByName(avgSpent).persist()
-    try {
-      all.foreachPartition { (it: Iterator[Row]) =>
-        it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-      }
-      all.count()
-    } finally all.unpersist(false)
+    publish(revenue.unionByName(avgSpent), sink)
+  }
+
+  /** Put every (key, value) row of `kv`, its first two string columns,
+    * into `sink`, and return the number of rows put. The batch jobs' whole
+    * contract is this one execution of `kv`'s plan: `foreachPartition`
+    * delivers executor-side, one sink connection per partition, and counts
+    * into an accumulator in the same pass, so no second action re-runs the
+    * plan to report what it wrote. Spark merges an action's accumulator
+    * updates once per successful task, so a retried partition is counted
+    * once (its keys are put again, which a keyed sink absorbs). */
+  private[graft] def publish(kv: DataFrame, sink: KeyValueSink): Long = {
+    val puts = kv.sparkSession.sparkContext.longAccumulator("keyed sink puts")
+    kv.foreachPartition { (it: Iterator[Row]) =>
+      it.foreach { r => sink.put(r.getString(0), r.getString(1)); puts.add(1L) }
+    }
+    puts.sum
   }
 
   /** Every streaming entry point below runs on RocksDB-backed state

@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.ParkingModel
-import graft.sinks.KeyValueSink
 
 /** F9 + A3/A4 map shape (reference MainHourly.scala:158-171 `statsToJson` +
   * AggregatedStatsSpark): the complete hourly stats document —
@@ -15,56 +14,19 @@ import graft.sinks.KeyValueSink
   * One distributed plan: two partial aggregations (per-lot, per-type) that
   * shrink to (hour × lot) / (hour × type) cardinality before the map
   * assembly — where the reference collected ≥6 jobs to the driver and
-  * string-interpolated JSON by hand. Map keys are sorted before
-  * `map_from_entries`, so the rendered JSON is byte-deterministic.
+  * string-interpolated JSON by hand. The per-lot level is
+  * [[ParkingAnalytics.hourLotCounts]], shared with p01/p02. Map keys are
+  * sorted before `map_from_entries`, so the rendered JSON is
+  * byte-deterministic.
   */
 object HourlyDocs {
   import ParkingModel.RatePerHour
 
-  private val isEntry = col("eventType") === "PARKING_ENTRY"
-  private val isExit = col("eventType") === "PARKING_EXIT"
-
-  /** (redis_key, date_str, hour_str, doc) per clock hour. */
+  /** (redis_key, date_str, hour_str, doc) per clock hour, in no order: the
+    * keyed sink it is published to needs none, and a sort would add a
+    * range-partitioning job. */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    docsFrom(ParkingModel.parkingEvents(spark, dir))
-
-  /** Shared aggregation core: per-(hour, lot) entry/exit/occupancy counts
-    * and per-(hour, type) counts — the two partial aggregates both
-    * renderers (JSON document and oracle-flat) consume, so the formulas
-    * exist exactly once. */
-  private def hourLotCounts(events: DataFrame): DataFrame =
-    events.select(
-      date_format(col("ts"), "yyyy-MM-dd").as("date_str"),
-      date_format(col("ts"), "HH").as("hour_str"),
-      col("parkingLotId"), col("eventType"))
-      .groupBy("date_str", "hour_str", "parkingLotId")
-      .agg(
-        count(when(isEntry, 1)).as("entries"),
-        count(when(isExit, 1)).as("exits"))
-      .withColumn("occ", greatest(lit(0L), col("entries") - col("exits")))
-
-  private def hourTypeCounts(events: DataFrame): DataFrame =
-    events.select(
-      date_format(col("ts"), "yyyy-MM-dd").as("date_str"),
-      date_format(col("ts"), "HH").as("hour_str"),
-      col("vehicleType"))
-      .groupBy("date_str", "hour_str", "vehicleType")
-      .agg(count(lit(1)).as("cnt"))
-
-  def docsFrom(events: DataFrame): DataFrame = {
-    val lotAgg = hourLotCounts(events)
-      .groupBy("date_str", "hour_str")
-      .agg(
-        sum("entries").as("nbr_entries"),
-        sum("exits").as("nbr_exit"),
-        map_from_entries(array_sort(collect_list(struct(col("parkingLotId"), col("occ")))))
-          .as("occupancy"),
-        (sum("occ").cast("double") * RatePerHour).as("revenue_simulation"))
-    val typeAgg = hourTypeCounts(events)
-      .groupBy("date_str", "hour_str")
-      .agg(map_from_entries(array_sort(collect_list(struct(col("vehicleType"), col("cnt")))))
-        .as("vehicle_types"))
-    lotAgg.join(typeAgg, Seq("date_str", "hour_str"))
+    perHour(ParkingModel.parkingEvents(spark, dir), (pairs, _, _) => map_from_entries(pairs))
       .select(
         concat_ws(":", lit("parking-stats"), lit("hourly"), col("date_str"), col("hour_str"))
           .as("redis_key"),
@@ -72,45 +34,44 @@ object HourlyDocs {
         to_json(struct(
           col("nbr_entries").as("NbrEntries"),
           col("nbr_exit").as("NbrExit"),
-          col("occupancy").as("Occupancy"),
+          col("occupancy_by_lot").as("Occupancy"),
           col("revenue_simulation").as("RevenueSimulation"),
           col("vehicle_types").as("VehicleTypes"))).as("doc"))
-      .orderBy("date_str", "hour_str")
-  }
-
-  /** Deliver the documents to a keyed sink (S9 semantics) — executor-side,
-    * one sink connection per partition, idempotent by window key. */
-  def publish(docs: DataFrame, sink: KeyValueSink): Unit =
-    docs.select("redis_key", "doc").foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-    }
 
   /** The oracle-checkable flattened form of the same document (maps as
     * deterministic "k=v,…" strings — parquet/DuckDB compare cannot hash a
-    * JSON map reliably, a sorted string can). Shares the aggregation core
-    * with [[docsFrom]]; only the rendering differs. */
-  def flat(spark: SparkSession, dir: String): DataFrame = {
-    val events = ParkingModel.parkingEvents(spark, dir)
-    val lotAgg = hourLotCounts(events)
+    * JSON map reliably, a sorted string can). */
+  def flat(spark: SparkSession, dir: String): DataFrame =
+    perHour(ParkingModel.parkingEvents(spark, dir), (pairs, k, v) =>
+      array_join(transform(pairs,
+        x => concat(x.getField(k), lit("="), x.getField(v).cast("string"))), ","))
+      .select("date_str", "hour_str", "nbr_entries", "nbr_exit",
+        "revenue_simulation", "occupancy_by_lot", "vehicle_types")
+      .orderBy("date_str", "hour_str")
+
+  /** The aggregation both renderers share: per (date, hour) the entry/exit
+    * totals, the revenue simulation, and the sorted (lot, occupancy) and
+    * (type, count) pairs, each rendered inside its aggregate by
+    * `render(pairs, keyField, valueField)`. */
+  private def perHour(events: DataFrame, render: (Column, String, String) => Column): DataFrame = {
+    def pairs(k: String, v: String): Column =
+      render(array_sort(collect_list(struct(col(k), col(v)))), k, v)
+    val lotAgg = ParkingAnalytics.hourLotCounts(events)
+      .withColumn("occ", ParkingAnalytics.netOccupancy)
       .groupBy("date_str", "hour_str")
       .agg(
         sum("entries").as("nbr_entries"),
         sum("exits").as("nbr_exit"),
         (sum("occ").cast("double") * RatePerHour).as("revenue_simulation"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("parkingLotId"), col("occ")))),
-          x => concat(x.getField("parkingLotId"), lit("="), x.getField("occ").cast("string"))), ",")
-          .as("occupancy_by_lot"))
-    val typeAgg = hourTypeCounts(events)
+        pairs("parkingLotId", "occ").as("occupancy_by_lot"))
+    val typeAgg = events.select(
+      date_format(col("ts"), "yyyy-MM-dd").as("date_str"),
+      date_format(col("ts"), "HH").as("hour_str"),
+      col("vehicleType"))
+      .groupBy("date_str", "hour_str", "vehicleType")
+      .agg(count(lit(1)).as("cnt"))
       .groupBy("date_str", "hour_str")
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("vehicleType"), col("cnt")))),
-        x => concat(x.getField("vehicleType"), lit("="), x.getField("cnt").cast("string"))), ",")
-        .as("vehicle_types"))
+      .agg(pairs("vehicleType", "cnt").as("vehicle_types"))
     lotAgg.join(typeAgg, Seq("date_str", "hour_str"))
-      .select("date_str", "hour_str", "nbr_entries", "nbr_exit",
-        "revenue_simulation", "occupancy_by_lot", "vehicle_types")
-      .orderBy("date_str", "hour_str")
   }
 }

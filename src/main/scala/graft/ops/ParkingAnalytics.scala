@@ -28,35 +28,37 @@ object ParkingAnalytics {
   private val isEntry = col("eventType") === "PARKING_ENTRY"
   private val isExit = col("eventType") === "PARKING_EXIT"
 
+  /** Net occupancy of a per-lot count row: max(0, entries − exits). */
+  private[ops] val netOccupancy = greatest(lit(0L), col("entries") - col("exits"))
+
+  /** The per-(date, hour, lot) entry/exit count: the first level p01, p02,
+    * p24 and the hourly stats documents all aggregate from. */
+  private[ops] def hourLotCounts(events: DataFrame): DataFrame =
+    events
+      .groupBy(dateStr("ts").as("date_str"), hourStr("ts").as("hour_str"), col("parkingLotId"))
+      .agg(
+        count(when(isEntry, 1)).as("entries"),
+        count(when(isExit, 1)).as("exits"))
+
   /** A1+A4+A8 (MainHourly.scala:94-156): per clock hour — entries, exits, and
     * RevenueSimulation = Σ_lot max(0, entries−exits) × rate. Two-level agg:
     * the first groupBy shrinks to (hour × lot) cardinality, so the second
     * shuffle is negligible at any scale.
     */
-  def hourlyStats(spark: SparkSession, dir: String): DataFrame = {
-    val perLot = parkingEvents(spark, dir)
-      .groupBy(dateStr("ts").as("date_str"), hourStr("ts").as("hour_str"), col("parkingLotId"))
-      .agg(
-        count(when(isEntry, 1)).as("entries"),
-        count(when(isExit, 1)).as("exits"))
-    perLot.groupBy("date_str", "hour_str")
+  def hourlyStats(spark: SparkSession, dir: String): DataFrame =
+    hourLotCounts(parkingEvents(spark, dir))
+      .groupBy("date_str", "hour_str")
       .agg(
         sum("entries").as("nbr_entries"),
         sum("exits").as("nbr_exit"),
-        (sum(greatest(lit(0L), col("entries") - col("exits"))).cast("double") * RatePerHour)
-          .as("revenue_simulation"))
+        (sum(netOccupancy).cast("double") * RatePerHour).as("revenue_simulation"))
       .orderBy("date_str", "hour_str")
-  }
 
   /** A4/J4: net occupancy per (hour, lot) — the keyset-union + max(0,·) merge
     * (MainHourly.scala:101-117) as one conditional aggregation, no driver. */
   def occupancyByLot(spark: SparkSession, dir: String): DataFrame =
-    parkingEvents(spark, dir)
-      .groupBy(dateStr("ts").as("date_str"), hourStr("ts").as("hour_str"), col("parkingLotId"))
-      .agg(
-        count(when(isEntry, 1)).as("entries"),
-        count(when(isExit, 1)).as("exits"))
-      .withColumn("occupancy", greatest(lit(0L), col("entries") - col("exits")))
+    hourLotCounts(parkingEvents(spark, dir))
+      .withColumn("occupancy", netOccupancy)
       .orderBy("date_str", "hour_str", "parkingLotId")
 
   /** A3 (MainHourly.scala:120-126): vehicle-type distribution. */
@@ -102,22 +104,28 @@ object ParkingAnalytics {
   /** A10 (MainWeekly.scala:310-319): revenue by vehicle type over paired
     * sessions; Σduration is exact integer math, floats only at the end. */
   def revenueByType(spark: SparkSession, dir: String): DataFrame =
-    sessionPairing(spark, dir)
+    revenueByTypeOf(sessionPairing(spark, dir)).orderBy("vehicleType")
+
+  /** A9 (MainWeekly.scala:280-308): average spend per (exit-day, type). */
+  def avgSpentByTypeDay(spark: SparkSession, dir: String): DataFrame =
+    avgSpentByTypeDayOf(sessionPairing(spark, dir)).orderBy("date_str", "vehicleType")
+
+  /** [[revenueByType]] over a [[sessionPairing]] frame, in no order. */
+  private[graft] def revenueByTypeOf(sessions: DataFrame): DataFrame =
+    sessions
       .groupBy("vehicleType")
       .agg(
         count(lit(1)).as("n_sessions"),
         (sum("duration_min").cast("double") * RatePerHour / 60.0).as("revenue"))
-      .orderBy("vehicleType")
 
-  /** A9 (MainWeekly.scala:280-308): average spend per (exit-day, type). */
-  def avgSpentByTypeDay(spark: SparkSession, dir: String): DataFrame =
-    sessionPairing(spark, dir)
+  /** [[avgSpentByTypeDay]] over a [[sessionPairing]] frame, in no order. */
+  private[graft] def avgSpentByTypeDayOf(sessions: DataFrame): DataFrame =
+    sessions
       .groupBy(substring(col("exit_ts"), 1, 10).as("date_str"), col("vehicleType"))
       .agg(
         count(lit(1)).as("n_sessions"),
         (sum("duration_min").cast("double") * RatePerHour / 60.0 / count(lit(1)))
           .as("avg_spent"))
-      .orderBy("date_str", "vehicleType")
 
   /** W5 (doc/schemas/srvc_stats.json "top_vehicles_by_frequency"): top-10
     * plates, deterministic tiebreak. At scale: partial agg shrinks the input
@@ -280,6 +288,12 @@ object ParkingAnalytics {
     * spot for the whole day regardless of actual stay; kept verbatim for
     * compatibility, flagged in SURVEY §7.3 as a reference quirk). */
   def dailyRevenue(spark: SparkSession, dir: String): DataFrame =
+    dailyTotals(spark, dir).select("date_str", "daily_revenue").orderBy("date_str")
+
+  /** Per day, in no order: entries, exits and [[dailyRevenue]]'s
+    * `daily_revenue`, all summed from one per-(date, lot) count. Projected
+    * to `daily_revenue` alone, the two extra sums are pruned from the plan. */
+  private[graft] def dailyTotals(spark: SparkSession, dir: String): DataFrame =
     parkingEvents(spark, dir)
       .groupBy(dateStr("ts").as("date_str"), col("parkingLotId"))
       .agg(
@@ -287,9 +301,9 @@ object ParkingAnalytics {
         count(when(isExit, 1)).as("exits"))
       .groupBy("date_str")
       .agg(
-        (sum(greatest(lit(0L), col("entries") - col("exits"))).cast("double")
-          * RatePerHour * 24.0).as("daily_revenue"))
-      .orderBy("date_str")
+        sum("entries").as("entries"),
+        sum("exits").as("exits"),
+        (sum(netOccupancy).cast("double") * RatePerHour * 24.0).as("daily_revenue"))
 
   /** doc/schemas/srvc_stats.json "duration_stats": min/max/avg session
     * duration per lot over the paired-session frame (documented-but-never-

@@ -70,14 +70,6 @@ object Tables {
     normalizeTs(spark.read.parquet(dirs.map(d => s"$d/events.parquet"): _*))
   }
 
-  /** P7 empty-input guard (reference MainHourly.scala:82-87 threw on an
-    * empty hour before aggregating): fail fast with context instead of
-    * publishing an all-zero document. */
-  def requireNonEmpty(df: DataFrame, what: String): DataFrame = {
-    if (df.isEmpty) throw new IllegalStateException(s"no input rows for $what")
-    df
-  }
-
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 }

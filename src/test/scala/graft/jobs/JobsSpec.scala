@@ -6,11 +6,16 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 import graft.ops.ParkingAnalytics
 import graft.schema.ParkingModel
 import graft.sinks.{InMemoryKeyValueSink, InMemoryTimeSeriesSink}
+import graft.sources.Tables
 import graft.streaming.{FileEventSource, StreamingConf}
 import org.apache.spark.sql.functions._
 
@@ -54,6 +59,15 @@ class JobsSpec extends SparkSpec {
     sink.store.values.foreach(_ should include("\"VehicleTypes\":"))
   }
 
+  it should "fail on an empty events table, naming its directory and putting no key (P7)" in {
+    val dir = Files.createTempDirectory("job-empty")
+    Tables.events(spark, sfDir).limit(0).write.parquet(dir.resolve("events.parquet").toString)
+    val sink = new InMemoryKeyValueSink
+    val e = intercept[IllegalStateException](Jobs.hourlyStats(spark, dir.toString, sink))
+    e.getMessage should include(dir.toString)
+    sink.store shouldBe empty
+  }
+
   "dailyRollup job" should "write entries/exits/revenue series points per day" in {
     val sink = new InMemoryTimeSeriesSink
     val days = Jobs.dailyRollup(spark, sfDir, sink)
@@ -72,6 +86,45 @@ class JobsSpec extends SparkSpec {
     sink.store.keys.count(_.startsWith("parking-stats:weekly:revenue-by-type:")) shouldBe 5
     sink.store.keys.count(_.startsWith("parking-stats:weekly:avgspent:")) should be > 0
     sink.store.values.foreach(_ should startWith("{"))
+  }
+
+  /** Run `job` and assert that it ran exactly one successful SQL execution
+    * and left no new persisted RDD. A marker query run after `job` bounds
+    * the count: the listener sees executions in the order they end, so
+    * once it has seen the marker it has seen every execution of `job`. */
+  private def inOneExecution[T](job: => T): T = {
+    val marker = "jobs_spec_marker"
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var marked = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(marker)) marked = true
+        else if (!marked) runs.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        if (!marked) runs.add(s"failed $f")
+    }
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    spark.listenerManager.register(listener)
+    try {
+      val out = job
+      spark.range(1).toDF(marker).collect()
+      eventually(timeout(30.seconds), interval(50.millis)) { marked shouldBe true }
+      runs.asScala.toSeq should have size 1
+      (persisted -- before) shouldBe empty
+      out
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  "the batch jobs" should "each execute one plan once and return what reached the sink" in {
+    val hourly = new InMemoryKeyValueSink
+    inOneExecution(Jobs.hourlyStats(spark, sfDir, hourly)) shouldBe hourly.store.size
+    val daily = new InMemoryTimeSeriesSink
+    val days = inOneExecution(Jobs.dailyRollup(spark, sfDir, daily))
+    days should be > 0L
+    daily.store.values.map(_.size.toLong).toSet shouldBe Set(days)
+    val weekly = new InMemoryKeyValueSink
+    inOneExecution(Jobs.weeklyStats(spark, sfDir, weekly)) shouldBe weekly.store.size
   }
 
   "liveSlotView job" should "stream the materialized view into the sink" in {

@@ -3,6 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import graft.SparkSpec
+import graft.jobs.Jobs
 import graft.ops.{HourlyDocs, ParkingAnalytics}
 
 class SinksSpec extends SparkSpec {
@@ -20,12 +21,13 @@ class SinksSpec extends SparkSpec {
     new String(bytes, StandardCharsets.UTF_8) should include("$2\r\né\r\n")
   }
 
-  "HourlyDocs.publish" should "deliver idempotent window-keyed documents to a sink" in {
+  "Jobs.publish" should "deliver idempotent window-keyed documents to a sink" in {
     val sink = new InMemoryKeyValueSink
-    val docs = HourlyDocs.documents(spark, sfDir)
-    HourlyDocs.publish(docs, sink)
+    val docs = HourlyDocs.documents(spark, sfDir).select("redis_key", "doc")
+    val puts = Jobs.publish(docs, sink)
     val sizeAfterFirst = sink.store.size
-    HourlyDocs.publish(docs, sink) // replay — at-least-once must converge
+    puts shouldBe sizeAfterFirst
+    Jobs.publish(docs, sink) // replay — at-least-once must converge
     sink.store.size shouldBe sizeAfterFirst
     sizeAfterFirst should be > 0
     val (key, doc) = sink.store.head
@@ -36,7 +38,7 @@ class SinksSpec extends SparkSpec {
   it should "write documents through the file-backed sink" in {
     val dir = Files.createTempDirectory("graft-kv").toString
     val sink = new FileKeyValueSink(dir)
-    HourlyDocs.publish(HourlyDocs.documents(spark, sfDir).limit(3), sink)
+    Jobs.publish(HourlyDocs.documents(spark, sfDir).select("redis_key", "doc").limit(3), sink)
     val files = Files.list(Paths.get(dir)).toArray
     files.length shouldBe 3
     new String(Files.readAllBytes(files.head.asInstanceOf[java.nio.file.Path])) should

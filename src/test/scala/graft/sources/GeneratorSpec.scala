@@ -85,16 +85,6 @@ class GeneratorSpec extends SparkSpec {
     double shouldBe 2 * single
   }
 
-  "requireNonEmpty" should "fail fast on an empty frame and pass through otherwise (P7)" in {
-    import spark.implicits._
-    val full = Seq(1, 2).toDF("x")
-    Tables.requireNonEmpty(full, "events").count() shouldBe 2
-    val e = intercept[IllegalStateException] {
-      Tables.requireNonEmpty(full.filter(col("x") > 5), "hour 2024-01-01T10")
-    }
-    e.getMessage should include("hour 2024-01-01T10")
-  }
-
   "sessionDurations" should "fall back to duration_ms for orphan exits (J3)" in {
     val out = ParkingAnalytics.sessionDurations(spark, "/root/testdata/sf0.001")
     val bySource = out.groupBy("duration_source").count().collect()
