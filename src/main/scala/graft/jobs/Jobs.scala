@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.{HourlyDocs, ParkingAnalytics}
-import graft.schema.ParkingModel
 import graft.sinks.{AlertNotifier, KeyValueSink, TimeSeriesSink}
 import graft.streaming.{EventDecode, EventSource, LiveSlotView, StreamingConf, ViolationStream}
 
@@ -18,6 +17,11 @@ import graft.streaming.{EventDecode, EventSource, LiveSlotView, StreamingConf, V
   * Each batch job executes one plan once: the hourly and weekly jobs
   * through [[publish]], whose accumulator gives the returned count, the
   * daily job through one `collect` of at most a row per day.
+  *
+  * The alert streams run one Spark job per micro-batch that has input,
+  * the sink's `foreachPartition`: they look plates up in a registry
+  * snapshot taken when they start ([[ViolationStream.fromRegistry]])
+  * instead of joining the registry in every batch.
   */
 object Jobs {
 
@@ -149,12 +153,12 @@ object Jobs {
 
   /** §3.2 alerting (reference srvc-alert): violation stream into a keyed
     * sink (`alert:<event_id>` — the Kafka publisher's role, keyed and
-    * idempotent). */
+    * idempotent). The user registry under `usersDir` is read once, when
+    * the stream starts ([[ViolationStream.fromRegistry]]). */
   def alertStream(spark: SparkSession, source: EventSource, usersDir: String,
                   sink: KeyValueSink, checkpoint: String,
                   availableNow: Boolean = true): StreamingQuery = {
-    val alerts = ViolationStream.alerts(
-      EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
+    val alerts = ViolationStream.fromRegistry(spark, source, usersDir)
       .select(
         concat(lit("alert:"), col("event_id")).as("k"),
         to_json(struct(col("vehicle_plate"), col("spot_id"), col("lot_id"),
@@ -170,12 +174,11 @@ object Jobs {
     * notifier. The message is formatted in the plan (one narrow projection);
     * only delivery happens in the sink closure, per partition, and the
     * notifier swallows delivery errors so a dead webhook never kills the
-    * stream. */
+    * stream. The registry is read as in [[alertStream]]. */
   def alertNotifierStream(spark: SparkSession, source: EventSource, usersDir: String,
                           notifier: AlertNotifier, checkpoint: String,
                           availableNow: Boolean = true): StreamingQuery = {
-    val alerts = ViolationStream.alerts(
-      EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
+    val alerts = ViolationStream.fromRegistry(spark, source, usersDir)
       .select(
         col("severity"),
         concat(lit("Parking violation detected: "), col("violation_type"),

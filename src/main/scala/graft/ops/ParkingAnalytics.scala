@@ -25,11 +25,11 @@ object ParkingAnalytics {
   private def dateStr(c: String) = date_format(col(c), "yyyy-MM-dd")
   private def hourStr(c: String) = date_format(col(c), "HH")
   private def secondStr(c: String) = date_format(col(c), "yyyy-MM-dd HH:mm:ss")
-  private val isEntry = col("eventType") === "PARKING_ENTRY"
-  private val isExit = col("eventType") === "PARKING_EXIT"
+  private[graft] val isEntry = col("eventType") === "PARKING_ENTRY"
+  private[graft] val isExit = col("eventType") === "PARKING_EXIT"
 
   /** Net occupancy of a per-lot count row: max(0, entries − exits). */
-  private[ops] val netOccupancy = greatest(lit(0L), col("entries") - col("exits"))
+  private[graft] val netOccupancy = greatest(lit(0L), col("entries") - col("exits"))
 
   /** The per-(date, hour, lot) entry/exit count: the first level p01, p02,
     * p24 and the hourly stats documents all aggregate from. */
@@ -183,17 +183,22 @@ object ParkingAnalytics {
   def violations(spark: SparkSession, dir: String): DataFrame =
     violationsFrom(parkingEvents(spark, dir), users(spark, dir)).orderBy("event_id")
 
-  /** The violation rule itself, shared verbatim by the batch query above
-    * and the streaming twin ([[graft.streaming.ViolationStream]] wires a
-    * decoded event stream through this very function — stream-static joins
-    * are supported unchanged by Structured Streaming). No sort here:
-    * streaming append mode forbids it; the batch wrapper adds the total
-    * order for the oracle. */
+  /** Events × user dimension → alert rows: the left join on the plate,
+    * then [[violationRule]]. The batch query above calls it, and so does
+    * [[graft.streaming.ViolationStream.alerts]] on a decoded event stream
+    * (stream-static joins are supported unchanged by Structured
+    * Streaming). No sort here: streaming append mode forbids it; the batch
+    * wrapper adds the total order for the oracle. */
   def violationsFrom(events: DataFrame, userDim: DataFrame): DataFrame =
-    events
-      .filter(col("isSlotHandicapped"))
-      .join(userDim, col("licensePlate") === col("u_plate"), "left")
-      .filter(col("handicapped").isNull || !col("handicapped"))
+    violationRule(events.join(userDim, col("licensePlate") === col("u_plate"), "left"))
+
+  /** The violation rule itself, over events that carry their plate's
+    * `handicapped` flag (null: the plate is not registered): shared
+    * verbatim by p11 and both alert streams, whichever way they enrich the
+    * events. */
+  private[graft] def violationRule(enriched: DataFrame): DataFrame =
+    enriched
+      .filter(col("isSlotHandicapped") && (col("handicapped").isNull || !col("handicapped")))
       .select(
         col("event_id"),
         col("licensePlate").as("vehicle_plate"),

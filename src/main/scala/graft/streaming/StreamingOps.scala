@@ -103,15 +103,6 @@ object SessionStream {
   }
 }
 
-/** ST2/ST3 (reference hourly batch window, MainHourly.scala:14-24 + the
-  * "@every 1m" reprocessing schedule): the hourly per-lot stats as a
-  * watermarked tumbling-window streaming aggregate — the streaming twin of
-  * the batch `occupancyByLot` query (p02). Update mode: each micro-batch
-  * emits the hours whose counts changed; sinks upsert by the
-  * (date, hour, lot) key exactly as the reference idempotently re-JSON.SETs
-  * its hourly Redis key. The watermark bounds state: windows more than
-  * `lateness` behind the max event time are finalized and evicted.
-  */
 /** Gap-based sessionization as a STREAMING aggregate over Spark's native
   * session_window — the streaming twin of the batch `plateSessions` query
   * (p49). Sessions merge statefully across micro-batches. Append-mode
@@ -206,18 +197,29 @@ object AsOfStream {
   }
 }
 
+/** ST2/ST3 (reference hourly batch window, MainHourly.scala:14-24 + the
+  * "@every 1m" reprocessing schedule): the hourly per-lot stats as a
+  * watermarked tumbling-window streaming aggregate — the streaming twin of
+  * the batch `occupancyByLot` query (p02). Update mode: each micro-batch
+  * emits the hours whose counts changed; sinks upsert by the
+  * (date, hour, lot) key exactly as the reference idempotently re-JSON.SETs
+  * its hourly Redis key. The watermark bounds state: windows more than
+  * `lateness` behind the max event time are finalized and evicted.
+  */
 object HourlyStatsStream {
+  import graft.ops.ParkingAnalytics.{isEntry, isExit, netOccupancy}
+
   def aggregates(decoded: DataFrame, lateness: String = "1 hour"): DataFrame =
     decoded
       .withWatermark("ts", lateness)
       .groupBy(window(col("ts"), "1 hour"), col("parkingLotId"))
       .agg(
-        count(when(col("eventType") === "PARKING_ENTRY", 1)).as("entries"),
-        count(when(col("eventType") === "PARKING_EXIT", 1)).as("exits"))
+        count(when(isEntry, 1)).as("entries"),
+        count(when(isExit, 1)).as("exits"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd").as("date_str"),
         date_format(col("window.start"), "HH").as("hour_str"),
         col("parkingLotId"),
         col("entries"), col("exits"),
-        greatest(lit(0L), col("entries") - col("exits")).as("occupancy"))
+        netOccupancy.as("occupancy"))
 }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -14,9 +15,9 @@ import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
 import graft.ops.ParkingAnalytics
 import graft.schema.ParkingModel
-import graft.sinks.{InMemoryKeyValueSink, InMemoryTimeSeriesSink}
+import graft.sinks.{InMemoryKeyValueSink, InMemoryNotifier, InMemoryTimeSeriesSink}
 import graft.sources.Tables
-import graft.streaming.{FileEventSource, StreamingConf}
+import graft.streaming.{EventDecode, FileEventSource, StreamingConf, ViolationStream}
 import org.apache.spark.sql.functions._
 
 class JobsSpec extends SparkSpec {
@@ -160,6 +161,26 @@ class JobsSpec extends SparkSpec {
     }
   }
 
+  /** The alert documents p11 gives over `dir`'s events and registry, keyed
+    * `alert:<event_id>` as the alert stream puts them. */
+  private def p11AlertDocs(dir: String): Map[String, String] =
+    alertDocs(ParkingAnalytics.violations(spark, dir))
+
+  private def alertDocs(alerts: DataFrame): Map[String, String] =
+    alerts.select(concat(lit("alert:"), col("event_id")),
+        to_json(struct(col("vehicle_plate"), col("spot_id"), col("lot_id"),
+          col("violation_type"), col("severity"), col("event_time"))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** A directory holding a copy of the sf0.001 events and `customers` as
+    * its user registry. */
+  private def registryDir(customers: DataFrame): Path = {
+    val dir = Files.createTempDirectory("job-registry")
+    Tables.events(spark, sfDir).write.parquet(dir.resolve("events.parquet").toString)
+    customers.write.parquet(dir.resolve("customer.parquet").toString)
+    dir
+  }
+
   "alertStream job" should "publish exactly the batch violations as alert documents" in {
     val dir = Files.createTempDirectory("job-alerts")
     Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
@@ -167,8 +188,131 @@ class JobsSpec extends SparkSpec {
     val q = Jobs.alertStream(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 10),
       sfDir, sink, Files.createTempDirectory("alert-ckpt").toString)
     q.awaitTermination(120000)
-    sink.store.size.toLong shouldBe ParkingAnalytics.violations(spark, sfDir).count()
-    sink.store.values.foreach(_ should include("\"violation_type\":"))
+    val expected = p11AlertDocs(sfDir)
+    expected should not be empty
+    sink.store.toMap shouldBe expected
+  }
+
+  it should "look up null, unregistered, registered and handicapped plates as p11 does" in {
+    // sf0.001 registers P-1 (not handicapped) and P-13 (handicapped); P-7
+    // (a multiple of 7) and P-999999 are not registered
+    def event(id: Int, plate: String, handicappedSlot: Boolean = true): String =
+      s"""{"event_id":$id,"eventType":"PARKING_ENTRY","timestamp":"2024-03-01T10:00:0${id}.000Z",""" +
+        s""""vehicle":{"licensePlate":$plate,"vehicleType":"CAR","color":"gray"},""" +
+        s""""parking":{"parkingLotId":"lot-01","parkingSpotId":"s$id",""" +
+        s""""isSlotHandicapped":$handicappedSlot},"duration":0}"""
+    val lines = Seq(event(1, "null"), event(2, "\"P-7\""), event(3, "\"P-999999\""),
+      event(4, "\"P-1\""), event(5, "\"P-13\""), event(6, "\"P-999999\"", handicappedSlot = false))
+    val dir = Files.createTempDirectory("job-plates")
+    Files.write(dir.resolve("events.json"), lines.mkString("\n").getBytes)
+    val sink = new InMemoryKeyValueSink
+    Jobs.alertStream(spark, FileEventSource(dir.toString), sfDir, sink,
+      Files.createTempDirectory("plates-ckpt").toString).awaitTermination(120000)
+    def doc(id: Int, plate: String, violation: String, severity: String) =
+      s"alert:$id" -> (s"""{$plate"spot_id":"s$id","lot_id":"lot-01",""" +
+        s""""violation_type":"$violation","severity":"$severity","event_time":"2024-03-01 10:00:0$id"}""")
+    sink.store.toMap shouldBe Map(
+      doc(1, "", "unknown_user", "MEDIUM"),
+      doc(2, "\"vehicle_plate\":\"P-7\",", "unknown_user", "MEDIUM"),
+      doc(3, "\"vehicle_plate\":\"P-999999\",", "unknown_user", "MEDIUM"),
+      doc(4, "\"vehicle_plate\":\"P-1\",", "unauthorized_user", "HIGH"))
+    // the join the stream no longer runs gives the same documents
+    sink.store.toMap shouldBe alertDocs(ViolationStream.alerts(
+      EventDecode.decode(spark.read.text(dir.toString)), ParkingModel.users(spark, sfDir)))
+  }
+
+  it should "fail at start, naming the plate, when the registry names a plate twice" in {
+    val customers = Tables.customer(spark, sfDir)
+    val reg = registryDir(customers.unionByName(customers.filter(col("c_custkey") === 1)))
+    val dir = Files.createTempDirectory("job-dup")
+    Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
+    val sink = new InMemoryKeyValueSink
+    val before = spark.streams.active.length
+    val e = intercept[IllegalArgumentException](Jobs.alertStream(spark,
+      FileEventSource(dir.toString), reg.toString, sink,
+      Files.createTempDirectory("dup-ckpt").toString))
+    e.getMessage should include("P-1 ")
+    spark.streams.active.length shouldBe before
+    sink.store shouldBe empty
+  }
+
+  it should "keep its start registry while running and read the rewritten one on restart" in {
+    val customers = Tables.customer(spark, sfDir)
+    val reg = registryDir(customers)
+    val ids = ParkingModel.parkingEvents(spark, sfDir).orderBy("event_id")
+      .select("event_id").collect().map(_.getLong(0))
+    val parts = eventLines.indices.grouped(eventLines.length / 3 + 1).toSeq
+    def keysOf(part: Int): Set[String] = parts(part).map(i => s"alert:${ids(i)}").toSet
+    val dir = Files.createTempDirectory("job-rewrite")
+    land(dir, 0, parts(0).map(eventLines))
+    val ckpt = Files.createTempDirectory("rewrite-ckpt").toString
+    val source = FileEventSource(dir.toString, maxFilesPerTrigger = 1)
+    val sink = new InMemoryKeyValueSink
+    val before = p11AlertDocs(reg.toString)
+
+    val q1 = Jobs.alertStream(spark, source, reg.toString, sink, ckpt, availableNow = false)
+    try {
+      q1.processAllAvailable()
+      // rewrite the registry under the running stream: every odd plate
+      // leaves it, so its violations turn unknown_user/MEDIUM
+      customers.filter(col("c_custkey") % 2 === 0).write.mode("overwrite")
+        .parquet(reg.resolve("customer.parquet").toString)
+      land(dir, 1, parts(1).map(eventLines))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    q1.exception shouldBe None
+    val after = p11AlertDocs(reg.toString)
+    // the rewrite changes what parts 1 and 2 alert on, or the test shows nothing
+    Seq(1, 2).foreach { p =>
+      before.filter(kv => keysOf(p)(kv._1)) should not equal after.filter(kv => keysOf(p)(kv._1))
+    }
+
+    land(dir, 2, parts(2).map(eventLines))
+    Jobs.alertStream(spark, source, reg.toString, sink, ckpt).awaitTermination(120000)
+    sink.store.toMap shouldBe
+      before.filter(kv => keysOf(0)(kv._1) || keysOf(1)(kv._1)) ++
+        after.filter(kv => keysOf(2)(kv._1))
+  }
+
+  "the alert streams" should "run one Spark job per micro-batch with input" in {
+    val dir = Files.createTempDirectory("job-count")
+    eventLines.grouped(eventLines.length / 3 + 1).zipWithIndex.foreach { case (ls, i) =>
+      land(dir, i, ls)
+    }
+    val source = FileEventSource(dir.toString, maxFilesPerTrigger = 1)
+    val marker = "jobs.spec.marker"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    @volatile var marked = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop(marker).isDefined) marked = true
+        else prop("sql.streaming.queryId").foreach { q =>
+          jobs.merge((q, prop("streaming.sql.batchId").map(_.toLong).getOrElse(-1L)), 1, _ + _)
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val queries = try {
+      val qs = Seq(
+        Jobs.alertStream(spark, source, sfDir, new InMemoryKeyValueSink,
+          Files.createTempDirectory("count-alert").toString),
+        Jobs.alertNotifierStream(spark, source, sfDir, new InMemoryNotifier,
+          Files.createTempDirectory("count-notify").toString))
+      qs.foreach(_.awaitTermination(120000))
+      // listener events arrive in order: once the marker job is seen, so
+      // is every job the streams ran
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      eventually(timeout(30.seconds), interval(50.millis)) { marked shouldBe true }
+      qs
+    } finally spark.sparkContext.removeSparkListener(listener)
+    queries.foreach { q =>
+      val withInput = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+      withInput should have size 3
+      withInput.map(b => Option(jobs.get((q.id.toString, b))).getOrElse(0)) shouldBe Seq(1, 1, 1)
+    }
   }
 
   "local streaming checkpoints" should "start no chmod, readlink, stat or ls process" in {
