@@ -18,7 +18,7 @@ object ExplainDump {
     val names =
       if (args.drop(3).sameElements(Array("all"))) SparkEntry.queries.keys.toSeq.sorted
       else args.drop(3).toSeq
-    val spark = DevBench.session()
+    val spark = Rehearse.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,

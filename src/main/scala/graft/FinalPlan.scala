@@ -10,10 +10,10 @@ package graft
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.FinalPlan <query> */
 object FinalPlan {
   def main(args: Array[String]): Unit = {
-    val spark = DevBench.session()
+    val spark = Rehearse.session()
     val name = args(0)
     val df = SparkEntry.queries(name)(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    DevBench.mat(df)
+    Rehearse.mat(df)
     println("=== FINAL PLAN " + name + " ===")
     println(df.queryExecution.executedPlan.toString.take(400000))
     spark.stop()

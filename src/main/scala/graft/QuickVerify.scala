@@ -21,7 +21,7 @@ object QuickVerify {
     val wanted = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = wanted.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = DevBench.session()
+    val spark = Rehearse.session()
     new java.io.File(outDir).mkdirs()
     wanted.foreach { name =>
       val t0 = System.nanoTime()
@@ -29,17 +29,8 @@ object QuickVerify {
         .write.mode("overwrite").parquet(s"$outDir/$name")
       println(f"[quickverify] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => wanted.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -5,8 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Per-scope task telemetry for the dev measurement harnesses
-  * ([[FunnelBench]], [[SkewMinerBench]]): task-duration distribution
+/** Per-scope task telemetry for the [[Rehearse]] rungs (`funnel`,
+  * `skew`, `cc`, `deploy-ann`): task-duration distribution
   * (the straggler question — is one hot bucket serializing a stage?)
   * plus the shuffle/spill byte totals the scale notes quote. A fresh
   * listener is attached per timed scope and detached after, so each
@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * and counts only SUCCESSFUL task attempts, so failed/speculative
   * retries don't skew the percentiles or double-count bytes. Tasks from
   * concurrently running jobs in other threads would still be attributed
-  * to the scope — the dev benches run their measured actions serially.
+  * to the scope — the rungs run their measured actions serially.
   */
 final class TaskStats extends SparkListener {
   private val durs = new ConcurrentLinkedQueue[java.lang.Long]()
@@ -71,12 +71,12 @@ object TaskStats {
     def p99OverMedian: Double =
       if (medianMs <= 0) 0.0 else p99Ms.toDouble / medianMs
 
-    def json: String =
-      s""""tasks":$nTasks,"task_med_ms":$medianMs,"task_p99_ms":$p99Ms,""" +
-        s""""task_max_ms":$maxMs,"shuf_write_mb":${shuffleWriteB / 1048576},""" +
-        s""""shuf_read_mb":${shuffleReadB / 1048576},""" +
-        s""""spill_disk_mb":${diskSpillB / 1048576},""" +
-        s""""spill_mem_mb":${memSpillB / 1048576}"""
+    /** The record fields a rung appends after its own. */
+    def fields: Seq[(String, Long)] = Seq(
+      "tasks" -> nTasks.toLong, "task_med_ms" -> medianMs, "task_p99_ms" -> p99Ms,
+      "task_max_ms" -> maxMs, "shuf_write_mb" -> shuffleWriteB / 1048576,
+      "shuf_read_mb" -> shuffleReadB / 1048576,
+      "spill_disk_mb" -> diskSpillB / 1048576, "spill_mem_mb" -> memSpillB / 1048576)
   }
 
   /** Run `f` with a fresh listener attached; returns (wall seconds,

@@ -28,46 +28,29 @@ object Adaptive {
   /** The engine's ONE materialization boundary for multiply-consumed
     * derived frames (shared shingle/embedding/score frames, brute-force
     * top-k, prefix-sum preludes, …): every operator that needs "compute
-    * this once, let several plan branches read it" routes through here,
-    * so the mechanism is pluggable per deployment instead of hard-coded
-    * at ~30 call sites (`-Dgraft.materialize=`):
+    * this once, let several plan branches read it" routes through here.
     *
-    *  - **`local`** (default): LAZY `localCheckpoint` — the plan is
-    *    truncated to an RDD scan and the RDD is marked persist +
-    *    truncate-on-first-action, so the frame computes ONCE inside the
-    *    first consuming action (block-level locking dedupes concurrent
-    *    branch stages) with NO separate eager job. Round 16 shipped these
-    *    boundaries EAGER, which billed one extra Spark job per call site;
-    *    at sf0.1 that job is 0.2–0.6 s of pure scheduling against saved
-    *    work of ~0 (the r16 p106/p110/p119 local regressions,
-    *    OPTIMIZATION_r17.md; the eager arm was deleted and can be
-    *    recovered at `390d7f1`). Lazy keeps
-    *    the single-computation plan shape at every scale and drops the
-    *    extra job — strictly at-most-one materialization pass either way.
-    *    (AQE note: constructing the checkpoint RDD still runs the frame's
-    *    upstream exchange stages at call time — only the result stage
-    *    moves into the first consumer's job.)
-    *  - **`reliable`**: `persist(MEMORY_AND_DISK)` with lineage KEPT —
-    *    the cluster-safe mode: a `localCheckpoint` stores blocks
-    *    unreplicated and truncates lineage, so on a preemptible cluster
-    *    a lost executor fails the job; persist lets Spark recompute lost
-    *    blocks from lineage. Branch sharing still holds (both consumers
-    *    reference this exact frame, so the cache manager substitutes the
-    *    same InMemoryRelation). Its blocks are NOT released when the
-    *    frame becomes unreachable: 5 of 5 persisted frames were still
-    *    held by the CacheManager after GC, against 0 of 5 under `local`
-    *    (measured; the fix is ROADMAP.md item 2).
+    * A LAZY `localCheckpoint`: the plan is truncated to an RDD scan and
+    * the RDD is marked persist + truncate-on-first-action, so the frame
+    * computes ONCE inside the first consuming action (block-level locking
+    * dedupes concurrent branch stages) with NO separate eager job. Round
+    * 16 shipped these boundaries EAGER, which billed one extra Spark job
+    * per call site; at sf0.1 that job is 0.2–0.6 s of pure scheduling
+    * against saved work of ~0 (OPTIMIZATION_r17.md). (AQE note:
+    * constructing the checkpoint RDD still runs the frame's upstream
+    * exchange stages at call time — only the result stage moves into the
+    * first consumer's job.) The blocks are released by the context
+    * cleaner once the frame is unreachable; `AdaptiveSpec` pins that the
+    * CacheManager holds none of them.
     *
-    * NOT routed through here: the iterative-loop checkpoints (CC label
-    * rounds, MMR greedy stages) — those manage per-round storage levels
-    * and explicit release themselves, and a reliable deployment would
-    * swap them for `checkpoint()` against a checkpoint dir (the GraphX
-    * periodic-checkpoint trade; see the iterativeGroups scaladoc). */
+    * The blocks are stored unreplicated and lineage is truncated, so a
+    * lost executor fails the job. A preemptible cluster would need a
+    * reliable `checkpoint()` into a checkpoint dir, which the engine does
+    * not offer. The iterative-loop checkpoints (CC label rounds, MMR
+    * greedy stages) are NOT routed through here: they manage per-round
+    * storage levels and explicit release themselves. */
   def materialize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    sys.props.getOrElse("graft.materialize", "local") match {
-      case "reliable" => df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _          => df.localCheckpoint(false)
-    }
+    df.localCheckpoint(false)
 
   /** Target rows per (key, range) partition for the time/id-axis
     * sub-splits. ~1M narrow rows is ~100 MB sorted per task — inside a

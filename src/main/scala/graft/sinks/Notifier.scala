@@ -4,6 +4,8 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
 
+import graft.Json
+
 /** Alert notification delivery (reference srvc-notifier:
   * `apps/srvc-notifier/.../DiscordNotifier.scala:15-57`): severity → embed
   * color, a webhook JSON payload with a bold `**[SEVERITY]** message`
@@ -34,25 +36,15 @@ object WebhookPayload {
     case _        => 0x808080
   }
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** The webhook document (DiscordNotifier.scala:25-46): content +
     * one embed with color and inline severity/time fields. */
   def render(severity: String, message: String, eventTime: String): String = {
-    val m = esc(message)
-    val sev = esc(severity)
+    val m = Json.escape(message)
+    val sev = Json.escape(severity)
     s"""{"content":"**[$sev]** $m","embeds":[{"title":"Alert","description":"$m",""" +
       s""""color":${severityColor(severity)},"fields":[""" +
       s"""{"name":"Severity","value":"$sev","inline":true},""" +
-      s"""{"name":"Time","value":"${esc(eventTime)}","inline":true}]}]}"""
+      s"""{"name":"Time","value":"${Json.escape(eventTime)}","inline":true}]}]}"""
   }
 }
 

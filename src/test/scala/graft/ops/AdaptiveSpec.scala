@@ -174,6 +174,28 @@ class AdaptiveWiringSpec extends SparkSpec {
     auto shouldBe explicitRes
   }
 
+  "materialize" should "leave nothing in the CacheManager once its frames are consumed" in {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    val wasEmpty = cm.isEmpty
+    val frames = (1 to 5).map(i =>
+      Adaptive.materialize(spark.range(10000L).select((col("id") * i).as("v"))))
+    // each frame read by two actions, the "compute once, read twice" use
+    frames.zipWithIndex.foreach { case (f, i) =>
+      f.agg(sum("v")).head().getLong(0) shouldBe (i + 1) * 49995000L
+      f.filter(col("v") % 2 === 0).count() should be > 0L
+    }
+    frames.foreach(f => cached(f) shouldBe false)
+    if (wasEmpty) cm.isEmpty shouldBe true
+    // the check sees a frame a persist leaves behind
+    val held = spark.range(100L).toDF("v").persist()
+    held.count()
+    cached(held) shouldBe true
+    held.unpersist(true)
+  }
+
   "withRangeBucket" should "bucket contiguously, cover [0, nR), and survive the degenerate frames" in {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
