@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -174,7 +176,7 @@ object Rehearse {
   def jsonChunks(df: DataFrame, perBatch: Int, prefix: String,
                  order: String*): () => DataFrame = {
     val spark = df.sparkSession
-    val dir = Files.createTempDirectory(prefix)
+    val dir = made(Files.createTempDirectory(prefix))
     val chunks = df.orderBy(order.map(col): _*)
       .select(to_json(struct(df.columns.map(col): _*)))
       .collect().map(_.getString(0)).grouped(perBatch).toSeq
@@ -206,6 +208,23 @@ object Rehearse {
       .map(p => p.batchId -> p.durationMs.getOrDefault("triggerExecution", -1L).longValue())
       .filter(_._1 >= 0).sortBy(_._1)
 
-  /** A temp dir path for one rehearsal output. */
-  def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+  /** A temp dir path for one rehearsal output; [[cleaned]] deletes it. */
+  def tempDir(prefix: String): String = made(Files.createTempDirectory(prefix)).toString
+
+  /** Every dir [[tempDir]] and [[jsonChunks]] created and [[cleaned]] has
+    * not yet deleted. */
+  private val dirs = ArrayBuffer.empty[Path]
+
+  private def made(dir: Path): Path = dirs.synchronized { dirs += dir; dir }
+
+  /** Run `body`, then delete every dir [[tempDir]] and [[jsonChunks]]
+    * created while it ran, whether or not it threw. */
+  def cleaned(body: => Unit): Unit = {
+    val from = dirs.synchronized(dirs.length)
+    try body
+    finally dirs.synchronized {
+      dirs.drop(from).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
+      dirs.dropRightInPlace(dirs.length - from)
+    }
+  }
 }

@@ -26,7 +26,7 @@ object StreamRungs {
     * pruned versions would undercount it). The CC twin runs the
     * production cadence: with compaction suppressed its per-batch reads
     * would measure the delta-chain length. */
-  def streamState(c: Ctx): Unit = {
+  def streamState(c: Ctx): Unit = cleaned {
     val spark = c.spark
     val batches = c.arg(0, 12).toInt
     val docsPerBatch = c.arg(1, 2000).toInt
@@ -54,7 +54,7 @@ object StreamRungs {
         else "full_rewrite_rows" -> cumulative)
     }
     emit("span_dedup_stream", "batches" -> batches, "docs_per_batch" -> docsPerBatch,
-      "seen_keys" -> SpanDedupStream.latestState(spark, stateDir).map(_.count()).getOrElse(0L),
+      "seen_keys" -> VersionedState.readSet(spark, stateDir).map(_.count()).getOrElse(0L),
       "wall_sec" -> Fixed(wall, 2))
 
     val edgesPerBatch = docsPerBatch * 10
@@ -147,7 +147,7 @@ object StreamRungs {
     * replayed batch converges to the batch operator's exact answer over
     * all data. A violation throws, so the rung exits non-zero. The
     * flat-wall windows need at least 64 batches. */
-  def soak(c: Ctx): Unit = {
+  def soak(c: Ctx): Unit = cleaned {
     val spark = c.spark
     val batches = c.arg(0, 120).toInt
     val edgesPerBatch = c.arg(1, 5000).toInt
@@ -185,7 +185,7 @@ object StreamRungs {
     val (eState, eReplayed) = run("dedup_group", "edges_per_batch", edgesPerBatch) { (state, ckpt) =>
       DedupGroupStream.attach(edges(), "doc_a", "doc_b", state, ckpt, compactEvery = compactEvery)
     }
-    val n = assertSame("dedup_group", DedupGroupStream.latestState(spark, eState).get,
+    val n = assertSame("dedup_group", VersionedState.readKeyed(spark, eState, "doc_id").get,
       graft.text.TextDedup.duplicateGroups(allEdges, "doc_a", "doc_b"))
     println(s"PASS dedup_group replay + parity: $n assignments == batch CC, " +
       s"replayed batch $eReplayed idempotent")
@@ -214,7 +214,7 @@ object StreamRungs {
     * composition contract: either stage restarts without the other. Per
     * batch trigger ms for both queries: does per-batch cost stay flat
     * while the dedup state grows to ~10M keys (`composed 16 8000 8`)? */
-  def composed(c: Ctx): Unit = {
+  def composed(c: Ctx): Unit = cleaned {
     val spark = c.spark
     val batches = c.arg(0, 16).toInt
     val docsPerBatch = c.arg(1, 8000).toInt
@@ -230,7 +230,7 @@ object StreamRungs {
     batchDurations(q1).foreach { case (id, ms) =>
       emit("composed_stream_dedup", "batch" -> id, "trigger_ms" -> ms)
     }
-    val seenKeys = SpanDedupStream.latestState(spark, stateDir).map(_.count()).getOrElse(0L)
+    val seenKeys = VersionedState.readSet(spark, stateDir).map(_.count()).getOrElse(0L)
 
     // stage 2: the Gopher gate inline (repetitionStats' counters and
     // thresholds; its public form re-sorts by id, which a streaming plan

@@ -183,9 +183,11 @@ object TextRungs {
       val canon = stage("canonical_antijoin") {
         kdd.join(dupMembers, Seq("doc_id"), "left_anti").repartition(col("doc_id"))
       }
-      // held-out set: the first 1000 docs, each the seed of a dup family,
-      // so the span removal bites; its vocabulary broadcasts (p90)
-      val bench = persisted(ds.filter(col("doc_id") < 1000).select("doc_id", "text"))
+      // held-out set: the first min(1000, n/10) docs, each the seed of a
+      // dup family, so the span removal bites but leaves docs for the
+      // later stages at small n; its vocabulary broadcasts (p90)
+      val bench = persisted(ds.filter(col("doc_id") < math.min(1000L, n / 10))
+        .select("doc_id", "text"))
       val decon = stage("decontam_scrub") {
         TextDedup.spanScrub(canon.select("doc_id", "text"), bench, "doc_id", "text")
           .select(col("doc_id"), col("cleaned_text").as("text"))

@@ -3,7 +3,7 @@ package graft.sinks
 import java.io.{BufferedInputStream, InputStream, OutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 
 /** Result-delivery sinks (SURVEY.md §2.1 S9/S10): keyed JSON documents and
@@ -67,27 +67,6 @@ final class FileKeyValueSink(dir: String) extends KeyValueSink {
     ensureDir()
     Files.write(Paths.get(dir, key.replaceAll("[^A-Za-z0-9:._-]", "_")),
       json.getBytes(StandardCharsets.UTF_8))
-  }
-}
-
-/** File-backed TS sink: one `series.ts` file of "ts value" lines, upserted
-  * by timestamp so replays converge (the idempotence contract above) —
-  * read-modify-write per add is fine at the test/sandbox scale this sink
-  * exists for. */
-final class FileTimeSeriesSink(dir: String) extends TimeSeriesSink {
-  def add(series: String, ts: Long, value: Double): Unit = synchronized {
-    Files.createDirectories(Paths.get(dir))
-    val p = Paths.get(dir, series.replaceAll("[^A-Za-z0-9:._-]", "_") + ".ts")
-    val existing: Seq[(Long, Double)] =
-      if (Files.exists(p))
-        Files.readAllLines(p).toArray(Array.empty[String]).toSeq.filter(_.nonEmpty).map { l =>
-          val Array(t, v) = l.split(" ", 2); (t.toLong, v.toDouble)
-        }
-      else Seq.empty
-    val updated = (existing.toMap + (ts -> value)).toSeq.sortBy(_._1)
-    Files.write(p, updated.map { case (t, v) => s"$t $v" }.mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   }
 }
 

@@ -1,27 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextPrims.tokens
-import graft.text.TextCuration
+import graft.text.{TextCuration, TextDedup}
 import StreamingConf.{eachBatch, writeBatch}
-
-/** Streaming twin of the p81 context-window chunking
-  * ([[graft.text.TextCuration.tokenChunks]]). Chunking is row-local —
-  * one posexplode per document, no state, no shuffle — so the batch
-  * transform IS its own streaming twin: this object delegates to the
-  * exact batch code path (minus the batch-only presentation sort), and
-  * the parity case proves Spark accepts the plan on an unbounded source
-  * and that rows match batch exactly across micro-batches. At 100 TB/day
-  * of streaming ingest, chunking stays a scan-side projection whose
-  * parallelism is the source's partition count. */
-object ChunkStream {
-  def chunks(docs: DataFrame, idCol: String, textCol: String,
-             chunkTokens: Int = 32, overlap: Int = 8): DataFrame =
-    TextCuration.tokenChunksUnordered(docs, idCol, textCol, chunkTokens, overlap)
-}
 
 /** One document entering the streaming packer: shard, id, token count. */
 final case class PackDoc(shard: Long, id: Long, n_tokens: Long)
@@ -82,53 +69,6 @@ object PackingStream {
   }
 }
 
-/** Streaming twin of the p88 bigram novelty scorer
-  * ([[graft.text.TextStats.bigramScore]]): score a document STREAM
-  * against a FROZEN model table — the split a production pipeline
-  * actually runs (train once offline on a reference corpus, score the
-  * ingest stream forever). Scoring is per-document given the model, so
-  * each micro-batch runs the exact batch scorer and overwrites its own
-  * `batch=` partition ([[StreamingConf.writeBatch]]); parity with the
-  * batch operator is row-exact by construction and pinned by the
-  * replay test. The model is a plain
-  * distributed table — at 100 TB it joins by shuffle or broadcast just
-  * like the batch path, never a driver-side map. */
-object NoveltyScoreStream {
-  def attach(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-             model: org.apache.spark.sql.DataFrame, outDir: String,
-             checkpointDir: String,
-             trigger: org.apache.spark.sql.streaming.Trigger =
-               org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      writeBatch(graft.text.TextStats.bigramScore(batch, idCol, textCol, model),
-        outDir, batchId)
-    }
-}
-
-/** Streaming twin of the p138 conditional-LM surprisal scorer
-  * ([[graft.text.TextStats.lmScore]]): score a document STREAM against a
-  * FROZEN [[graft.text.TextStats.lmModel]] table — the CCNet deployment
-  * split (train the reference LM once, score the crawl stream forever).
-  * Same contract as [[NoveltyScoreStream]]: per-document scoring given
-  * the model, so each micro-batch runs the exact batch scorer and
-  * overwrites its own `batch=` partition (replay-idempotent); the model
-  * is one distributed (bg, c12) table — the derived context counts are
-  * re-aggregated from it inside every batch, ≤ LmBuckets broadcast
-  * rows. */
-object LmScoreStream {
-  def attach(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-             model: org.apache.spark.sql.DataFrame, outDir: String,
-             checkpointDir: String,
-             trigger: org.apache.spark.sql.streaming.Trigger =
-               org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      writeBatch(graft.text.TextStats.lmScore(batch, idCol, textCol, model),
-        outDir, batchId)
-    }
-}
-
 /** Streaming twin of the p87 span-level dedup
   * ([[graft.text.TextDedup.spanDedup]]): incremental repeated-window
   * removal over a document stream. State is the set of window keys seen
@@ -152,24 +92,7 @@ object LmScoreStream {
   * full compact folded in every `compactEvery` batches and superseded
   * windows pruned (see [[VersionedState]] for the replay contract). */
 object SpanDedupStream {
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  import graft.text.TextDedup
-
   private val seenSchema = StructType(Seq(StructField("wh", LongType)))
-
-  /** The complete seen-key set under `stateDir` (union of the newest
-    * compact and the deltas above it), restricted to versions BELOW
-    * `beforeBatch` when given: a replayed batch (failure after the state
-    * write, before the checkpoint commit) must read its PREDECESSOR's
-    * state, not the delta its own failed attempt wrote — including its
-    * own delta would mark the whole batch as already-seen and scrub
-    * every span, then record an EMPTY novelty delta over the real one. */
-  def latestState(spark: org.apache.spark.sql.SparkSession,
-                  stateDir: String,
-                  beforeBatch: Option[Long] = None): Option[DataFrame] =
-    VersionedState.readSet(spark, stateDir, beforeBatch)
 
   def attach(docs: DataFrame, idCol: String, textCol: String,
              outDir: String, stateDir: String, checkpointDir: String,
@@ -177,7 +100,6 @@ object SpanDedupStream {
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
     eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
       val tok = TextDedup.spanTokenFrame(batch, idCol, textCol)
       // persisted for the batch scope: the cleaned-output write AND the
       // state write both consume the occurrence rows — without the
@@ -186,10 +108,8 @@ object SpanDedupStream {
       // exchange exists to avoid)
       val occ = TextDedup.spanOccurrences(tok, spanK)
         .repartition(col("wh")).persist()
-      try {
-        val seen = latestState(spark, stateDir, Some(batchId)).getOrElse(
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seenSchema))
+      try VersionedState.step(batch.sparkSession, stateDir, batchId, seenSchema,
+          compactEvery) { seen =>
         // batch keeper per key; an occurrence survives only as the first
         // occurrence of a never-before-seen key
         val grp = occ.groupBy("wh")
@@ -200,16 +120,11 @@ object SpanDedupStream {
             col("id") =!= col("keep.id") || col("pos") =!= col("keep.pos"))
           .groupBy("id").agg(sort_array(collect_list(col("pos"))).as("starts"))
         writeBatch(TextDedup.spanCleanup(tok, starts, spanK), outDir, batchId)
-        // state write: the batch's NOVEL keys only — deltas are disjoint
-        // from everything before them by construction, so the reader's
-        // union needs no dedup
-        val novel = grp.select("wh").join(seen, Seq("wh"), "left_anti")
-        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-          VersionedState.write(seen.union(novel), stateDir, batchId, compact = true)
-        else
-          VersionedState.write(novel, stateDir, batchId, compact = false)
+        // the batch's NOVEL keys only — deltas are disjoint from
+        // everything before them by construction, so the reader's union
+        // needs no dedup
+        grp.select("wh").join(seen, Seq("wh"), "left_anti")
       } finally occ.unpersist(false)
-      VersionedState.prune(spark, stateDir, batchId)
     }
 }
 
@@ -219,15 +134,10 @@ object SpanDedupStream {
   * batch's own min-(id, lpos) keeper of a never-seen key) is removed —
   * so over id-ordered batches the drained output equals the batch
   * operator exactly. State is the seen (h1, h2) line-key set under
-  * [[VersionedState]] (per-batch NOVELTY deltas + periodic compacts,
-  * the SpanDedupStream contract: replay-safe via the beforeBatch read,
-  * one overwritten batch=<id> output partition per batch). */
+  * [[VersionedState.step]] (per-batch NOVELTY deltas + periodic
+  * compacts, replay-safe; one overwritten batch=<id> output partition
+  * per batch). */
 object LineDedupStream {
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  import graft.text.TextDedup
-
   private val seenSchema = StructType(Seq(
     StructField("h1", LongType), StructField("h2", LongType)))
 
@@ -236,15 +146,11 @@ object LineDedupStream {
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
     eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
       val lf = TextDedup.lineFrame(batch, idCol, textCol)
       val occ = TextDedup.lineOccurrences(lf)
         .repartition(col("h1"), col("h2")).persist()
-      try {
-        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            seenSchema))
+      try VersionedState.step(batch.sparkSession, stateDir, batchId, seenSchema,
+          compactEvery) { seen =>
         val grp = occ.groupBy("h1", "h2")
           .agg(min(struct(col("id"), col("lpos"))).as("keep"))
         val removals = occ.join(grp, Seq("h1", "h2"))
@@ -254,38 +160,8 @@ object LineDedupStream {
             col("id") =!= col("keep.id") || col("lpos") =!= col("keep.lpos"))
           .groupBy("id").agg(sort_array(collect_list(col("lpos"))).as("rm"))
         writeBatch(TextDedup.lineCleanup(lf, removals), outDir, batchId)
-        val novel = grp.select("h1", "h2")
-          .join(seen, Seq("h1", "h2"), "left_anti")
-        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-          VersionedState.write(seen.union(novel), stateDir, batchId,
-            compact = true)
-        else
-          VersionedState.write(novel, stateDir, batchId, compact = false)
+        grp.select("h1", "h2").join(seen, Seq("h1", "h2"), "left_anti")
       } finally occ.unpersist(false)
-      VersionedState.prune(spark, stateDir, batchId)
-    }
-}
-
-/** Streaming twin of the p90 span-level decontamination scrub
-  * ([[graft.text.TextDedup.spanScrub]]): scrub a document STREAM against
-  * a FROZEN benchmark — stateless given the benchmark (no cross-batch
-  * memory: contamination is membership in a fixed key set, not
-  * first-seen), so each micro-batch runs the exact batch operator via
-  * `foreachBatch`, writing one overwritten batch=<id> partition (replay
-  * rewrites, never duplicates — readers drop the partition column).
-  * Parity with batch spanScrub is row-exact by construction and pinned
-  * by the replay test. */
-object SpanScrubStream {
-  def attach(docs: org.apache.spark.sql.DataFrame,
-             benchmark: org.apache.spark.sql.DataFrame,
-             idCol: String, textCol: String, outDir: String,
-             checkpointDir: String, spanK: Int = 8,
-             trigger: org.apache.spark.sql.streaming.Trigger =
-               org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      writeBatch(graft.text.TextDedup.spanScrub(batch, benchmark, idCol, textCol, spanK),
-        outDir, batchId)
     }
 }
 
@@ -369,10 +245,6 @@ object MixtureSampleStream {
   * batch cap itself is a candidate-bound heuristic, not a semantic:
   * p98 is the uncapped ground truth). */
 object ContainmentStream {
-  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  import graft.text.TextDedup
-
   private val postingSchema = StructType(Seq(
     StructField("id", LongType), StructField("n", LongType),
     StructField("g", LongType)))
@@ -384,7 +256,6 @@ object ContainmentStream {
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
     eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
       // the batch's postings — persisted because the pair join, the
       // size table, and the state write all consume them
       val exNew = TextDedup.shingleFrame(batch, idCol, textCol, shingleK)
@@ -392,12 +263,8 @@ object ContainmentStream {
           explode(col("sh")).as("g"))
         .filter(col("n") >= lit(minShingles))
         .persist()
-      try {
-        // a replayed batch reads its PREDECESSOR's state, never the
-        // delta its own failed attempt wrote (the SpanDedupStream rule)
-        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema))
+      try VersionedState.step(batch.sparkSession, stateDir, batchId, postingSchema,
+          compactEvery) { seen =>
         val allF = seen.withColumn("is_new", lit(false))
           .unionByName(exNew.withColumn("is_new", lit(true)))
         val ex =
@@ -422,14 +289,8 @@ object ContainmentStream {
           .filter(col("containment") >= minContainment)
           .select("doc_a", "doc_b", "containment")
         writeBatch(pairs, outDir, batchId)
-        val delta = exNew.select("id", "n", "g")
-        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-          VersionedState.write(seen.unionByName(delta), stateDir, batchId,
-            compact = true)
-        else
-          VersionedState.write(delta, stateDir, batchId, compact = false)
+        exNew.select("id", "n", "g")
       } finally exNew.unpersist(false)
-      VersionedState.prune(spark, stateDir, batchId)
     }
 }
 
@@ -440,23 +301,14 @@ object ContainmentStream {
   * BENCHMARK vocabulary by construction, never by the stream. Per
   * micro-batch the batch's grams probe the broadcast frozen benchmark
   * vocabulary (left-semi, so the batch never shuffles) and the NOVEL
-  * hits land as a [[VersionedState]] delta (the SpanDedupStream
-  * contract: replay-safe beforeBatch read, per-batch novelty deltas +
-  * periodic compacts). [[report]] joins the drained hit set back onto
-  * the benchmark gram frame through the exact batch report half
-  * ([[graft.text.TextCuration.dirtinessFrom]] — shared code, so batch
-  * and stream cannot drift), making the drained report equal to batch
-  * evalDirtiness over all rows seen; pinned by the parity test. */
+  * hits land as a [[VersionedState.step]] delta. [[report]] joins the
+  * drained hit set back onto the benchmark gram frame through the exact
+  * batch report half ([[graft.text.TextCuration.dirtinessFrom]] — shared
+  * code, so batch and stream cannot drift), making the drained report
+  * equal to batch evalDirtiness over all rows seen; pinned by the parity
+  * test. */
 object EvalDirtinessStream {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-
   private val hitSchema = StructType(Seq(StructField("g", LongType)))
-
-  private def emptyHits(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hitSchema)
 
   /** Frozen benchmark gram frame (id, g) — build once, pass to both
     * [[attach]] (its distinct g column is the probe vocabulary) and
@@ -472,23 +324,17 @@ object EvalDirtinessStream {
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery = {
     // the probe vocabulary — tiny by the benchmark charter; callers who
-    // run many triggers persist benchGramFrame themselves (the
-    // IdfEmbedStream frozen-frame convention)
+    // run many triggers persist benchGramFrame themselves
     val vocab = benchGramFrame.select("g").distinct()
     eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-        .getOrElse(emptyHits(spark))
-      val batchHits = TextCuration.docGrams(batch, idCol, textCol, k)
-        .select(explode(col("g")).as("g"))
-        .join(broadcast(vocab), Seq("g"), "left_semi")
-        .distinct()
-      val novel = batchHits.join(seen, Seq("g"), "left_anti")
-      if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-        VersionedState.write(seen.union(novel), stateDir, batchId, compact = true)
-      else
-        VersionedState.write(novel, stateDir, batchId, compact = false)
-      VersionedState.prune(spark, stateDir, batchId)
+      VersionedState.step(batch.sparkSession, stateDir, batchId, hitSchema,
+          compactEvery) { seen =>
+        TextCuration.docGrams(batch, idCol, textCol, k)
+          .select(explode(col("g")).as("g"))
+          .join(broadcast(vocab), Seq("g"), "left_semi")
+          .distinct()
+          .join(seen, Seq("g"), "left_anti")
+      }
     }
   }
 
@@ -497,8 +343,7 @@ object EvalDirtinessStream {
   def report(spark: SparkSession, stateDir: String,
              benchGramFrame: DataFrame, minHits: Int = 1): DataFrame =
     TextCuration.dirtinessFrom(benchGramFrame,
-      VersionedState.readSet(spark, stateDir, None).getOrElse(emptyHits(spark)),
-      minHits)
+      VersionedState.readSetOr(spark, stateDir, hitSchema), minHits)
 }
 
 /** Streaming twin of the p158 winnowing match report
@@ -523,10 +368,6 @@ object EvalDirtinessStream {
   * silent; the parity test asserts the audit stays empty on the
   * ordered corpus. */
 object WinnowingStream {
-  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  import graft.text.TextDedup
-
   private val postingSchema = StructType(Seq(
     StructField("id", LongType), StructField("fp", LongType)))
 
@@ -537,15 +378,12 @@ object WinnowingStream {
              trigger: Trigger = Trigger.AvailableNow(),
              compactEvery: Int = 8): StreamingQuery =
     eachBatch(docs, checkpointDir, trigger) { (batch, batchId) =>
-      val spark = batch.sparkSession
       // persisted: the pair join consumes both sides and the state
       // write re-reads the batch postings
       val fpNew = TextDedup.winnowingFingerprints(batch, idCol, textCol, k, w)
         .persist()
-      try {
-        val seen = VersionedState.readSet(spark, stateDir, Some(batchId))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema))
+      try VersionedState.step(batch.sparkSession, stateDir, batchId, postingSchema,
+          compactEvery) { seen =>
         val allF = seen.withColumn("is_new", lit(false))
           .unionByName(fpNew.withColumn("is_new", lit(true)))
         val dfs = allF.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -568,13 +406,7 @@ object WinnowingStream {
           .agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= minShared)
         writeBatch(pairs, outDir, batchId)
-        if (VersionedState.shouldCompact(spark, stateDir, batchId, compactEvery))
-          VersionedState.write(seen.unionByName(fpNew.select("id", "fp")),
-            stateDir, batchId, compact = true)
-        else
-          VersionedState.write(fpNew.select("id", "fp"), stateDir, batchId,
-            compact = false)
+        fpNew.select("id", "fp")
       } finally fpNew.unpersist(false)
-      VersionedState.prune(spark, stateDir, batchId)
     }
 }

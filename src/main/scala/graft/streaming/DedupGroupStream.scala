@@ -59,13 +59,6 @@ import StreamingConf.eachBatch
   */
 object DedupGroupStream {
 
-  /** The current complete (doc_id, group_id) assignment under
-    * `stateDir`, if any — newest write per doc_id wins across the
-    * compact-plus-deltas chain. */
-  def latestState(spark: org.apache.spark.sql.SparkSession,
-                  stateDir: String): Option[DataFrame] =
-    VersionedState.readKeyed(spark, stateDir, "doc_id")
-
   /** The delta batch `batchId` must append given the predecessor
     * assignment `prev`: new labels for the batch's unassigned endpoints
     * plus relabels for every member of a group the batch merged into a

@@ -1,13 +1,14 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared versioned-state table for the `foreachBatch` streaming twins
-  * ([[SpanDedupStream]], [[DedupGroupStream]]) whose state is a
-  * distributed TABLE (a seen-key set, a (doc_id → group_id) assignment)
-  * rather than a per-key state store — component merges and corpus-wide
+  * (the set-state twins through [[step]], and [[DedupGroupStream]])
+  * whose state is a distributed TABLE (a seen-key set, a (doc_id →
+  * group_id) assignment) rather than a per-key state store — component merges and corpus-wide
   * membership tests span arbitrary keys, which no keyed state store can
   * express.
   *
@@ -94,6 +95,31 @@ object VersionedState {
       .reduce(_.unionByName(_)))
   }
 
+  /** [[readSet]], or an empty `schema` frame when there is no version. */
+  def readSetOr(spark: SparkSession, dir: String, schema: StructType,
+                before: Option[Long] = None): DataFrame =
+    readSet(spark, dir, before).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+
+  /** One micro-batch of a SET-state twin. `f` gets the state BELOW
+    * `batchId` (a replayed batch never sees its own failed attempt's
+    * write), writes the batch's output, and returns the rows the batch
+    * adds to the state. Those land as a delta, or, when [[shouldCompact]]
+    * says so, `fold`ed with the prior state into a compact; then
+    * superseded windows are pruned. `fold` is the identity for a set
+    * whose deltas are disjoint, a per-key re-aggregation for mergeable
+    * partials. */
+  def step(spark: SparkSession, dir: String, batchId: Long, schema: StructType,
+           compactEvery: Int, fold: DataFrame => DataFrame = identity)
+          (f: DataFrame => DataFrame): Unit = {
+    val seen = readSetOr(spark, dir, schema, Some(batchId))
+    val delta = f(seen)
+    if (shouldCompact(spark, dir, batchId, compactEvery))
+      write(fold(seen.unionByName(delta)), dir, batchId, compact = true)
+    else write(delta, dir, batchId, compact = false)
+    prune(spark, dir, batchId)
+  }
+
   /** KEYED state (e.g. the dedup-group assignment table): the newest
     * write per key wins — a delta carries the keys its batch added or
     * re-labeled, so later versions override earlier ones row-by-row.
@@ -136,14 +162,15 @@ object VersionedState {
     * delta: `compactEvery` deltas (or more) have accumulated since the
     * newest compact below it, or no compact exists at all yet the delta
     * chain has grown that long. The first batch of a stream writes a
-    * compact (its state IS its novelty), anchoring the chain. */
+    * compact (its state IS its novelty), anchoring the chain;
+    * `compactEvery` ≤ 0 compacts every batch. */
   def shouldCompact(spark: SparkSession, dir: String, batchId: Long,
                     compactEvery: Int): Boolean = {
     val vs = versions(spark, dir).filter(_.id < batchId)
     val floor = vs.find(_.compact).map(_.id).getOrElse {
       return true // no base snapshot yet → this batch anchors one
     }
-    vs.count(v => !v.compact && v.id > floor) >= math.max(1, compactEvery)
+    vs.count(v => !v.compact && v.id > floor) >= compactEvery
   }
 
   /** Write `df` as batch `batchId`'s version — a compact (full state) or

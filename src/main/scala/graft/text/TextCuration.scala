@@ -231,8 +231,8 @@ object TextCuration {
   /** [[tokenChunks]] without the final presentation sort — the exact same
     * row-local transform, legal on an UNBOUNDED (streaming) input because
     * every stage is stateless (project + posexplode): this is the p81
-    * streaming twin, used verbatim by
-    * [[graft.streaming.ChunkStream]]. Batch callers get the sorted
+    * streaming twin itself, run on the stream as is (the
+    * StreamingParitySpec replay). Batch callers get the sorted
     * wrapper above; rows here arrive in scan order. */
   def tokenChunksUnordered(df: DataFrame, idCol: String, textCol: String,
                            chunkTokens: Int = 32, overlap: Int = 8): DataFrame = {
@@ -737,8 +737,8 @@ object TextCuration {
     * (column `f`): the ≤mBits-row distinct position set (the relational
     * bitset) and the distinct fingerprints (the exact ground truth). The
     * build half a deployment runs offline and ships to ingest workers —
-    * shared with [[graft.streaming.BloomProbeStream]] so batch and stream
-    * cannot drift on the position rule. */
+    * shared with the stream replay of [[bloomProbeAgainst]] so batch and
+    * stream cannot drift on the position rule. */
   def bloomSeenTables(fps: DataFrame, mBits: Long = 64L): (DataFrame, DataFrame) = (
     fps.select(explode(bloomPositions(col("f"), mBits)).as("pos")).distinct(),
     fps.select(col("f")).distinct().select(col("f"), lit(true).as("__hit")))

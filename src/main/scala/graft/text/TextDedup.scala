@@ -376,8 +376,8 @@ object TextDedup {
     // them and the submitted plan tokenizes + shingles the corpus once
     // per branch. The checkpointed (id, sh) frame is one fixed-width-ish
     // row per document — strictly cheaper than the rebuilds at any scale
-    // (the p122/p152 materialization convention); hash(id) partitioning
-    // from the repartition survives into the checkpoint blocks.
+    // (the p122/p152 materialization convention); the checkpoint does not
+    // keep a hash(id) layout (under AQE it is UnknownPartitioning).
     val docs = shingleFrame(df, idCol, textCol, shingleK).transform(graft.ops.Adaptive.materialize)
     // banded (id, band, bucket) only — 3 small columns; the shingle sets
     // rejoin for verification instead of riding through the self-join. The

@@ -45,12 +45,12 @@ class RehearseSpec extends SparkSpec {
       "percentiles" -> "rows,bucketed_sec,naive_sec"),
     expect("cc", "500", "1")(
       "dedup_groups_cc" -> "edges,rep,sec,gc_sec,rounds,$snap"),
-    // every doc below id 1000 is in the held-out set, so at 300 docs the
-    // scrub empties them all and no split key follows "sec"
+    // the held-out set is the first 30 of the 300 docs, so docs reach the
+    // split; at this size they hash to train and val, none to test
     expect("funnel", "300")(Seq("exact_dedup", "keeper_join", "simhash_pairs", "cc_members",
       "canonical_antijoin", "decontam_scrub", "pii_scrub", "quality_gate", "mixture_sample")
       .map(s => s"funnel_$s" -> "corpus,docs,sec,rows,$snap") :+
-      ("funnel_split" -> "corpus,docs,sec,$snap"): _*),
+      ("funnel_split" -> "corpus,docs,sec,train,val,$snap"): _*),
     expect("skew", "300")(("skew_corpus" -> "docs,s,hottest_token_share") +:
       Seq("span_dedup", "scoped_dedup", "winnowing", "ngram_jaccard")
         .map(s => s"skew_$s" -> "docs,s,sec,p99_over_median,$snap"): _*),
@@ -107,9 +107,15 @@ class RehearseSpec extends SparkSpec {
       "composed_stream" -> ("batches,docs_per_batch,seen_keys,budget_per_source,kept_rows," +
         "src0,src1,src2,src3,src4,dedup_wall_sec,gate_mix_wall_sec,end_to_end_sec")))
 
+  private def graftTemp(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).list().filter(_.startsWith("graft-")).toSet
+
   for ((rung, args, ops) <- cases)
     s"Rehearse $rung" should s"print its records at its smallest size (${args.mkString(" ")})" in {
+      val before = graftTemp()
       keysByOp(run(rung, args: _*)()) shouldBe ops
+      // the stream rungs delete their chunk, state, checkpoint and output dirs
+      if (Set("stream-state", "composed")(rung)) graftTemp() -- before shouldBe empty
     }
 
   "Rehearse corpus" should "print its per-op records and honour SPARK_GRAFT_OPS and SPARK_GRAFT_CORPUS" in {

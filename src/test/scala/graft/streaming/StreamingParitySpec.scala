@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
 import graft.ops.ParkingAnalytics
@@ -65,8 +65,50 @@ class StreamingParitySpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
       .start()
+    drain(q)
+  }
+
+  private def drain(q: StreamingQuery): Unit = {
     q.awaitTermination(180000)
     assert(!q.isActive, "stream did not terminate")
+  }
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** `df` ordered by `order` as JSON-lines files of ⌈rows / files⌉ rows
+    * with increasing mtimes, and a maxFilesPerTrigger=1 stream with
+    * `df`'s schema that replays them in that order, one file per
+    * micro-batch. */
+  private def chunked(df: DataFrame, order: String, files: Int = 5): DataFrame = {
+    val dir = Files.createTempDirectory("graft-chunks-json")
+    val lines = df.orderBy(order).select(to_json(struct(df.columns.map(col): _*)))
+      .collect().map(_.getString(0))
+    lines.grouped(math.max(1, math.ceil(lines.length.toDouble / files).toInt)).zipWithIndex
+      .foreach { case (ls, i) =>
+        val f = dir.resolve(f"chunk-$i%03d.json")
+        Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
+        f.toFile.setLastModified(1700000000000L + i * 60000L)
+      }
+    spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).json(dir.toString)
+  }
+
+  /** The id-ordered documents (with their `lang` when asked) as a
+    * 5-micro-batch stream: the cross-batch ordering contract of the
+    * first-seen twins. */
+  private def docStream(withLang: Boolean = false): DataFrame =
+    chunked(graft.sources.Tables.documents(spark, sfDir)
+      .select("doc_id", "text" +: (if (withLang) Seq("lang") else Nil): _*), "doc_id")
+
+  /** A row-local operator over frozen inputs is its own streaming twin:
+    * replay `stream` through `op` with [[StreamingConf.eachBatch]] and
+    * [[StreamingConf.writeBatch]], and read the drained output back
+    * without its `batch` partition column. */
+  private def replayed(stream: DataFrame)(op: DataFrame => DataFrame): DataFrame = {
+    val out = tmp("graft-replay-out")
+    drain(StreamingConf.eachBatch(stream, tmp("graft-replay-ckpt"), Trigger.AvailableNow()) {
+      (batch, id) => StreamingConf.writeBatch(op(batch), out, id)
+    })
+    spark.read.parquet(out).drop("batch")
   }
 
   "StreamingConf" should "have the RocksDB provider active for this suite" in {
@@ -192,12 +234,9 @@ class StreamingParitySpec extends SparkSpec {
     val schema = StructType(Seq(StructField("doc_a", LongType), StructField("doc_b", LongType)))
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val stateDir = Files.createTempDirectory("graft-ccstate").toString
-    val ckpt = Files.createTempDirectory("graft-ccckpt").toString
-    val q = DedupGroupStream.attach(stream, "doc_a", "doc_b", stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "pair stream did not terminate")
-    val got = DedupGroupStream.latestState(spark, stateDir).get
+    val stateDir = tmp("graft-ccstate")
+    drain(DedupGroupStream.attach(stream, "doc_a", "doc_b", stateDir, tmp("graft-ccckpt")))
+    val got = VersionedState.readKeyed(spark, stateDir, "doc_id").get
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.text.TextDedup.duplicateGroups(
         chunks.flatten.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
@@ -220,17 +259,12 @@ class StreamingParitySpec extends SparkSpec {
 
     // same pairs with compactEvery = 1: the mid-stream compact (c2 folds
     // c0 + d1 + batch 2's merge) must resolve to the identical assignment
-    val stateDir2 = Files.createTempDirectory("graft-ccstate2").toString
-    val ckpt2 = Files.createTempDirectory("graft-ccckpt2").toString
-    val q2 = DedupGroupStream.attach(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(dir.toString),
-      "doc_a", "doc_b", stateDir2, ckpt2, compactEvery = 1)
-    q2.awaitTermination(180000)
-    assert(!q2.isActive, "compacting pair stream did not terminate")
+    val stateDir2 = tmp("graft-ccstate2")
+    drain(DedupGroupStream.attach(stream, "doc_a", "doc_b", stateDir2, tmp("graft-ccckpt2"),
+      compactEvery = 1))
     new java.io.File(stateDir2).listFiles().filter(_.isDirectory)
       .map(_.getName).sorted shouldBe Array("c0", "c2", "d1")
-    DedupGroupStream.latestState(spark, stateDir2).get
+    VersionedState.readKeyed(spark, stateDir2, "doc_id").get
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe batch
   }
 
@@ -280,24 +314,9 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   "ExactDedupStream" should "keep one survivor per batch-dedup content group across micro-batches" in {
-    import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-docs-json")
-    val lines = docsDf.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"chunk-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
     val got = ArrayBuffer.empty[(Long, Long, Long)]
-    runStream(ExactDedupStream.firstSeen(stream, "doc_id", "text"), "append") { b =>
+    runStream(ExactDedupStream.firstSeen(docStream(), "doc_id", "text"), "append") { b =>
       b.collect().foreach(r => got.synchronized {
         got += ((r.getLong(0), r.getLong(1), r.getLong(2)))
       })
@@ -310,23 +329,12 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   "ChunkStream" should "emit exactly the batch tokenChunks rows (p81) across micro-batches" in {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // chunking is row-local, so the batch transform minus its
+    // presentation sort is its own streaming twin
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-chunk-json")
-    val lines = docsDf.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"chunk-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
     val got = ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
-    runStream(ChunkStream.chunks(stream, "doc_id", "text"), "append") { b =>
+    runStream(graft.text.TextCuration.tokenChunksUnordered(docStream(), "doc_id", "text"),
+        "append") { b =>
       b.collect().foreach(r => got.synchronized {
         got += ((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       })
@@ -338,25 +346,12 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   "PackingStream" should "match batch sequencePacking per shard (p82) across id-ordered micro-batches" in {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-pack-json")
     // shard = doc_id % 3; chunks are GLOBALLY id-ordered, so each shard's
     // documents arrive id-ordered across micro-batches (the stated
     // contract) while every micro-batch mixes all three shards
-    val lines = docsDf.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"),
-        pmod(col("doc_id"), lit(3)).as("shard"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"chunk-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("shard", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
+    val stream = chunked(docsDf.select(col("doc_id"),
+      pmod(col("doc_id"), lit(3)).as("shard"), col("text")), "doc_id")
     val budget = 128L
     val got = ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
     runStream(PackingStream.packed(stream, "shard", "doc_id", "text", budget).toDF(), "append") { b =>
@@ -474,37 +469,7 @@ class StreamingParitySpec extends SparkSpec {
     got.sortBy(_.head.asInstanceOf[Long]) shouldBe batch.toSeq.sortBy(_.head.asInstanceOf[Long])
   }
 
-  /** id-ordered JSON-lines doc files (5 of them, increasing mtimes) so a
-    * maxFilesPerTrigger=1 file stream replays the documents table
-    * id-ordered across ≥5 micro-batches — the cross-batch ordering
-    * contract of the span-dedup twin. */
-  private def dumpDocsAsJson(withLang: Boolean = false): String = {
-    val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-docs-json")
-    val cols = if (withLang) Seq(col("doc_id"), col("text"), col("lang"))
-               else Seq(col("doc_id"), col("text"))
-    val lines = docsDf.orderBy("doc_id")
-      .select(to_json(struct(cols: _*)).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"docs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    dir.toString
-  }
-
-  private def docStream(dir: String, withLang: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val base = Seq(
-      StructField("doc_id", LongType), StructField("text", StringType))
-    val schema = StructType(
-      if (withLang) base :+ StructField("lang", StringType) else base)
-    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(dir)
-  }
-
   "MixtureSampleStream" should "match batch tokenBudgetSample per key (p96) across id-ordered micro-batches" in {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // the p96 input shape, precomputed in batch: (id, predicted_lang,
     // n_tokens) — the twin under test is the SAMPLER, not the upstream
     // lang-id/stats (those are stateless scan-side projections)
@@ -514,19 +479,7 @@ class StreamingParitySpec extends SparkSpec {
       .join(graft.text.TextStats.stats(docsDf, "doc_id", "text")
         .select(col("id"), col("n_tokens")), "id")
       .persist()
-    val dir = Files.createTempDirectory("graft-mix-json")
-    val lines = rows.orderBy("id")
-      .select(to_json(struct(col("id"), col("predicted_lang"), col("n_tokens"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"mix-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("predicted_lang", StringType), StructField("n_tokens", LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
+    val stream = chunked(rows.select("id", "predicted_lang", "n_tokens"), "id")
     val budget = 4000L // the p96 budget: the dominant lang overruns it
     val got = ArrayBuffer.empty[(Long, String, Long, Long)]
     runStream(MixtureSampleStream
@@ -546,15 +499,11 @@ class StreamingParitySpec extends SparkSpec {
 
   "ContainmentStream" should "accumulate exactly the batch containmentPairs output across micro-batches (p98)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val outDir = Files.createTempDirectory("graft-contain-out").toString
-    val stateDir = Files.createTempDirectory("graft-contain-state").toString
-    val ckpt = Files.createTempDirectory("graft-contain-ckpt").toString
+    val outDir = tmp("graft-contain-out")
+    val stateDir = tmp("graft-contain-state")
     val minC = 0.5 // lower than p94's 0.9 so sf0.001 yields real pairs
-    val q = ContainmentStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", outDir, stateDir, ckpt,
-      graft.text.TextDedup.MaxDf(0), minContainment = minC)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    drain(ContainmentStream.attach(docStream(), "doc_id", "text", outDir, stateDir,
+      tmp("graft-contain-ckpt"), graft.text.TextDedup.MaxDf(0), minContainment = minC))
     val got = spark.read.parquet(outDir).drop("batch").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val batch = graft.text.TextDedup.containmentPairs(docsDf, "doc_id", "text",
@@ -564,8 +513,7 @@ class StreamingParitySpec extends SparkSpec {
     got.sortBy(t => (t._1, t._2)) shouldBe batch.toSeq
     // postings state: one anchoring compact + disjoint per-batch deltas
     // that sum to the corpus's full posting table
-    val dirs = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+    val dirs = stateDirs(stateDir)
     dirs.head shouldBe "c0"
     all(dirs.tail) should startWith("d")
     val stateRows = dirs.map(d => spark.read.parquet(s"$stateDir/$d").count()).sum
@@ -577,19 +525,17 @@ class StreamingParitySpec extends SparkSpec {
     stateRows shouldBe postings
   }
 
+  /** The drained rows of a replay, sorted by their leading id. */
+  private def byId(df: DataFrame): Array[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+
   "DsirScoreStream" should "score a doc stream against a frozen importance model exactly like batch dsirScore (p104)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
     val model = graft.text.ImportanceSampler
       .dsirModel(docsDf, "doc_id", "text", col("lang") === "en")
       .persist()
-    val outDir = Files.createTempDirectory("graft-dsir-out").toString
-    val ckpt = Files.createTempDirectory("graft-dsir-ckpt").toString
-    val q = DsirScoreStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", model, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.ImportanceSampler.dsirScore(_, "doc_id", "text", model)))
     val batch = graft.text.ImportanceSampler
       .dsirScore(docsDf, "doc_id", "text", model)
       .collect().map(_.toSeq)
@@ -605,14 +551,8 @@ class StreamingParitySpec extends SparkSpec {
         docsDf.withColumn("hiq", (col("doc_id") % 2 === 0).cast("int")),
         "doc_id", "text", "hiq")
       .persist()
-    val outDir = Files.createTempDirectory("graft-qscore-out").toString
-    val ckpt = Files.createTempDirectory("graft-qscore-ckpt").toString
-    val q = QualityScoreStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", model, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.QualityScorer.qualityScore(_, "doc_id", "text", model)))
     val batch = graft.text.QualityScorer
       .qualityScore(docsDf, "doc_id", "text", model)
       .collect().map(_.toSeq)
@@ -624,14 +564,8 @@ class StreamingParitySpec extends SparkSpec {
   "BpeTokenizeStream" should "tokenize a doc stream with frozen merges exactly like batch tokenize (p114)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
     val merges = graft.text.BpeTokenizer.trainMerges(docsDf, "text", nMerges = 20)
-    val outDir = Files.createTempDirectory("graft-bpe-out").toString
-    val ckpt = Files.createTempDirectory("graft-bpe-ckpt").toString
-    val q = BpeTokenizeStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", merges, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.BpeTokenizer.tokenize(_, "doc_id", "text", merges)))
     val batch = graft.text.BpeTokenizer
       .tokenize(docsDf, "doc_id", "text", merges)
       .collect().map(_.toSeq)
@@ -641,14 +575,8 @@ class StreamingParitySpec extends SparkSpec {
 
   "RepetitionSignalsStream" should "score a doc stream exactly like batch repetition signals (p131)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val outDir = Files.createTempDirectory("graft-rep-out").toString
-    val ckpt = Files.createTempDirectory("graft-rep-ckpt").toString
-    val q = RepetitionSignalsStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.TextStats.repetitionSignals(_, "doc_id", "text")))
     val batch = graft.text.TextStats
       .repetitionSignals(docsDf, "doc_id", "text")
       .collect().map(_.toSeq)
@@ -658,14 +586,8 @@ class StreamingParitySpec extends SparkSpec {
 
   "GopherQualityStream" should "gate a doc stream exactly like the batch quality rules (p133)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val outDir = Files.createTempDirectory("graft-gq-out").toString
-    val ckpt = Files.createTempDirectory("graft-gq-ckpt").toString
-    val q = GopherQualityStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.TextStats.gopherQualityRules(_, "doc_id", "text")))
     val batch = graft.text.TextStats
       .gopherQualityRules(docsDf, "doc_id", "text")
       .collect().map(_.toSeq)
@@ -678,14 +600,8 @@ class StreamingParitySpec extends SparkSpec {
     val vocab = graft.text.TextStats
       .idfVocabulary(docsDf, "doc_id", "text").persist()
     val nDocs = docsDf.count()
-    val outDir = Files.createTempDirectory("graft-idfemb-out").toString
-    val ckpt = Files.createTempDirectory("graft-idfemb-ckpt").toString
-    val q = IdfEmbedStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", vocab, nDocs, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.TextStats.hashedEmbeddingIdfWith(_, "doc_id", "text", vocab, nDocs)))
     val batch = graft.text.TextStats
       .hashedEmbeddingIdfWith(docsDf, "doc_id", "text", vocab, nDocs)
       .collect().map(_.toSeq)
@@ -698,14 +614,8 @@ class StreamingParitySpec extends SparkSpec {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
     val model = graft.text.LangClassifier
       .langVotedModel(docsDf, "doc_id", "text", "lang").persist()
-    val outDir = Files.createTempDirectory("graft-langid-out").toString
-    val ckpt = Files.createTempDirectory("graft-langid-ckpt").toString
-    val q = LangIdStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", model, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.LangClassifier.langScore(_, "doc_id", "text", model)))
     val batch = graft.text.LangClassifier
       .langScore(docsDf, "doc_id", "text", model)
       .collect().map(_.toSeq)
@@ -721,15 +631,9 @@ class StreamingParitySpec extends SparkSpec {
       .select(TextPrims.charHash(TextPrims.normText(col("text"))).as("f"))
     val (seenPos, seenFp) = graft.text.TextCuration.bloomSeenTables(fps)
     val pos = seenPos.persist(); val sfp = seenFp.persist()
-    val outDir = Files.createTempDirectory("graft-bloom-out").toString
-    val ckpt = Files.createTempDirectory("graft-bloom-ckpt").toString
-    val q = BloomProbeStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", pos, sfp, 64L,
-      outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2)))
+    val got = replayed(docStream())(
+        graft.text.TextCuration.bloomProbeAgainst(_, "doc_id", "text", pos, sfp, 64L))
+      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2)))
     val batch = graft.text.TextCuration
       .bloomSeenProbe(docsDf, "doc_id", "text", col("doc_id") < 25)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2)))
@@ -738,33 +642,20 @@ class StreamingParitySpec extends SparkSpec {
     got.sortBy(_._1) shouldBe batch.toSeq
   }
 
+  /** The embeddings' (vec_id, embedding) rows as an id-ordered stream of
+    * `files` micro-batches. */
+  private def vecStream(files: Int): DataFrame =
+    chunked(graft.sources.Tables.embeddings(spark, sfDir).select("vec_id", "embedding"),
+      "vec_id", files)
+
   "TwoLevelAssignStream" should "assign a vector stream against a frozen two-level quantizer exactly like batch (p125)" in {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     val embDf = graft.sources.Tables.embeddings(spark, sfDir)
     val cents = graft.ann.Similarity
       .lowestIdCentroids(embDf, "vec_id", "embedding", 32)
     val (supers, cells) = graft.ann.Similarity.trainTwoLevel(cents)
-    val dir = Files.createTempDirectory("graft-twolevel-json")
-    val lines = embDf.orderBy("vec_id")
-      .select(to_json(struct(col("vec_id"), col("embedding"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 4)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"vecs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val outDir = Files.createTempDirectory("graft-twolevel-out").toString
-    val ckpt = Files.createTempDirectory("graft-twolevel-ckpt").toString
-    val q = TwoLevelAssignStream.attach(stream, "vec_id", "embedding",
-      supers, cells, wSuper = 2, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val got = replayed(vecStream(4))(_.select(col("vec_id").cast("long").as("vec_id"),
+        graft.ann.Similarity.cellOfTwoLevel(col("embedding"), supers, cells, 2).as("cell")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val batch = embDf.select(col("vec_id").cast("long"),
         graft.ann.Similarity.cellOfTwoLevel(
           col("embedding"), supers, cells, 2).as("cell"))
@@ -773,31 +664,14 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   "IndexIngestStream" should "accumulate a searchable cell-partitioned store equal to batch ingest (p128)" in {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     val embDf = graft.sources.Tables.embeddings(spark, sfDir)
     val cents = graft.ann.Similarity
       .lowestIdCentroids(embDf, "vec_id", "embedding", 8)
     val cb = graft.ann.ProductQuantizer.trainResidualCodebooks(
       embDf, "vec_id", "embedding", cents, m = 16)
-    val dir = Files.createTempDirectory("graft-ingest-json")
-    val lines = embDf.orderBy("vec_id")
-      .select(to_json(struct(col("vec_id"), col("embedding"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 4)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"vecs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val indexPath = Files.createTempDirectory("graft-ingest-idx").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft-ingest-ckpt").toString
-    val q = IndexIngestStream.attach(stream, "vec_id", "embedding",
-      cents, cb, indexPath, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val indexPath = tmp("graft-ingest-idx") + "/store"
+    drain(IndexIngestStream.attach(vecStream(4), "vec_id", "embedding",
+      cents, cb, indexPath, tmp("graft-ingest-ckpt")))
     val queries = embDf.filter(col("vec_id") < 5)
       .select(col("vec_id").cast("long").as("query_id"),
         col("embedding").as("qe"))
@@ -811,7 +685,6 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   "MmrSearchStream" should "score a query stream against the frozen IVFADC+R index exactly like batch p161" in {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     val embDf = graft.sources.Tables.embeddings(spark, sfDir)
     // the frozen artifacts, trained once offline — the p161 train phase
     val cents = graft.ann.Similarity
@@ -819,26 +692,12 @@ class StreamingParitySpec extends SparkSpec {
     val cb = graft.ann.ProductQuantizer.trainResidualCodebooks(
       embDf, "vec_id", "embedding", cents, m = 16)
     // 20 query vectors arrive over 4 micro-batches
-    val dir = Files.createTempDirectory("graft-mmr-json")
-    val lines = embDf.filter(col("vec_id") < 20).orderBy("vec_id")
-      .select(to_json(struct(col("vec_id").cast("long").as("query_id"),
-        col("embedding").as("qe"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(5).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"q-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("query_id", LongType),
-      StructField("qe", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val outDir = Files.createTempDirectory("graft-mmr-out").toString
-    val ckpt = Files.createTempDirectory("graft-mmr-ckpt").toString
-    val q = MmrSearchStream.attach(stream, embDf, "vec_id", "embedding",
-      cents, cb, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val stream = chunked(embDf.filter(col("vec_id") < 20)
+      .select(col("vec_id").cast("long").as("query_id"), col("embedding").as("qe")),
+      "query_id", 4)
+    val outDir = tmp("graft-mmr-out")
+    drain(MmrSearchStream.attach(stream, embDf, "vec_id", "embedding",
+      cents, cb, outDir, tmp("graft-mmr-ckpt")))
     val got = spark.read.parquet(outDir).drop("batch").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
@@ -856,32 +715,19 @@ class StreamingParitySpec extends SparkSpec {
     got.toSeq shouldBe batch.toSeq
   }
 
+  /** The version dirs under a [[VersionedState]] dir, sorted by name. */
+  private def stateDirs(stateDir: String): Array[String] =
+    new java.io.File(stateDir).listFiles().filter(_.isDirectory).map(_.getName).sorted
+
   "SemDedupStream" should "accumulate exactly the batch semanticDedup keep list across id-ordered micro-batches (p103)" in {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     val embDf = graft.sources.Tables.embeddings(spark, sfDir)
     val cents = graft.ann.Similarity
       .trainIvfCentroids(embDf, "vec_id", "embedding")
-    val dir = Files.createTempDirectory("graft-semdedup-json")
-    val lines = embDf.orderBy("vec_id")
-      .select(to_json(struct(col("vec_id"), col("embedding"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"vecs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val outDir = Files.createTempDirectory("graft-semdedup-out").toString
-    val stateDir = Files.createTempDirectory("graft-semdedup-state").toString
-    val ckpt = Files.createTempDirectory("graft-semdedup-ckpt").toString
+    val outDir = tmp("graft-semdedup-out")
+    val stateDir = tmp("graft-semdedup-state")
     val minSim = graft.ops.DocAnalytics.SemDedupMinSim
-    val q = SemDedupStream.attach(stream, "vec_id", "embedding", cents,
-      outDir, stateDir, ckpt, minSim = minSim)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    drain(SemDedupStream.attach(vecStream(5), "vec_id", "embedding", cents,
+      outDir, stateDir, tmp("graft-semdedup-ckpt"), minSim = minSim))
     val got = spark.read.parquet(outDir).drop("batch").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val batch = graft.ann.Similarity
@@ -890,37 +736,19 @@ class StreamingParitySpec extends SparkSpec {
     batch.length.toLong should be < embDf.count() // the prune really bit
     got.sortBy(_._1) shouldBe batch.toSeq
     // state: one anchoring compact + disjoint deltas summing to the corpus
-    val dirs = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+    val dirs = stateDirs(stateDir)
     dirs.head shouldBe "c0"
     val stateRows = dirs.map(d => spark.read.parquet(s"$stateDir/$d").count()).sum
     stateRows shouldBe embDf.count()
   }
 
   "InertiaStream" should "drain to exactly the batch inertiaReport over O(cells) integer state (p159)" in {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     val embDf = graft.sources.Tables.embeddings(spark, sfDir)
     val cents = graft.ann.Similarity
       .trainIvfCentroids(embDf, "vec_id", "embedding")
-    val dir = Files.createTempDirectory("graft-inertia-json")
-    val lines = embDf.orderBy("vec_id")
-      .select(to_json(struct(col("vec_id"), col("embedding"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 4)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"vecs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val stateDir = Files.createTempDirectory("graft-inertia-state").toString
-    val ckpt = Files.createTempDirectory("graft-inertia-ckpt").toString
-    val q = InertiaStream.attach(stream, "vec_id", "embedding", cents,
-      stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val stateDir = tmp("graft-inertia-state")
+    drain(InertiaStream.attach(vecStream(4), "vec_id", "embedding", cents,
+      stateDir, tmp("graft-inertia-ckpt")))
     val got = InertiaStream.report(spark, stateDir).collect().map(_.toSeq)
     val batch = graft.ann.Similarity
       .inertiaReport(embDf, "vec_id", "embedding", cents)
@@ -928,36 +756,17 @@ class StreamingParitySpec extends SparkSpec {
     batch.length should be > 1 // real multi-cell report
     got.toSeq shouldBe batch.toSeq
     // state stays <= C rows of integer partials regardless of stream length
-    val lastState = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).max
+    val lastState = stateDirs(stateDir).max
     spark.read.parquet(s"$stateDir/$lastState").count() should be <= batch.length.toLong
   }
 
   "PrototypicalityStream" should "re-rank to exactly the batch prototypicalityPrune verdict as vectors accumulate (p147)" in {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
     val embDf = graft.sources.Tables.embeddings(spark, sfDir)
     val cents = graft.ann.Similarity
       .trainIvfCentroids(embDf, "vec_id", "embedding")
-    val dir = Files.createTempDirectory("graft-proto-json")
-    val lines = embDf.orderBy("vec_id")
-      .select(to_json(struct(col("vec_id"), col("embedding"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 4)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"vecs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val outDir = Files.createTempDirectory("graft-proto-out").toString
-    val stateDir = Files.createTempDirectory("graft-proto-state").toString
-    val ckpt = Files.createTempDirectory("graft-proto-ckpt").toString
-    val q = PrototypicalityStream.attach(stream, "vec_id", "embedding", cents,
-      outDir, stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val outDir = tmp("graft-proto-out")
+    drain(PrototypicalityStream.attach(vecStream(4), "vec_id", "embedding", cents,
+      outDir, tmp("graft-proto-state"), tmp("graft-proto-ckpt")))
     def verdicts(path: String) = spark.read.parquet(path).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3),
         r.getLong(4), r.getBoolean(5))).sortBy(_._1)
@@ -989,14 +798,8 @@ class StreamingParitySpec extends SparkSpec {
     val model = graft.text.TextStats
       .bigramModel(docsDf.filter(pmod(col("doc_id"), lit(10)) =!= 0), "doc_id", "text")
       .persist()
-    val outDir = Files.createTempDirectory("graft-novelty-out").toString
-    val ckpt = Files.createTempDirectory("graft-novelty-ckpt").toString
-    val q = NoveltyScoreStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", model, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.TextStats.bigramScore(_, "doc_id", "text", model)))
     val batch = graft.text.TextStats.bigramScore(docsDf, "doc_id", "text", model)
       .collect().map(_.toSeq)
     model.unpersist(false)
@@ -1009,14 +812,8 @@ class StreamingParitySpec extends SparkSpec {
     val model = graft.text.TextStats
       .lmModel(docsDf.filter(pmod(col("doc_id"), lit(10)) =!= 0), "doc_id", "text")
       .persist()
-    val outDir = Files.createTempDirectory("graft-lmscore-out").toString
-    val ckpt = Files.createTempDirectory("graft-lmscore-ckpt").toString
-    val q = LmScoreStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", model, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream())(
+      graft.text.TextStats.lmScore(_, "doc_id", "text", model)))
     val batch = graft.text.TextStats.lmScore(docsDf, "doc_id", "text", model)
       .collect().map(_.toSeq)
     model.unpersist(false)
@@ -1028,23 +825,8 @@ class StreamingParitySpec extends SparkSpec {
     val all = graft.sources.Tables.documents(spark, sfDir)
     val bench = all.filter(col("doc_id") < 25).persist()
     val corpus = all.filter(col("doc_id") >= 25)
-    val dir = Files.createTempDirectory("graft-scrub-json")
-    val lines = corpus.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"docs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val outDir = Files.createTempDirectory("graft-scrub-out").toString
-    val ckpt = Files.createTempDirectory("graft-scrub-ckpt").toString
-    val q = SpanScrubStream.attach(
-      docStream(dir.toString), bench, "doc_id", "text", outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(chunked(corpus.select("doc_id", "text"), "doc_id"))(
+      graft.text.TextDedup.spanScrub(_, bench, "doc_id", "text")))
     val batch = graft.text.TextDedup.spanScrub(corpus, bench, "doc_id", "text")
       .collect().map(_.toSeq)
     bench.unpersist(false)
@@ -1056,15 +838,8 @@ class StreamingParitySpec extends SparkSpec {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
     val thr = graft.text.TextStats
       .langQualityThresholds(docsDf, "doc_id", "text", "lang").persist()
-    val outDir = Files.createTempDirectory("graft-gate-out").toString
-    val ckpt = Files.createTempDirectory("graft-gate-ckpt").toString
-    val q = LangGateStream.attach(
-      docStream(dumpDocsAsJson(withLang = true), withLang = true),
-      "doc_id", "text", "lang", thr, outDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val got = byId(replayed(docStream(withLang = true))(
+      graft.text.TextStats.langQualityGateWith(_, "doc_id", "text", "lang", thr)))
     val batch = graft.text.TextStats
       .langQualityGate(docsDf, "doc_id", "text", "lang")
       .collect().map(_.toSeq)
@@ -1075,13 +850,9 @@ class StreamingParitySpec extends SparkSpec {
 
   "KeyMassStream" should "drain to exactly the batch mixture-weights AND UniMax reports over one shared state (p120/p155)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val stateDir = Files.createTempDirectory("graft-mass-state").toString
-    val ckpt = Files.createTempDirectory("graft-mass-ckpt").toString
-    val q = KeyMassStream.attach(
-      docStream(dumpDocsAsJson(withLang = true), withLang = true),
-      "lang", "text", stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val stateDir = tmp("graft-mass-state")
+    drain(KeyMassStream.attach(docStream(withLang = true), "lang", "text", stateDir,
+      tmp("graft-mass-ckpt")))
     val gotW = KeyMassStream.weightsReport(spark, stateDir)
       .collect().map(_.toSeq)
     val batchW = graft.text.TextCuration.mixtureWeights(
@@ -1095,21 +866,15 @@ class StreamingParitySpec extends SparkSpec {
       .collect().map(_.toSeq)
     gotU.toSeq shouldBe batchU.toSeq
     // state stays <= C rows of integer partials
-    val lastState = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).max
+    val lastState = stateDirs(stateDir).max
     spark.read.parquet(s"$stateDir/$lastState").count() should be <= batchW.length.toLong
   }
 
   "WinnowingStream" should "accumulate exactly the batch winnowingPairs output across micro-batches (p158)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val outDir = Files.createTempDirectory("graft-winnow-out").toString
-    val stateDir = Files.createTempDirectory("graft-winnow-state").toString
-    val ckpt = Files.createTempDirectory("graft-winnow-ckpt").toString
-    val q = WinnowingStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", outDir, stateDir, ckpt,
-      graft.text.TextDedup.MaxDf(16))
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val outDir = tmp("graft-winnow-out")
+    drain(WinnowingStream.attach(docStream(), "doc_id", "text", outDir,
+      tmp("graft-winnow-state"), tmp("graft-winnow-ckpt"), graft.text.TextDedup.MaxDf(16)))
     val got = spark.read.parquet(outDir).drop("batch").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
@@ -1127,22 +892,10 @@ class StreamingParitySpec extends SparkSpec {
     val all = graft.sources.Tables.documents(spark, sfDir)
     val bench = all.filter(col("doc_id") < 25).persist()
     val corpus = all.filter(col("doc_id") >= 25)
-    val dir = Files.createTempDirectory("graft-dirty-json")
-    val lines = corpus.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"docs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val stateDir = Files.createTempDirectory("graft-dirty-state").toString
-    val ckpt = Files.createTempDirectory("graft-dirty-ckpt").toString
+    val stateDir = tmp("graft-dirty-state")
     val bg = EvalDirtinessStream.benchGrams(bench, "doc_id", "text").persist()
-    val q = EvalDirtinessStream.attach(
-      docStream(dir.toString), "doc_id", "text", bg, stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    drain(EvalDirtinessStream.attach(chunked(corpus.select("doc_id", "text"), "doc_id"),
+      "doc_id", "text", bg, stateDir, tmp("graft-dirty-ckpt")))
     val got = EvalDirtinessStream.report(spark, stateDir, bg)
       .collect().map(_.toSeq)
     val batch = graft.text.TextCuration.evalDirtiness(
@@ -1152,8 +905,7 @@ class StreamingParitySpec extends SparkSpec {
     batch.exists(_(2).asInstanceOf[Long] > 0L) shouldBe true // real leakage found
     got shouldBe batch.toSeq
     // the state is bounded by the BENCHMARK vocabulary, never the stream
-    val stateRows = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(d => spark.read.parquet(d.getPath).count()).sum
+    val stateRows = stateDirs(stateDir).map(d => spark.read.parquet(s"$stateDir/$d").count()).sum
     val benchVocab = batch.map(_(1).asInstanceOf[Long]).sum
     stateRows should be <= benchVocab
   }
@@ -1166,22 +918,9 @@ class StreamingParitySpec extends SparkSpec {
       .select(col("doc_id"), concat(col("text"), lit("\n"),
         substring(col("text"), 1, 30),
         lit("\nshared boilerplate line")).as("text"))
-    val dir = Files.createTempDirectory("graft-line-json")
-    val lines = aug.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines.grouped(math.max(1, lines.length / 5)).zipWithIndex.foreach { case (ls, i) =>
-      val f = dir.resolve(f"docs-$i%03d.json")
-      Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-      f.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val outDir = Files.createTempDirectory("graft-line-out").toString
-    val stateDir = Files.createTempDirectory("graft-line-state").toString
-    val ckpt = Files.createTempDirectory("graft-line-ckpt").toString
-    val q = LineDedupStream.attach(
-      docStream(dir.toString), "doc_id", "text", outDir, stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val outDir = tmp("graft-line-out")
+    drain(LineDedupStream.attach(chunked(aug, "doc_id"), "doc_id", "text", outDir,
+      tmp("graft-line-state"), tmp("graft-line-ckpt")))
     val got = spark.read.parquet(outDir).drop("batch").collect()
       .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
     val batch = graft.text.TextDedup.lineDedup(aug, "doc_id", "text")
@@ -1191,15 +930,17 @@ class StreamingParitySpec extends SparkSpec {
     got shouldBe batch.toSeq
   }
 
+  /** The corpus's distinct span-window keys: the span-dedup state's size. */
+  private def distinctSpanKeys(docsDf: DataFrame): Long = graft.text.TextDedup
+    .spanOccurrences(graft.text.TextDedup.spanTokenFrame(docsDf, "doc_id", "text"), 8)
+    .select("wh").distinct().count()
+
   "SpanDedupStream" should "accumulate exactly the batch spanDedup output across id-ordered micro-batches (p87)" in {
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val outDir = Files.createTempDirectory("graft-span-out").toString
-    val stateDir = Files.createTempDirectory("graft-span-state").toString
-    val ckpt = Files.createTempDirectory("graft-span-ckpt").toString
-    val q = SpanDedupStream.attach(
-      docStream(dumpDocsAsJson()), "doc_id", "text", outDir, stateDir, ckpt)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
+    val outDir = tmp("graft-span-out")
+    val stateDir = tmp("graft-span-state")
+    drain(SpanDedupStream.attach(docStream(), "doc_id", "text", outDir, stateDir,
+      tmp("graft-span-ckpt")))
     val got = spark.read.parquet(outDir).drop("batch").collect()
       .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
     val batch = graft.text.TextDedup.spanDedup(docsDf, "doc_id", "text")
@@ -1211,17 +952,14 @@ class StreamingParitySpec extends SparkSpec {
     // compact is exactly the corpus's distinct key set — so per-batch
     // state writes sum to |distinct keys|, instead of the
     // sum-of-prefixes a full rewrite per batch would cost
-    val dirs = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+    val dirs = stateDirs(stateDir)
     dirs.head shouldBe "c0"
     all(dirs.tail) should startWith("d")
     val stateRows = dirs.map(d =>
       spark.read.parquet(s"$stateDir/$d").count()).sum
-    val distinctKeys = graft.text.TextDedup
-      .spanOccurrences(graft.text.TextDedup.spanTokenFrame(docsDf, "doc_id", "text"), 8)
-      .select("wh").distinct().count()
+    val distinctKeys = distinctSpanKeys(docsDf)
     stateRows shouldBe distinctKeys
-    SpanDedupStream.latestState(spark, stateDir).get.count() shouldBe distinctKeys
+    VersionedState.readSet(spark, stateDir).get.count() shouldBe distinctKeys
   }
 
   it should "hold batch parity when compaction and pruning fire mid-stream" in {
@@ -1231,38 +969,33 @@ class StreamingParitySpec extends SparkSpec {
     // c0, d1, c2, d3, c4, d5, c6 and the prune at batch 5 — the first
     // with THREE compacts below it — deletes the c0 window
     val docsDf = graft.sources.Tables.documents(spark, sfDir)
-    val dir7 = Files.createTempDirectory("graft-spanc-json")
-    val lines7 = docsDf.orderBy("doc_id")
-      .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
-      .collect().map(_.getString(0))
-    lines7.grouped(math.max(1, math.ceil(lines7.length / 7.0).toInt))
-      .zipWithIndex.foreach { case (ls, i) =>
-        val f = dir7.resolve(f"docs-$i%03d.json")
-        Files.write(f, String.join("\n", ls.toSeq: _*).getBytes("UTF-8"))
-        f.toFile.setLastModified(1700000000000L + i * 60000L)
-      }
-    val outDir = Files.createTempDirectory("graft-spanc-out").toString
-    val stateDir = Files.createTempDirectory("graft-spanc-state").toString
-    val ckpt = Files.createTempDirectory("graft-spanc-ckpt").toString
-    val q = SpanDedupStream.attach(
-      docStream(dir7.toString), "doc_id", "text", outDir, stateDir, ckpt,
-      compactEvery = 1)
-    q.awaitTermination(180000)
-    assert(!q.isActive, "stream did not terminate")
-    val got = spark.read.parquet(outDir).drop("batch").collect()
+    val stream = chunked(docsDf.select("doc_id", "text"), "doc_id", files = 7)
+    val outDir = tmp("graft-spanc-out")
+    val stateDir = tmp("graft-spanc-state")
+    val ckpt = tmp("graft-spanc-ckpt")
+    def start() = drain(SpanDedupStream.attach(stream, "doc_id", "text", outDir, stateDir,
+      ckpt, compactEvery = 1))
+    start()
+    def got = spark.read.parquet(outDir).drop("batch").collect()
       .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
     val batch = graft.text.TextDedup.spanDedup(docsDf, "doc_id", "text")
       .collect().map(_.toSeq)
     got shouldBe batch.toSeq
     // compaction really fired and pruning really deleted the old window
-    val dirs = new java.io.File(stateDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+    val dirs = stateDirs(stateDir)
     dirs.count(_.startsWith("c")) should be >= 2 // c0 + at least one fold
     dirs should not contain "c0"                 // oldest window pruned
     // the surviving chain still resolves to the full distinct key set
-    val distinctKeys = graft.text.TextDedup
-      .spanOccurrences(graft.text.TextDedup.spanTokenFrame(docsDf, "doc_id", "text"), 8)
-      .select("wh").distinct().count()
-    SpanDedupStream.latestState(spark, stateDir).get.count() shouldBe distinctKeys
+    val distinctKeys = distinctSpanKeys(docsDf)
+    VersionedState.readSet(spark, stateDir).get.count() shouldBe distinctKeys
+    // a crash after batch 6's state write but before its checkpoint
+    // commit: the restart replays batch 6, which must read its
+    // predecessor's state (not its own write) and rewrite the same output
+    val commits = new java.io.File(ckpt, "commits")
+    new java.io.File(commits, "6").delete() shouldBe true
+    start()
+    commits.list() should contain("6")
+    got shouldBe batch.toSeq
+    VersionedState.readSet(spark, stateDir).get.count() shouldBe distinctKeys
   }
 }

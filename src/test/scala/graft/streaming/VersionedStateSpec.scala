@@ -8,10 +8,10 @@ import graft.SparkSpec
 
 /** Helper-level contract of [[VersionedState]]: delta/compact
   * resolution, the replay read (a batch sees only versions BELOW its own
-  * id), compaction cadence, pruning, incomplete-write invisibility, and
-  * legacy `v<id>` full-rewrite dirs reading as compacts. The streaming
-  * twins' parity cases prove the end-to-end semantics; this spec pins
-  * the state machine they stand on. */
+  * id), compaction cadence, the set-state step, pruning,
+  * incomplete-write invisibility, and legacy `v<id>` full-rewrite dirs
+  * reading as compacts. The streaming twins' parity cases prove the
+  * end-to-end semantics; this spec pins the state machine they stand on. */
 class VersionedStateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,6 +96,26 @@ class VersionedStateSpec extends SparkSpec {
     // versions at/above its id are excluded from the count
     VersionedState.write(keys(1L, 2L, 3L, 4L, 5L), dir, 4L, compact = true)
     VersionedState.shouldCompact(spark, dir, 4L, 3) shouldBe true
+  }
+
+  "VersionedState.step" should "give f the state below its batch and write a delta or a folded compact" in {
+    val dir = freshDir()
+    def step(id: Long, compactEvery: Int, ks: Long*): Seq[Long] = {
+      var seen = Seq.empty[Long]
+      VersionedState.step(spark, dir, id, keys().schema, compactEvery, _.distinct()) { s =>
+        seen = s.collect().map(_.getLong(0)).sorted.toSeq
+        keys(ks: _*)
+      }
+      seen
+    }
+    step(0L, 8, 1L, 2L) shouldBe Nil // no version yet: an empty frame, then the anchor
+    step(1L, 8, 3L) shouldBe Seq(1L, 2L)
+    step(1L, 8, 3L) shouldBe Seq(1L, 2L) // a replay never sees its own delta
+    step(2L, 0, 2L, 4L) shouldBe Seq(1L, 2L, 3L) // compactEvery 0: every batch compacts
+    new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted shouldBe Array("c0", "c2", "d1")
+    spark.read.parquet(s"$dir/c2").collect().map(_.getLong(0)).sorted shouldBe
+      Array(1L, 2L, 3L, 4L)
   }
 
   "VersionedState.prune" should "keep the newest two compact windows and drop everything below" in {
