@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness: executes every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. Each query is fully materialized through a
@@ -15,13 +14,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session(cpus, "WARN")
     // warm-up: scan each input table and run one tiny representative of
     // the codegen shapes (HOF fold + custom expressions + agg + join), so
     // JVM/session/whole-stage-codegen startup is not billed to whichever

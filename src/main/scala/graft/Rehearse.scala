@@ -88,21 +88,12 @@ object Rehearse {
         sys.exit(2)
     }
 
-  /** local[SPARK_GRAFT_CPUS] session with shuffle partitions = cpus, UTC,
-    * no UI, ERROR log level: the configuration every curve in
-    * bench_records/ was recorded under. Also the session of
-    * [[QuickVerify]], [[ExplainDump]] and [[FinalPlan]]. */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+  /** [[EngineConf.session]] at SPARK_GRAFT_CPUS (default 32) and ERROR log
+    * level: the configuration every curve in bench_records/ was recorded
+    * under. Also the session of [[QuickVerify]], [[ExplainDump]] and
+    * [[FinalPlan]]. */
+  def session(): SparkSession =
+    EngineConf.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "ERROR")
 
   // ---- measurement ----
 

@@ -56,8 +56,10 @@ object TextRungs {
   /** The corpus-shaped operators at ~1×/10×/100× of sf0.1's 5 000 docs,
     * on both corpora: dedup (p13, p14, p15b and its prefix twin, p87),
     * packing (p82), the p88–p90 family, p138, p141, p158 and the p89
-    * representative stage; then CC (1M/10M edges take union-find, 30M the
-    * iterative loop) and the ranged as-of (p44, 3 keys). SPARK_GRAFT_OPS
+    * representative stage; then, on the default ladder only (no sizes
+    * given, since the doc sizes do not size them), CC (1M/10M edges take
+    * union-find, 30M the iterative loop) and the ranged as-of at 1M/10M/100M
+    * rows (p44, 3 keys). SPARK_GRAFT_OPS
     * limits the run to op-name prefixes, SPARK_GRAFT_CORPUS to one corpus;
     * the corpora are not built when no corpus op is selected. */
   def corpus(c: Ctx): Unit = {
@@ -110,14 +112,15 @@ object TextRungs {
       }
       corpus.unpersist(false)
     }
-    for (n <- Seq(1000000L, 10000000L, 30000000L) if opOn("dedup_groups_cc")) {
+    val defaultLadder = c.args.isEmpty
+    for (n <- Seq(1000000L, 10000000L, 30000000L) if defaultLadder && opOn("dedup_groups_cc")) {
       val edges = persisted(Synth.edges(spark, n))
       val cc = time(mat(TextDedup.duplicateGroups(edges, "doc_a", "doc_b")))
       edges.unpersist(false)
       emit("dedup_groups_cc", "edges" -> n, "sec" -> Fixed(cc, 2))
     }
     // p44's shape: 3 keys, snapshots every 100th tick, adaptive ranges
-    for (n <- Seq(1000000L, 10000000L, 100000000L) if opOn("asof_ranged")) {
+    for (n <- Seq(1000000L, 10000000L, 100000000L) if defaultLadder && opOn("asof_ranged")) {
       val key = concat(lit("lot"), pmod(col("id"), lit(3)).cast("string")).as("key")
       val left = persisted(spark.range(n).select(
         key, (col("id") / 3).as("t"), col("id").as("left_id")))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,13 +11,7 @@ object Verify {
       case Array(s, o, only) => (s, o, only.split(",").map(_.trim).toSet)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session(cpus, "WARN")
     new java.io.File(outDir).mkdirs()
     // refresh oracle-replay artifacts (p50's trained centroids): deleting
     // up front makes a stale artifact from a previous run fail the oracle
@@ -27,7 +20,7 @@ object Verify {
     // user-configurable (-Dgraft.oracle.dir) and may be a shared root;
     // recursively clearing it would destroy unrelated content.
     graft.ops.DocAnalytics.oracleArtifactPaths.foreach(p =>
-      graft.sources.FsUtil.deleteRecursively(new java.io.File(p)))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
     // ...and anything ELSE under the artifact dir is a LOUD error, not a
     // silent survivor: an unknown entry is either a stale artifact from a
     // version whose path fell off oracleArtifactPaths (the silent-stale

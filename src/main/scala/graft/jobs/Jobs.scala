@@ -87,16 +87,14 @@ object Jobs {
     puts.sum
   }
 
-  /** Every streaming entry point below runs on RocksDB-backed state
-    * ([[StreamingConf.useRocksDbState]]). NOTE the scope: Spark exposes the
-    * provider only as a session conf, so it applies to every stream started
-    * on this session afterwards, not just this job (existing checkpoints
-    * keep their original provider).
-    *
-    * Every entry point starts its stream through
-    * [[StreamingConf.eachBatch]], which installs the session's checkpoint
-    * manager, [[graft.streaming.LocalCheckpointFileManager]] (same
-    * session-wide scope; its limits are in [[StreamingConf]]).
+  /** Every streaming entry point below starts its stream through
+    * [[StreamingConf.eachBatch]], so it runs on [[graft.EngineConf.Stream]]:
+    * RocksDB-backed state and the
+    * [[graft.streaming.LocalCheckpointFileManager]]. NOTE the scope: Spark
+    * reads both only from session conf, so the start adopts them on the
+    * caller's session, where they also apply to streams started on it
+    * afterwards (existing checkpoints keep their original provider; the
+    * limits are in [[StreamingConf]]).
     *
     * Start `df` into a per-row sink action, one `foreachPartition` per
     * micro-batch: the shape every keyed streaming job below shares.
@@ -105,7 +103,6 @@ object Jobs {
     * one ends. */
   private def startEach(df: DataFrame, outputMode: String, checkpoint: String,
                         availableNow: Boolean)(each: Row => Unit): StreamingQuery = {
-    StreamingConf.useRocksDbState(df.sparkSession)
     val trigger = if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0L)
     StreamingConf.eachBatch(df, checkpoint, trigger, outputMode) { (batch, _) =>
       batch.foreachPartition { (it: Iterator[Row]) => it.foreach(each) }

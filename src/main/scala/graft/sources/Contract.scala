@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.util.{Failure, Success, Try}
 
+import graft.EngineConf
+
 /** Data-contract preflight (round-10 postmortem: the driver regenerated
   * `/root/testdata` with `events.ts` re-encoded from TIMESTAMP(NANOS) to
   * timestamp[us], and 41 queries died one by one as analysis exceptions).
@@ -81,79 +83,70 @@ object Contract {
 
   /** Schema diff of every expected table under `dir`, plus the
     * [[EmbeddingDim]] and ts-plausibility value checks. Returns one line
-    * per drift; empty = contract holds. Restores the legacy nanos conf it
-    * needs for the events read, so the shared session is left as found. */
+    * per drift; empty = contract holds. Adopts [[graft.EngineConf.Read]]
+    * as [[Tables.events]] does, so a nanos-encoded ts surfaces as bigint
+    * (accepted) instead of failing the footer read itself; a session
+    * that already holds the group is left unchanged. */
   def probe(spark: SparkSession, dir: String): Seq[String] = {
-    // same legacy conf as Tables.events, so a nanos-encoded ts surfaces as
-    // bigint (accepted) instead of failing the footer read itself. Saved
-    // and restored: only Tables.events documents a dependency on it, and
-    // an unrelated later parquet read must not inherit probe state.
-    val confKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prevNanos = Try(spark.conf.get(confKey)).toOption
-    spark.conf.set(confKey, "true")
-    try {
-      val dimDrift = Try {
-        spark.read.parquet(s"$dir/embeddings.parquet")
-          .agg(min(size(col("embedding"))).as("mn"),
-            max(size(col("embedding"))).as("mx"),
-            count(when(col("embedding").isNull, 1)).as("nulls"),
-            count(lit(1)).as("n")).collect()(0)
-      } match {
-        case Failure(_) => Nil // unreadable table is reported by the loop below
-        case Success(r) if r.getLong(3) == 0L =>
-          Seq(s"embeddings.embedding: table empty, cannot verify $EmbeddingDim-dim contract")
-        case Success(r) if r.getLong(2) > 0L =>
-          Seq(s"embeddings.embedding: ${r.getLong(2)} null vector(s)")
-        case Success(r) =>
-          (r.getInt(0), r.getInt(1)) match {
-            case (mn, mx) if mn == EmbeddingDim && mx == EmbeddingDim => Nil
-            case (mn, mx) if mn == mx =>
-              Seq(s"embeddings.embedding: expected $EmbeddingDim elements, got $mn")
-            case (mn, mx) =>
-              Seq(s"embeddings.embedding: expected $EmbeddingDim elements, got ragged $mn..$mx")
+    EngineConf.adopt(spark, EngineConf.Read)
+    val dimDrift = Try {
+      spark.read.parquet(s"$dir/embeddings.parquet")
+        .agg(min(size(col("embedding"))).as("mn"),
+          max(size(col("embedding"))).as("mx"),
+          count(when(col("embedding").isNull, 1)).as("nulls"),
+          count(lit(1)).as("n")).collect()(0)
+    } match {
+      case Failure(_) => Nil // unreadable table is reported by the loop below
+      case Success(r) if r.getLong(3) == 0L =>
+        Seq(s"embeddings.embedding: table empty, cannot verify $EmbeddingDim-dim contract")
+      case Success(r) if r.getLong(2) > 0L =>
+        Seq(s"embeddings.embedding: ${r.getLong(2)} null vector(s)")
+      case Success(r) =>
+        (r.getInt(0), r.getInt(1)) match {
+          case (mn, mx) if mn == EmbeddingDim && mx == EmbeddingDim => Nil
+          case (mn, mx) if mn == mx =>
+            Seq(s"embeddings.embedding: expected $EmbeddingDim elements, got $mn")
+          case (mn, mx) =>
+            Seq(s"embeddings.embedding: expected $EmbeddingDim elements, got ragged $mn..$mx")
+        }
+    }
+    // Value-sanity on ts: normalize exactly as every query will, then pin
+    // min/max inside the plausible-epoch window. Failure of normalizeTs
+    // itself (unknown type) is the footer loop's diff; swallow it here.
+    val tsDrift = Try {
+      Tables.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+        .agg(min(unix_micros(col("ts"))).as("mn"),
+          max(unix_micros(col("ts"))).as("mx")).collect()(0)
+    } match {
+      case Failure(_) => Nil
+      case Success(r) if r.isNullAt(0) =>
+        Seq("events.ts: no non-null values, cannot value-check")
+      case Success(r) =>
+        val (lo, hi) = TsWindowMicros
+        val (mn, mx) = (r.getLong(0), r.getLong(1))
+        if (mn < lo || mx >= hi)
+          Seq(s"events.ts: value-sanity failed: normalized range " +
+            s"[$mn, $mx] micros outside " +
+            "[2000-01-01, 2100-01-01) — int64 ts likely re-encoded in micros/millis " +
+            "(normalizeTs assumes nanos for LongType)")
+        else Nil
+    }
+    dimDrift ++ tsDrift ++ expected.toSeq.sortBy(_._1).flatMap { case (table, cols) =>
+      Try(spark.read.parquet(s"$dir/$table.parquet").schema) match {
+        case Failure(e) =>
+          Seq(s"$table: unreadable (${e.getClass.getSimpleName}: " +
+            s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString})")
+        case Success(schema) =>
+          val actual = schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
+          cols.flatMap { case (name, accepted) =>
+            actual.get(name) match {
+              case None => Seq(s"$table.$name: expected ${accepted.mkString("|")}, column MISSING")
+              case Some(t) if !accepted(t) =>
+                Seq(s"$table.$name: expected ${accepted.mkString("|")}, got $t")
+              case _ => Nil
+            }
           }
       }
-      // Value-sanity on ts: normalize exactly as every query will, then pin
-      // min/max inside the plausible-epoch window. Failure of normalizeTs
-      // itself (unknown type) is the footer loop's diff; swallow it here.
-      val tsDrift = Try {
-        Tables.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
-          .agg(min(unix_micros(col("ts"))).as("mn"),
-            max(unix_micros(col("ts"))).as("mx")).collect()(0)
-      } match {
-        case Failure(_) => Nil
-        case Success(r) if r.isNullAt(0) =>
-          Seq("events.ts: no non-null values, cannot value-check")
-        case Success(r) =>
-          val (lo, hi) = TsWindowMicros
-          val (mn, mx) = (r.getLong(0), r.getLong(1))
-          if (mn < lo || mx >= hi)
-            Seq(s"events.ts: value-sanity failed: normalized range " +
-              s"[$mn, $mx] micros outside " +
-              "[2000-01-01, 2100-01-01) — int64 ts likely re-encoded in micros/millis " +
-              "(normalizeTs assumes nanos for LongType)")
-          else Nil
-      }
-      dimDrift ++ tsDrift ++ expected.toSeq.sortBy(_._1).flatMap { case (table, cols) =>
-        Try(spark.read.parquet(s"$dir/$table.parquet").schema) match {
-          case Failure(e) =>
-            Seq(s"$table: unreadable (${e.getClass.getSimpleName}: " +
-              s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString})")
-          case Success(schema) =>
-            val actual = schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-            cols.flatMap { case (name, accepted) =>
-              actual.get(name) match {
-                case None => Seq(s"$table.$name: expected ${accepted.mkString("|")}, column MISSING")
-                case Some(t) if !accepted(t) =>
-                  Seq(s"$table.$name: expected ${accepted.mkString("|")}, got $t")
-                case _ => Nil
-              }
-            }
-        }
-      }
-    } finally prevNanos match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None    => spark.conf.unset(confKey)
     }
   }
 }

@@ -100,7 +100,7 @@ object Layout {
       aside.renameTo(dir) // restore the original before failing
       throw new IllegalStateException(s"compact: rename $tmp -> $path failed")
     }
-    FsUtil.deleteRecursively(aside)
+    org.apache.commons.io.FileUtils.deleteDirectory(aside)
     n
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.EngineConf
+
 /** Readers for the driver-provided parquet tables (TESTDATA.md).
   *
   * All reads are plain `spark.read.parquet` so Catalyst gets full predicate
@@ -28,14 +30,14 @@ object Tables {
     * Anything else fails loudly here (one line, named table+type) instead of
     * as dozens of downstream analysis exceptions.
     *
-    * Also pins the session timezone to UTC: every date_format/unix_timestamp
-    * downstream depends on it, and callers may hand us an externally built
-    * session. Both confs are session-global; they are set here (not only in
-    * Verify/Bench) so the determinism contract is self-enforcing.
+    * Both the legacy conf and the UTC time zone every date_format /
+    * unix_timestamp downstream depends on are [[graft.EngineConf.Read]].
+    * Callers may hand us an externally built session, so the read adopts
+    * that group: it sets a key only where the session holds another value,
+    * and leaves it set.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    EngineConf.adopt(spark, EngineConf.Read)
     normalizeTs(read(spark, dir, "events"))
   }
 
@@ -65,8 +67,7 @@ object Tables {
     * multi-path parquet read plans all paths as a single relation, so
     * pushdown/pruning apply across the whole union. */
   def eventsUnion(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    EngineConf.adopt(spark, EngineConf.Read)
     normalizeTs(spark.read.parquet(dirs.map(d => s"$d/events.parquet"): _*))
   }
 

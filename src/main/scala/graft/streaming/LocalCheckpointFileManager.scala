@@ -12,10 +12,10 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, File
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
-/** The streaming checkpoint manager [[StreamingConf.useLocalCheckpoints]]
-  * installs: the offset and commit logs, the file-source log, and every
-  * state store's files (HDFS-backed or RocksDB, on executors) go through
-  * it. The path's scheme picks the code path:
+/** The streaming checkpoint manager of [[graft.EngineConf.Stream]]: the
+  * offset and commit logs, the file-source log, and every state store's
+  * files (HDFS-backed or RocksDB, on executors) go through it. The path's
+  * scheme picks the code path:
   *
   *  - `file:` paths, and scheme-less paths when the default file system is
   *    local, are written with `java.nio`. Without Hadoop's native library,

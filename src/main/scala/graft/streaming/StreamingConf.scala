@@ -1,33 +1,37 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** Session configuration for the engine's streams.
+import graft.EngineConf
+
+/** How the engine starts its streams.
+  *
+  * Every engine function that starts a stream goes through [[writeStream]],
+  * which adopts [[graft.EngineConf.Stream]] on the stream's session before
+  * the start: RocksDB-backed state with changelog checkpointing, and
+  * [[LocalCheckpointFileManager]] for the offset and commit logs, the
+  * file-source log and the state stores.
   *
   * State backing (SURVEY.md §4): the default HDFS-backed state store keeps
   * every key in executor heap — fine for the reference's 150-slot
   * universe, fatal when the key space is 100× (per-vehicle sessions over a
   * national fleet). RocksDB spills state to local disk with a bounded
   * block cache, and changelog checkpointing ships per-batch deltas instead
-  * of full snapshots, so state size is bounded by disk, not heap. Callers
-  * opt in per session (the streaming job entry points in
-  * [[graft.jobs.Jobs]] always do); Spark reads the provider at query
-  * start, and existing checkpoints keep their original provider.
+  * of full snapshots, so state size is bounded by disk, not heap. Spark
+  * reads the provider at query start, and existing checkpoints keep their
+  * original provider.
   *
-  * Checkpoint I/O: every engine function that starts a stream goes through
-  * [[writeStream]], which installs [[LocalCheckpointFileManager]] for the
-  * offset and commit logs, the file-source log and the state stores. This
-  * is not a choice a caller makes: the checkpoint path's scheme picks the
-  * code path (local paths use `java.nio`, every other scheme gets Spark's
-  * own manager). Its limits:
-  *  - Spark reads the manager class from ONE session-wide conf, so it also
-  *    applies to streams a caller starts on the same session by hand
-  *    afterwards. Every stream starter sets the same value, so the order
-  *    in which they run does not matter.
-  *  - Only local paths change behaviour. Local checkpoints get no `.crc`
-  *    sidecars; Hadoop's local file system still reads them (and this
-  *    manager reads checkpoints that have sidecars), so an existing
+  * Checkpoint I/O is not a choice a caller makes: the checkpoint path's
+  * scheme picks the code path (local paths use `java.nio`, every other
+  * scheme gets Spark's own manager). The limits of both settings:
+  *  - Spark reads each from ONE session-wide conf, so they also apply to
+  *    streams a caller starts on the same session by hand afterwards.
+  *    Every engine stream start adopts the same values, so the order in
+  *    which they run does not matter.
+  *  - Only local paths change checkpoint behaviour. Local checkpoints get
+  *    no `.crc` sidecars; Hadoop's local file system still reads them (and
+  *    this manager reads checkpoints that have sidecars), so an existing
   *    checkpoint restarts either way.
   *  - No fsync, the same as Hadoop's local file system.
   */
@@ -39,26 +43,10 @@ object StreamingConf {
   /** The Spark conf that names the streaming checkpoint manager class. */
   val CheckpointFileManagerKey: String = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Configure RocksDB-backed state for subsequently started streams. */
-  def useRocksDbState(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    // delta-only commits; snapshot maintenance happens in the background
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    spark
-  }
-
-  /** Route the checkpoints of subsequently started streams through
-    * [[LocalCheckpointFileManager]] (scope and limits above). */
-  def useLocalCheckpoints(spark: SparkSession): SparkSession = {
-    spark.conf.set(CheckpointFileManagerKey, classOf[LocalCheckpointFileManager].getName)
-    spark
-  }
-
-  /** `df.writeStream` with the engine's checkpoint manager installed: the
-    * one way the engine starts a stream. */
+  /** `df.writeStream` on a session holding [[graft.EngineConf.Stream]]:
+    * the one way the engine starts a stream. */
   def writeStream(df: DataFrame): DataStreamWriter[Row] = {
-    useLocalCheckpoints(df.sparkSession)
+    EngineConf.adopt(df.sparkSession, EngineConf.Stream)
     df.writeStream
   }
 

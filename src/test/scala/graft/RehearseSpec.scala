@@ -119,7 +119,6 @@ class RehearseSpec extends SparkSpec {
     }
 
   "Rehearse corpus" should "print its per-op records and honour SPARK_GRAFT_OPS and SPARK_GRAFT_CORPUS" in {
-    // CC and the as-of run at fixed 1M+ sizes; the op filter skips them
     val ops = Seq("exact_dedup", "minhash_neardup", "ngram_jaccard_df64",
       "ngram_jaccard_df64_prefix", "sequence_packing", "span_dedup", "span_scrub",
       "bigram_novelty", "lm_surprisal", "winnowing_pairs", "scoped_dedup",
@@ -128,6 +127,11 @@ class RehearseSpec extends SparkSpec {
       "SPARK_GRAFT_OPS" -> ops.mkString(","), "SPARK_GRAFT_CORPUS" -> "zipf50k")
     keysByOp(lines) shouldBe ops.map(_ -> Set("corpus,docs,sec")).toMap
     lines.filter(_.startsWith("{")).foreach(_ should include("\"corpus\":\"zipf50k\",\"docs\":100,"))
+  }
+
+  it should "run its CC and as-of blocks on the default ladder only" in {
+    run("corpus", "100")("SPARK_GRAFT_OPS" -> "dedup_groups_cc,asof_ranged")
+      .filter(_.startsWith("{")) shouldBe empty
   }
 
   "Rehearse cells" should "print assignment, search and two-level records per cell count" in {
@@ -163,7 +167,7 @@ class RehearseSpec extends SparkSpec {
 
   "the soak's state-bounds check" should "hold a pruned chain and fail on unbounded read fan-in" in {
     def layout(names: String*): String = {
-      val root = Files.createTempDirectory("rehearse-state")
+      val root = tempDir("rehearse-state")
       names.foreach { n =>
         val d: Path = Files.createDirectories(root.resolve(n))
         Files.write(d.resolve("_SUCCESS"), Array.emptyByteArray)

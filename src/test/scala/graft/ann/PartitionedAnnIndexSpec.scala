@@ -15,8 +15,7 @@ class PartitionedAnnIndexSpec extends SparkSpec {
   private def emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
 
   "searchPersistedIndexLut" should "scan only the probed cells' partitions and match in-memory results" in {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ann-part").toString + "/codes_index"
+    val dir = tempDir("graft-ann-part").toString + "/codes_index"
     val e = emb.persist()
     val nCells = 16
     val cents = Similarity.lowestIdCentroids(e, "vec_id", "embedding", nCells)
@@ -68,8 +67,7 @@ class PartitionedAnnIndexSpec extends SparkSpec {
   }
 
   "compactCellPartitionedIndex" should "collapse appended micro-batch files to one per cell, preserving results and pruning" in {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-ann-compact").toString
+    val base = tempDir("graft-ann-compact").toString
     val src = base + "/store"
     val dst = base + "/store_compact"
     val e = emb.persist()

@@ -70,9 +70,7 @@ class ProductQuantizerSpec extends SparkSpec {
       rows.foreach(r => r.getSeq[Int](0) shouldBe r.getSeq[Int](1))
     }
     check()
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try check()
-    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    withConf(NoCodegen) { check() }
   }
 
   it should "return null for a length-mismatched vector" in {

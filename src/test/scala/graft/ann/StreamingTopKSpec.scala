@@ -21,7 +21,7 @@ class StreamingTopKSpec extends SparkSpec {
     val rows = (1 to 400).map { i =>
       (i.toLong % 7, rnd.nextDouble(), i.toLong) // (group, sim, id)
     }
-    val dir = Files.createTempDirectory("graft-topk-stream")
+    val dir = tempDir("graft-topk-stream")
     val lines = rows.map { case (g, s, i) => s"""{"g":$g,"sim":$s,"id":$i}""" }
     lines.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
       val f = dir.resolve(f"chunk-$i%03d.json")
@@ -30,7 +30,7 @@ class StreamingTopKSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema("g LONG, sim DOUBLE, id LONG")
       .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val ckpt = Files.createTempDirectory("graft-topk-ckpt").toString
+    val ckpt = tempDir("graft-topk-ckpt").toString
     val q = stream.groupBy("g")
       .agg(graft.functions.TopKAgg.topk(col("sim"), col("id"), 5).as("top"))
       .writeStream.outputMode("complete").format("memory")

@@ -35,13 +35,12 @@ class CellArgmaxNestedSpec extends SparkSpec {
     val codegen = emb.limit(100).select(
       Similarity.cellOfTwoLevel(col("embedding"), supers, cells, 2).as("c"))
       .collect().map(_.getLong(0))
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val interp = emb.limit(100).select(
         Similarity.cellOfTwoLevel(col("embedding"), supers, cells, 2).as("c"))
         .collect().map(_.getLong(0))
       interp.toSeq shouldBe codegen.toSeq
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   it should "keep high agreement with the flat argmax at wSuper = 2" in {

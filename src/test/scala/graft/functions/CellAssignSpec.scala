@@ -39,14 +39,13 @@ class CellAssignSpec extends SparkSpec {
 
   it should "agree between generated and interpreted evaluation" in {
     val cs = cents(8)
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val bad = emb.limit(100).select(
         graft.functions.CellArgmax(col("embedding"), cs).as("fast"),
         Similarity.cellOfSpec(col("embedding"), cs).cast("long").as("spec"))
         .filter(col("fast") =!= col("spec")).count()
       bad shouldBe 0L
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   it should "return null on length-mismatched or null-element vectors" in {
@@ -85,9 +84,7 @@ class CellAssignSpec extends SparkSpec {
         .cast("array<long>").as("spec"))
       .filter(!(col("fast") === col("spec"))).count()
     check() shouldBe 0L
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try check() shouldBe 0L
-    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    withConf(NoCodegen) { check() shouldBe 0L }
   }
 
   it should "return all cells when nProbe exceeds the cell count" in {
@@ -115,10 +112,9 @@ class CellAssignSpec extends SparkSpec {
       .filter(col("f.cell") =!= col("d.cell") || !(col("f.r") === col("d.r")))
     cmp.count() shouldBe 0L
     // and in interpreted mode
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       fused.limit(50).collect().length shouldBe 50
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   "both" should "canonicalize structurally equal instances together" in {

@@ -32,12 +32,11 @@ class GramStatsSpec extends SparkSpec {
   }
 
   it should "agree between generated and interpreted evaluation" in {
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val df = cases.toDF("s").select(
         GramStats(col("s"), 8).as("gs"), struct(spec: _*).as("sp"))
       df.collect().foreach(r => r.getStruct(0).toSeq shouldBe r.getStruct(1).toSeq)
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   it should "participate in whole-stage codegen" in {

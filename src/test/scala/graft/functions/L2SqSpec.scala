@@ -33,8 +33,7 @@ class L2SqSpec extends SparkSpec {
   }
 
   it should "agree between generated and interpreted evaluation" in {
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val r = Seq((Array(0.5f, -1.5f, 2.0f), Array(1.0f, 0.25f, -0.75f)))
         .toDF("a", "b")
         .select(AnnPrims.l2sq(col("a"), col("b")).as("fast"),
@@ -42,7 +41,7 @@ class L2SqSpec extends SparkSpec {
         .collect().head
       java.lang.Double.doubleToRawLongBits(r.getDouble(0)) shouldBe
         java.lang.Double.doubleToRawLongBits(r.getDouble(1))
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   it should "compute the exact squared distance on a known pair" in {

@@ -21,13 +21,12 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   it should "agree between generated and interpreted evaluation" in {
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val r = Seq(Seq(7L, 8L, 9L)).toDF("h")
         .select(TextPrims.minhashSig(col("h"), 16).as("fast"),
           TextPrims.minhashSigHof(col("h"), 16).as("spec"))
         .collect().head
       r.getSeq[Any](0) shouldBe r.getSeq[Any](1)
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 }

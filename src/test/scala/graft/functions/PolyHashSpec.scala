@@ -43,12 +43,11 @@ class PolyHashSpec extends SparkSpec {
 
   it should "agree between generated and interpreted evaluation" in {
     // NO_CODEGEN forces the nullSafeEval path; both must match the spec.
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       Seq("interpreted path é").toDF("s")
         .select(TextPrims.charHash(col("s")).as("fast"),
           TextPrims.charHashHof(col("s")).as("spec"))
         .collect().foreach(r => r.getLong(0) shouldBe r.getLong(1))
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 }

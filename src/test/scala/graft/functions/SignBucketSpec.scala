@@ -41,13 +41,12 @@ class SignBucketSpec extends SparkSpec {
   }
 
   it should "agree between generated and interpreted evaluation" in {
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val v = Tables.embeddings(spark, "/root/testdata/sf0.001")
         .select(col("embedding").as("e")).limit(50)
       val rows = v.select(AnnPrims.signBucket(col("e"), 4, 11).as("fast"),
         AnnPrims.signBucketHof(col("e"), 4, 11).as("spec")).collect()
       rows.foreach(r => r.getLong(0) shouldBe r.getLong(1))
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 }

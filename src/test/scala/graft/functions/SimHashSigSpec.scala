@@ -28,13 +28,12 @@ class SimHashSigSpec extends SparkSpec {
   }
 
   it should "agree between generated and interpreted evaluation" in {
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withConf(NoCodegen) {
       val df = cases.toDF("h")
         .select(TextPrims.simhashSig(col("h"), 30).as("fast"),
           TextPrims.simhashHof(col("h"), 30).as("spec"))
       df.collect().foreach(r => r.getLong(0) shouldBe r.getLong(1))
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 
   it should "participate in whole-stage codegen" in {

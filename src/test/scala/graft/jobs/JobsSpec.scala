@@ -8,6 +8,7 @@ import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -61,7 +62,7 @@ class JobsSpec extends SparkSpec {
   }
 
   it should "fail on an empty events table, naming its directory and putting no key (P7)" in {
-    val dir = Files.createTempDirectory("job-empty")
+    val dir = tempDir("job-empty")
     Tables.events(spark, sfDir).limit(0).write.parquet(dir.resolve("events.parquet").toString)
     val sink = new InMemoryKeyValueSink
     val e = intercept[IllegalStateException](Jobs.hourlyStats(spark, dir.toString, sink))
@@ -131,11 +132,11 @@ class JobsSpec extends SparkSpec {
   "liveSlotView job" should "stream the materialized view into the sink" in {
     // replay events as JSON through the file source (one file is enough —
     // cross-batch state is covered by StreamingParitySpec)
-    val dir = Files.createTempDirectory("job-events")
+    val dir = tempDir("job-events")
     Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
     val sink = new InMemoryKeyValueSink
     val q = Jobs.liveSlotView(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 10),
-      sink, Files.createTempDirectory("job-ckpt").toString)
+      sink, tempDir("job-ckpt").toString)
     q.awaitTermination(120000)
     val batch = ParkingAnalytics.latestSlotState(spark, sfDir).collect()
     sink.store.size shouldBe batch.length
@@ -146,11 +147,11 @@ class JobsSpec extends SparkSpec {
   }
 
   "hourlyStatsStream job" should "converge the sink to the batch occupancyByLot rows" in {
-    val dir = Files.createTempDirectory("job-hourly")
+    val dir = tempDir("job-hourly")
     eventLines.grouped(250).zipWithIndex.foreach { case (ls, i) => land(dir, i, ls) }
     val sink = new InMemoryKeyValueSink
     val q = Jobs.hourlyStatsStream(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 1),
-      sink, Files.createTempDirectory("hourly-ckpt").toString)
+      sink, tempDir("hourly-ckpt").toString)
     q.awaitTermination(180000)
     val batch = ParkingAnalytics.occupancyByLot(spark, sfDir).collect()
     sink.store.size shouldBe batch.length
@@ -175,18 +176,18 @@ class JobsSpec extends SparkSpec {
   /** A directory holding a copy of the sf0.001 events and `customers` as
     * its user registry. */
   private def registryDir(customers: DataFrame): Path = {
-    val dir = Files.createTempDirectory("job-registry")
+    val dir = tempDir("job-registry")
     Tables.events(spark, sfDir).write.parquet(dir.resolve("events.parquet").toString)
     customers.write.parquet(dir.resolve("customer.parquet").toString)
     dir
   }
 
   "alertStream job" should "publish exactly the batch violations as alert documents" in {
-    val dir = Files.createTempDirectory("job-alerts")
+    val dir = tempDir("job-alerts")
     Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
     val sink = new InMemoryKeyValueSink
     val q = Jobs.alertStream(spark, FileEventSource(dir.toString, maxFilesPerTrigger = 10),
-      sfDir, sink, Files.createTempDirectory("alert-ckpt").toString)
+      sfDir, sink, tempDir("alert-ckpt").toString)
     q.awaitTermination(120000)
     val expected = p11AlertDocs(sfDir)
     expected should not be empty
@@ -203,11 +204,11 @@ class JobsSpec extends SparkSpec {
         s""""isSlotHandicapped":$handicappedSlot},"duration":0}"""
     val lines = Seq(event(1, "null"), event(2, "\"P-7\""), event(3, "\"P-999999\""),
       event(4, "\"P-1\""), event(5, "\"P-13\""), event(6, "\"P-999999\"", handicappedSlot = false))
-    val dir = Files.createTempDirectory("job-plates")
+    val dir = tempDir("job-plates")
     Files.write(dir.resolve("events.json"), lines.mkString("\n").getBytes)
     val sink = new InMemoryKeyValueSink
     Jobs.alertStream(spark, FileEventSource(dir.toString), sfDir, sink,
-      Files.createTempDirectory("plates-ckpt").toString).awaitTermination(120000)
+      tempDir("plates-ckpt").toString).awaitTermination(120000)
     def doc(id: Int, plate: String, violation: String, severity: String) =
       s"alert:$id" -> (s"""{$plate"spot_id":"s$id","lot_id":"lot-01",""" +
         s""""violation_type":"$violation","severity":"$severity","event_time":"2024-03-01 10:00:0$id"}""")
@@ -224,13 +225,13 @@ class JobsSpec extends SparkSpec {
   it should "fail at start, naming the plate, when the registry names a plate twice" in {
     val customers = Tables.customer(spark, sfDir)
     val reg = registryDir(customers.unionByName(customers.filter(col("c_custkey") === 1)))
-    val dir = Files.createTempDirectory("job-dup")
+    val dir = tempDir("job-dup")
     Files.write(dir.resolve("events.json"), String.join("\n", eventLines: _*).getBytes)
     val sink = new InMemoryKeyValueSink
     val before = spark.streams.active.length
     val e = intercept[IllegalArgumentException](Jobs.alertStream(spark,
       FileEventSource(dir.toString), reg.toString, sink,
-      Files.createTempDirectory("dup-ckpt").toString))
+      tempDir("dup-ckpt").toString))
     e.getMessage should include("P-1 ")
     spark.streams.active.length shouldBe before
     sink.store shouldBe empty
@@ -243,9 +244,9 @@ class JobsSpec extends SparkSpec {
       .select("event_id").collect().map(_.getLong(0))
     val parts = eventLines.indices.grouped(eventLines.length / 3 + 1).toSeq
     def keysOf(part: Int): Set[String] = parts(part).map(i => s"alert:${ids(i)}").toSet
-    val dir = Files.createTempDirectory("job-rewrite")
+    val dir = tempDir("job-rewrite")
     land(dir, 0, parts(0).map(eventLines))
-    val ckpt = Files.createTempDirectory("rewrite-ckpt").toString
+    val ckpt = tempDir("rewrite-ckpt").toString
     val source = FileEventSource(dir.toString, maxFilesPerTrigger = 1)
     val sink = new InMemoryKeyValueSink
     val before = p11AlertDocs(reg.toString)
@@ -275,7 +276,7 @@ class JobsSpec extends SparkSpec {
   }
 
   "the alert streams" should "run one Spark job per micro-batch with input" in {
-    val dir = Files.createTempDirectory("job-count")
+    val dir = tempDir("job-count")
     eventLines.grouped(eventLines.length / 3 + 1).zipWithIndex.foreach { case (ls, i) =>
       land(dir, i, ls)
     }
@@ -296,9 +297,9 @@ class JobsSpec extends SparkSpec {
     val queries = try {
       val qs = Seq(
         Jobs.alertStream(spark, source, sfDir, new InMemoryKeyValueSink,
-          Files.createTempDirectory("count-alert").toString),
+          tempDir("count-alert").toString),
         Jobs.alertNotifierStream(spark, source, sfDir, new InMemoryNotifier,
-          Files.createTempDirectory("count-notify").toString))
+          tempDir("count-notify").toString))
       qs.foreach(_.awaitTermination(120000))
       // listener events arrive in order: once the marker job is seen, so
       // is every job the streams ran
@@ -315,8 +316,36 @@ class JobsSpec extends SparkSpec {
     }
   }
 
+  "the Jobs entry points" should "leave the session conf as they found it" in {
+    def unchanged(what: String)(f: => Any): Unit = {
+      val before = spark.conf.getAll
+      f
+      withClue(what)(spark.conf.getAll shouldBe before)
+    }
+    unchanged("hourlyStats")(Jobs.hourlyStats(spark, sfDir, new InMemoryKeyValueSink))
+    unchanged("dailyRollup")(Jobs.dailyRollup(spark, sfDir, new InMemoryTimeSeriesSink))
+    unchanged("weeklyStats")(Jobs.weeklyStats(spark, sfDir, new InMemoryKeyValueSink))
+    val dir = tempDir("job-conf")
+    land(dir, 0, eventLines.toSeq)
+    val source = FileEventSource(dir.toString)
+    def ckpt = tempDir("conf-ckpt").toString
+    val streams = Seq[(String, () => StreamingQuery)](
+      "liveSlotView" -> (() => Jobs.liveSlotView(spark, source, new InMemoryKeyValueSink, ckpt)),
+      "hourlyStatsStream" ->
+        (() => Jobs.hourlyStatsStream(spark, source, new InMemoryKeyValueSink, ckpt)),
+      "alertStream" ->
+        (() => Jobs.alertStream(spark, source, sfDir, new InMemoryKeyValueSink, ckpt)),
+      "alertNotifierStream" ->
+        (() => Jobs.alertNotifierStream(spark, source, sfDir, new InMemoryNotifier, ckpt)))
+    for ((name, start) <- streams) unchanged(name) {
+      val q = start()
+      try q.awaitTermination(120000) shouldBe true finally q.stop()
+      q.recentProgress.map(_.numInputRows).sum shouldBe eventLines.length
+    }
+  }
+
   "local streaming checkpoints" should "start no chmod, readlink, stat or ls process" in {
-    val dir = Files.createTempDirectory("job-noproc")
+    val dir = tempDir("job-noproc")
     eventLines.grouped(eventLines.length / 3 + 1).zipWithIndex.foreach { case (ls, i) =>
       land(dir, i, ls)
     }
@@ -329,13 +358,13 @@ class JobsSpec extends SparkSpec {
       new ProcessBuilder("true").start().waitFor()
       val qs = Seq(
         Jobs.liveSlotView(spark, source, new InMemoryKeyValueSink,
-          Files.createTempDirectory("noproc-view").toString),
+          tempDir("noproc-view").toString),
         Jobs.alertStream(spark, source, sfDir, new InMemoryKeyValueSink,
-          Files.createTempDirectory("noproc-alert").toString))
+          tempDir("noproc-alert").toString))
       qs.foreach(_.awaitTermination(120000))
       qs
     } finally rec.stop()
-    val jfr = Files.createTempFile("process-starts", ".jfr")
+    val jfr = tempDir("process-starts").resolve("starts.jfr")
     rec.dump(jfr)
     rec.close()
     queries.foreach { q =>
@@ -349,18 +378,15 @@ class JobsSpec extends SparkSpec {
   }
 
   "liveSlotView" should "restart on a checkpoint Spark's default manager wrote" in {
-    val dir = Files.createTempDirectory("job-restart")
+    val dir = tempDir("job-restart")
     val files = eventLines.grouped(eventLines.length / 6 + 1).toSeq
     files.indices.take(4).foreach(i => land(dir, i, files(i)))
-    val ckpt = Files.createTempDirectory("restart-ckpt")
+    val ckpt = tempDir("restart-ckpt")
     val source = FileEventSource(dir.toString, maxFilesPerTrigger = 1)
     val sink = new InMemoryKeyValueSink
-    val prev = spark.conf.getOption(StreamingConf.CheckpointFileManagerKey)
-    try {
-      // leg 1: the live view's own plan under Spark's default manager,
-      // stopped once two batches are committed
-      spark.conf.unset(StreamingConf.CheckpointFileManagerKey)
-      StreamingConf.useRocksDbState(spark)
+    // leg 1: the live view's own plan under Spark's default manager,
+    // stopped once two batches are committed
+    val firstLeg = withConf(StreamingConf.CheckpointFileManagerKey -> None) {
       val q1 = Jobs.liveSlotUpdates(spark, source).writeStream
         .outputMode("update")
         .option("checkpointLocation", ckpt.toString)
@@ -373,25 +399,22 @@ class JobsSpec extends SparkSpec {
         while (batchIds(ckpt.resolve("commits")).size < 2 && q1.isActive &&
             System.currentTimeMillis() < deadline) Thread.sleep(20)
       } finally q1.stop()
-      val firstLeg = batchIds(ckpt.resolve("commits"))
-      firstLeg.take(2) shouldBe Seq(0L, 1L)
-      val walk = Files.walk(ckpt)
-      try walk.iterator.asScala.exists(_.getFileName.toString.endsWith(".crc")) shouldBe true
-      finally walk.close()
-
-      // leg 2: more files land, and the job restarts on the same checkpoint
-      files.indices.drop(4).foreach(i => land(dir, i, files(i)))
-      val q2 = Jobs.liveSlotView(spark, source, sink, ckpt.toString)
-      q2.awaitTermination(120000) shouldBe true
-      val secondLeg = q2.recentProgress.map(_.batchId).toSeq
-      val all = firstLeg ++ secondLeg
-      all shouldBe (0L until all.size.toLong)
-      batchIds(ckpt.resolve("commits")) shouldBe all
-      batchIds(ckpt.resolve("offsets")) shouldBe all
-    } finally prev match {
-      case Some(v) => spark.conf.set(StreamingConf.CheckpointFileManagerKey, v)
-      case None => spark.conf.unset(StreamingConf.CheckpointFileManagerKey)
+      batchIds(ckpt.resolve("commits"))
     }
+    firstLeg.take(2) shouldBe Seq(0L, 1L)
+    val walk = Files.walk(ckpt)
+    try walk.iterator.asScala.exists(_.getFileName.toString.endsWith(".crc")) shouldBe true
+    finally walk.close()
+
+    // leg 2: more files land, and the job restarts on the same checkpoint
+    files.indices.drop(4).foreach(i => land(dir, i, files(i)))
+    val q2 = Jobs.liveSlotView(spark, source, sink, ckpt.toString)
+    q2.awaitTermination(120000) shouldBe true
+    val secondLeg = q2.recentProgress.map(_.batchId).toSeq
+    val all = firstLeg ++ secondLeg
+    all shouldBe (0L until all.size.toLong)
+    batchIds(ckpt.resolve("commits")) shouldBe all
+    batchIds(ckpt.resolve("offsets")) shouldBe all
     val expected = ParkingAnalytics.latestSlotState(spark, sfDir)
       .select(concat_ws("-", col("parkingLotId"), col("parkingSpotId")),
         to_json(struct(col("parkingLotId"), col("parkingSpotId"), col("occupied"), col("plate"))))

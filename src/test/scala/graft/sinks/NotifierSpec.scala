@@ -67,7 +67,7 @@ class NotifierSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val sfDir = "/root/testdata/sf0.001"
     // reuse the parity harness's JSON shape: dump events once
-    val dir = java.nio.file.Files.createTempDirectory("graft-notifier-events")
+    val dir = tempDir("graft-notifier-events")
     val lines = graft.schema.ParkingModel.parkingEvents(spark, sfDir)
       .orderBy("event_id")
       .select(to_json(struct(
@@ -79,7 +79,7 @@ class NotifierSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("all.json"),
       String.join("\n", lines: _*).getBytes("UTF-8"))
     val notifier = new InMemoryNotifier
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-notifier-ckpt").toString
+    val ckpt = tempDir("graft-notifier-ckpt").toString
     val q = graft.jobs.Jobs.alertNotifierStream(
       spark, FileEventSource(dir.toString, maxFilesPerTrigger = 1), sfDir, notifier, ckpt)
     q.awaitTermination(180000)

@@ -36,7 +36,7 @@ class SinksSpec extends SparkSpec {
   }
 
   it should "write documents through the file-backed sink" in {
-    val dir = Files.createTempDirectory("graft-kv").toString
+    val dir = tempDir("graft-kv").toString
     val sink = new FileKeyValueSink(dir)
     Jobs.publish(HourlyDocs.documents(spark, sfDir).select("redis_key", "doc").limit(3), sink)
     val files = Files.list(Paths.get(dir)).toArray

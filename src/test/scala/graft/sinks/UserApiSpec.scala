@@ -1,7 +1,6 @@
 package graft.sinks
 
 import java.net.{HttpURLConnection, URI}
-import java.nio.file.Files
 import scala.io.Source
 
 import graft.SparkSpec
@@ -35,7 +34,7 @@ class UserApiSpec extends SparkSpec {
     .toDF("u_plate", "username", "email", "handicapped")
 
   "UserApi" should "serve the full CRUD lifecycle over the CDC log" in {
-    val logDir = Files.createTempDirectory("graft-userlog").toString
+    val logDir = tempDir("graft-userlog").toString
     var now = 1000L
     val server = UserApi.start(spark, base, logDir, clock = () => now)
     try {
@@ -116,7 +115,7 @@ class UserApiSpec extends SparkSpec {
     // a foreign writer (here: a raw channel lock standing in for another
     // process) owns the dir — starting a server against it must fail
     // fast, not mint colliding mut_seq values
-    val logDir = Files.createTempDirectory("graft-lockedlog")
+    val logDir = tempDir("graft-lockedlog")
     val ch = java.nio.channels.FileChannel.open(
       logDir.resolve(".writer.lock"),
       java.nio.file.StandardOpenOption.CREATE,
@@ -130,17 +129,17 @@ class UserApiSpec extends SparkSpec {
 
   "UserRegistry.compactInto" should "fold the log into a snapshot that serves the same registry" in {
     import graft.sources.UserRegistry
-    val logDir = Files.createTempDirectory("graft-complog").toString
+    val logDir = tempDir("graft-complog").toString
     UserRegistry.appendLog(logDir, Seq(
       """{"u_plate":"P-1","username":"alice","email":"new@x.io","handicapped":false,"op":"upsert","mut_seq":1,"expires_at":null}""",
       """{"u_plate":"P-2","username":null,"email":null,"handicapped":null,"op":"delete","mut_seq":2,"expires_at":null}""",
       """{"u_plate":"P-7","username":"gus","email":"g@x.io","handicapped":true,"op":"upsert","mut_seq":3,"expires_at":500}"""))
     val log = UserRegistry.readLog(spark, logDir)
-    val out = Files.createTempDirectory("graft-compout").toString + "/snap"
+    val out = tempDir("graft-compout").toString + "/snap"
     UserRegistry.compactInto(base, log, nowEpochS = 1000L, out)
     // the snapshot over an EMPTY log serves exactly what the live
     // base+log view served: update applied, tombstone gone, expired gone
-    val emptyLog = UserRegistry.readLog(spark, Files.createTempDirectory("graft-none").toString)
+    val emptyLog = UserRegistry.readLog(spark, tempDir("graft-none").toString)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.drop("version").collect().map(_.toSeq).toSet
     val compacted = rows(UserRegistry.view(spark.read.parquet(out), emptyLog, 1000L))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -27,19 +25,12 @@ class BucketingSpec extends SparkSpec {
 
   /** Run `f` with broadcast joins disabled so the join strategy under
     * test (bucketed sort-merge) is the one actually planned. */
-  private def withoutBroadcast[T](f: => T): T = {
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, "-1"))
-    try f finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withoutBroadcast[T](f: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> Some("-1"),
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> Some("-1"))(f)
 
   "writeBucketed" should "co-locate a fact-fact join: zero shuffles in the plan, same result" in {
-    val dir = Files.createTempDirectory("graft-bucketed")
+    val dir = tempDir("graft-bucketed")
     val l = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_extendedprice", "l_discount")
     val o = Tables.orders(spark, sfDir)

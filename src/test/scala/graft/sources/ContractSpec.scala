@@ -50,107 +50,86 @@ class ContractSpec extends SparkSpec {
 
   it should "report a re-encoded column as a single named diff line" in {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract").toString
-    try {
-      // clone the sf0.001 layout but re-encode events.ts as string —
-      // exactly the silent-regeneration scenario the probe exists for
-      for (t <- Contract.expected.keys if t != "events")
-        spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
-      spark.read.parquet(s"$sf/events.parquet")
-        .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
-        .write.parquet(s"$dir/events.parquet")
-      val drift = Contract.probe(spark, dir)
-      drift should have size 1
-      drift.head should startWith("events.ts: expected")
-      drift.head should include("got string")
-    } finally FsUtil.deleteRecursively(new java.io.File(dir))
+    val dir = tempDir("contract").toString
+    // clone the sf0.001 layout but re-encode events.ts as string —
+    // exactly the silent-regeneration scenario the probe exists for
+    for (t <- Contract.expected.keys if t != "events")
+      spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    spark.read.parquet(s"$sf/events.parquet")
+      .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
+      .write.parquet(s"$dir/events.parquet")
+    val drift = Contract.probe(spark, dir)
+    drift should have size 1
+    drift.head should startWith("events.ts: expected")
+    drift.head should include("got string")
   }
 
   it should "catch an embedding-dimension change a footer cannot show" in {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract3").toString
-    try {
-      for (t <- Contract.expected.keys if t != "embeddings")
-        spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
-      spark.read.parquet(s"$sf/embeddings.parquet")
-        .withColumn("embedding", slice(col("embedding"), 1, 32))
-        .write.parquet(s"$dir/embeddings.parquet")
-      val drift = Contract.probe(spark, dir)
-      drift should have size 1
-      drift.head shouldBe "embeddings.embedding: expected 64 elements, got 32"
-    } finally FsUtil.deleteRecursively(new java.io.File(dir))
+    val dir = tempDir("contract3").toString
+    for (t <- Contract.expected.keys if t != "embeddings")
+      spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    spark.read.parquet(s"$sf/embeddings.parquet")
+      .withColumn("embedding", slice(col("embedding"), 1, 32))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val drift = Contract.probe(spark, dir)
+    drift should have size 1
+    drift.head shouldBe "embeddings.embedding: expected 64 elements, got 32"
   }
 
   it should "catch a null embedding vector anywhere in the table" in {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract4").toString
-    try {
-      for (t <- Contract.expected.keys if t != "embeddings")
-        spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
-      // null out one mid-table vector: the old first-row probe missed this
-      spark.read.parquet(s"$sf/embeddings.parquet")
-        .withColumn("embedding",
-          when(col("vec_id") === 7L, lit(null)).otherwise(col("embedding")))
-        .write.parquet(s"$dir/embeddings.parquet")
-      val drift = Contract.probe(spark, dir)
-      drift should have size 1
-      drift.head shouldBe "embeddings.embedding: 1 null vector(s)"
-    } finally FsUtil.deleteRecursively(new java.io.File(dir))
+    val dir = tempDir("contract4").toString
+    for (t <- Contract.expected.keys if t != "embeddings")
+      spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    // null out one mid-table vector: the old first-row probe missed this
+    spark.read.parquet(s"$sf/embeddings.parquet")
+      .withColumn("embedding",
+        when(col("vec_id") === 7L, lit(null)).otherwise(col("embedding")))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val drift = Contract.probe(spark, dir)
+    drift should have size 1
+    drift.head shouldBe "embeddings.embedding: 1 null vector(s)"
   }
 
   it should "catch a ragged embedding column beyond row 1" in {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract5").toString
-    try {
-      for (t <- Contract.expected.keys if t != "embeddings")
-        spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
-      spark.read.parquet(s"$sf/embeddings.parquet")
-        .withColumn("embedding",
-          when(col("vec_id") === 7L, slice(col("embedding"), 1, 32))
-            .otherwise(col("embedding")))
-        .write.parquet(s"$dir/embeddings.parquet")
-      val drift = Contract.probe(spark, dir)
-      drift should have size 1
-      drift.head shouldBe "embeddings.embedding: expected 64 elements, got ragged 32..64"
-    } finally FsUtil.deleteRecursively(new java.io.File(dir))
+    val dir = tempDir("contract5").toString
+    for (t <- Contract.expected.keys if t != "embeddings")
+      spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    spark.read.parquet(s"$sf/embeddings.parquet")
+      .withColumn("embedding",
+        when(col("vec_id") === 7L, slice(col("embedding"), 1, 32))
+          .otherwise(col("embedding")))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val drift = Contract.probe(spark, dir)
+    drift should have size 1
+    drift.head shouldBe "embeddings.embedding: expected 64 elements, got ragged 32..64"
   }
 
   it should "catch an int64 ts re-encoded in micros (the next silent drift)" in {
-    val dir = java.nio.file.Files.createTempDirectory("contract6").toString
-    try {
-      for (t <- Contract.expected.keys if t != "events")
-        spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
-      // plain int64 MICROS: footer says bigint (accepted — nanos-as-long is
-      // also bigint), but normalizeTs's nanos assumption divides by 1000 and
-      // every timestamp lands in 1970 — only the value probe can see it
-      spark.read.parquet(s"$sf/events.parquet")
-        .withColumn("ts", unix_micros(col("ts").cast(TimestampType)))
-        .write.parquet(s"$dir/events.parquet")
-      val drift = Contract.probe(spark, dir)
-      drift should have size 1
-      drift.head should startWith("events.ts: value-sanity failed")
-      drift.head should include("micros/millis")
-    } finally FsUtil.deleteRecursively(new java.io.File(dir))
-  }
-
-  it should "restore the nanosAsLong conf it sets for the probe" in {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    spark.conf.set(key, "false")
-    try {
-      Contract.probe(spark, sf)
-      spark.conf.get(key) shouldBe "false"
-    } finally spark.conf.unset(key)
+    val dir = tempDir("contract6").toString
+    for (t <- Contract.expected.keys if t != "events")
+      spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    // plain int64 MICROS: footer says bigint (accepted — nanos-as-long is
+    // also bigint), but normalizeTs's nanos assumption divides by 1000 and
+    // every timestamp lands in 1970 — only the value probe can see it
+    spark.read.parquet(s"$sf/events.parquet")
+      .withColumn("ts", unix_micros(col("ts").cast(TimestampType)))
+      .write.parquet(s"$dir/events.parquet")
+    val drift = Contract.probe(spark, dir)
+    drift should have size 1
+    drift.head should startWith("events.ts: value-sanity failed")
+    drift.head should include("micros/millis")
   }
 
   it should "report a missing table as unreadable" in {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contract2").toString
-    try {
-      for (t <- Contract.expected.keys if t != "embeddings")
-        spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
-      val drift = Contract.probe(spark, dir)
-      drift should have size 1
-      drift.head should startWith("embeddings: unreadable")
-    } finally FsUtil.deleteRecursively(new java.io.File(dir))
+    val dir = tempDir("contract2").toString
+    for (t <- Contract.expected.keys if t != "embeddings")
+      spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet")
+    val drift = Contract.probe(spark, dir)
+    drift should have size 1
+    drift.head should startWith("embeddings: unreadable")
   }
 }

@@ -9,7 +9,7 @@ class EventLakeSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val lakeDir: String = {
-    val dir = Files.createTempDirectory("graft-lake").toString
+    val dir = tempDir("graft-lake").toString
     EventLake.writePartitioned(ParkingModel.parkingEvents(spark, sfDir), dir)
     dir
   }
@@ -54,7 +54,7 @@ class EventLakeSpec extends SparkSpec {
   }
 
   it should "survive schema evolution in both directions (declared-schema read)" in {
-    val dir = Files.createTempDirectory("graft-lake-evolve")
+    val dir = tempDir("graft-lake-evolve")
     EventLake.writePartitioned(ParkingModel.parkingEvents(spark, sfDir).limit(5),
       dir.toString)
     val part = Files.walk(dir).filter(p => p.toString.contains("h=")).toArray
@@ -76,7 +76,7 @@ class EventLakeSpec extends SparkSpec {
   }
 
   it should "tolerate corrupt lines in the lake (S3 permissive read)" in {
-    val dir = Files.createTempDirectory("graft-lake-corrupt")
+    val dir = tempDir("graft-lake-corrupt")
     EventLake.writePartitioned(ParkingModel.parkingEvents(spark, sfDir).limit(10),
       dir.toString)
     // drop a corrupt uncompressed file beside the gzip parts, inside a

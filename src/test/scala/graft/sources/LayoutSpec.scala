@@ -30,8 +30,8 @@ class LayoutSpec extends SparkSpec {
   "writeZOrdered" should "round-trip the data and cluster BOTH dimensions" in {
     val l = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
-    val zDir = Files.createTempDirectory("graft-zorder").toString + "/t"
-    val oneDir = Files.createTempDirectory("graft-onecol").toString + "/t"
+    val zDir = tempDir("graft-zorder").toString + "/t"
+    val oneDir = tempDir("graft-onecol").toString + "/t"
 
     Layout.writeZOrdered(l, zDir, "l_partkey", "l_suppkey", numFiles = 8)
     // baseline: same file count, range-laid-out on ONE column only
@@ -78,7 +78,7 @@ class LayoutSpec extends SparkSpec {
 
   "compact" should "reduce the file count without changing the data" in {
     val l = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_extendedprice")
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact").toString + "/t"
     l.repartition(40).write.parquet(dir) // the small-file mess a micro-batch sink leaves
     def parquetFiles = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -87,5 +87,17 @@ class LayoutSpec extends SparkSpec {
     Layout.compact(spark, dir) shouldBe 1 // tiny table -> one right-sized file
     parquetFiles shouldBe 1
     spark.read.parquet(dir).agg(count(lit(1)), sum("l_orderkey")).head() shouldBe before
+  }
+
+  "compact's recursive delete" should "remove a symlink in the tree, not its target's files" in {
+    val target = tempDir("graft-link-target")
+    Files.write(target.resolve("keep.txt"), "kept".getBytes("UTF-8"))
+    val tree = tempDir("graft-link-tree").resolve("t")
+    Files.createDirectories(tree.resolve("sub"))
+    Files.write(tree.resolve("sub/own.txt"), "own".getBytes("UTF-8"))
+    Files.createSymbolicLink(tree.resolve("sub/link"), target)
+    org.apache.commons.io.FileUtils.deleteDirectory(tree.toFile)
+    Files.exists(tree) shouldBe false
+    new String(Files.readAllBytes(target.resolve("keep.txt")), "UTF-8") shouldBe "kept"
   }
 }

@@ -32,7 +32,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   /** `HDFSMetadataLog`'s batch-file filter, as the offset and commit logs
     * use it to list their batches. */
   private lazy val batchFilter: PathFilter =
-    new CommitLogFilter(spark, Files.createTempDirectory("cfm-log").toString).filter
+    new CommitLogFilter(spark, tempDir("cfm-log").toString).filter
 
   private def sparkFm(root: Path): CheckpointFileManager =
     new FileContextBasedCheckpointFileManager(root, conf)
@@ -45,8 +45,8 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   /** Run `body` once per manager, each on its own fresh directory, and
     * return both results: Spark's first. */
   private def both[T](body: (CheckpointFileManager, NioPath) => T): (T, T) = {
-    val a = Files.createTempDirectory("cfm-spark")
-    val b = Files.createTempDirectory("cfm-local")
+    val a = tempDir("cfm-spark")
+    val b = tempDir("cfm-local")
     (body(sparkFm(a), a), body(ourFm(b), b))
   }
 
@@ -151,7 +151,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   }
 
   "createCheckpointDirectory" should "create the root and return it qualified" in {
-    val dir = Files.createTempDirectory("cfm-root")
+    val dir = tempDir("cfm-root")
     val made = Seq[Path => CheckpointFileManager](sparkFm, ourFm).zipWithIndex.map { case (mk, i) =>
       val root = dir.resolve(s"ckpt$i")
       // scheme-less, as a checkpointLocation usually is
@@ -161,7 +161,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   }
 
   "a checkpoint" should "move between the default manager and ours in both directions" in {
-    val dir = Files.createTempDirectory("cfm-mixed")
+    val dir = tempDir("cfm-mixed")
     val f = p(dir, "3")
     write(sparkFm(dir), f, "from spark", overwrite = false)
     onDisk(dir) shouldBe Seq(".3.crc", "3")
@@ -177,7 +177,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   }
 
   "a non-file: path" should "go to Spark's own manager" in {
-    val target = Files.createTempDirectory("cfm-viewfs")
+    val target = tempDir("cfm-viewfs")
     val viewConf = new Configuration()
     ConfigUtil.addLink(viewConf, "graft", "/ckpt", target.toUri)
     val root = new Path("viewfs://graft/ckpt")

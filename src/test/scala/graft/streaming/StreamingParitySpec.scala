@@ -20,13 +20,6 @@ import graft.schema.ParkingModel
   */
 class StreamingParitySpec extends SparkSpec {
 
-  // the parity gate runs under the production state store (SURVEY §4):
-  // every stateful query below keeps its mapGroupsWithState / windowed
-  // state in RocksDB, not executor heap, and checkpoints through the
-  // engine's local checkpoint manager, as the Jobs entry points do.
-  StreamingConf.useRocksDbState(spark)
-  StreamingConf.useLocalCheckpoints(spark)
-
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val jsonDir: String = dumpEventsAsJson()
 
@@ -34,7 +27,7 @@ class StreamingParitySpec extends SparkSpec {
     * chunked into 10 files with strictly increasing mtimes so the file
     * stream replays them in event order across ≥5 micro-batches. */
   private def dumpEventsAsJson(): String = {
-    val dir = Files.createTempDirectory("graft-events-json")
+    val dir = tempDir("graft-events-json")
     val json = ParkingModel.parkingEvents(spark, sfDir)
       .orderBy("event_id")
       .select(to_json(struct(
@@ -58,7 +51,7 @@ class StreamingParitySpec extends SparkSpec {
     EventDecode.decode(FileEventSource(jsonDir, maxFilesPerTrigger = 2).stream(spark))
 
   private def runStream(df: DataFrame, mode: String)(onBatch: DataFrame => Unit): Unit = {
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = df.writeStream
       .outputMode(mode)
       .option("checkpointLocation", ckpt)
@@ -73,14 +66,14 @@ class StreamingParitySpec extends SparkSpec {
     assert(!q.isActive, "stream did not terminate")
   }
 
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   /** `df` ordered by `order` as JSON-lines files of ⌈rows / files⌉ rows
     * with increasing mtimes, and a maxFilesPerTrigger=1 stream with
     * `df`'s schema that replays them in that order, one file per
     * micro-batch. */
   private def chunked(df: DataFrame, order: String, files: Int = 5): DataFrame = {
-    val dir = Files.createTempDirectory("graft-chunks-json")
+    val dir = tempDir("graft-chunks-json")
     val lines = df.orderBy(order).select(to_json(struct(df.columns.map(col): _*)))
       .collect().map(_.getString(0))
     lines.grouped(math.max(1, math.ceil(lines.length.toDouble / files).toInt)).zipWithIndex
@@ -123,7 +116,7 @@ class StreamingParitySpec extends SparkSpec {
 
   "EventDecode" should "drop undecodable payloads and keep valid ones (ST6)" in {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-garbage")
+    val dir = tempDir("graft-garbage")
     val good =
       """{"event_id":1,"eventType":"PARKING_ENTRY","timestamp":"2024-01-01T10:00:00.000Z","vehicle":{"licensePlate":"P-1","vehicleType":"car","color":"red"},"parking":{"parkingLotId":"lot-01","parkingSpotId":"7","isSlotHandicapped":false},"duration":null}"""
     val good2 = good.replace("\"event_id\":1", "\"event_id\":2")
@@ -216,7 +209,7 @@ class StreamingParitySpec extends SparkSpec {
   "DedupGroupStream" should "converge to the batch duplicateGroups over all streamed pairs" in {
     import spark.implicits._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir = Files.createTempDirectory("graft-pairs-json")
+    val dir = tempDir("graft-pairs-json")
     // three chunks engineered so components MERGE across micro-batches:
     // chunk 1 creates {1,2},{3,4},{10,11}; chunk 2 glues 2-3 (fusing two
     // existing groups) and opens {20,21}; chunk 3 glues 11-20 (fusing two
@@ -281,7 +274,7 @@ class StreamingParitySpec extends SparkSpec {
         if (i % 2 == 0) (key, t, true, 0L, if (i % 10 == 0) None else Some(t * 7))
         else (key, t, false, i.toLong, None)
     }
-    val dir = Files.createTempDirectory("graft-asof-json")
+    val dir = tempDir("graft-asof-json")
     events.sortBy(_._2).grouped(30).zipWithIndex.foreach { case (evs, i) =>
       val lines = evs.map { case (k, t, isR, lid, p) =>
         s"""{"key":"$k","t":$t,"is_right":$isR,"left_id":$lid,"payload":${p.map(_.toString).getOrElse("null")}}"""
@@ -373,7 +366,7 @@ class StreamingParitySpec extends SparkSpec {
 
   "RegistryStream" should "converge to the batch UserRegistry.view across micro-batches" in {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-regmut-json")
+    val dir = tempDir("graft-regmut-json")
     // chunk 0 seeds the base (mut_seq = −1, exactly the batch view's
     // union); chunk 1 updates P-1, inserts P-9, grants P-2 a temporary
     // record that is EXPIRED at now=1000; chunk 2 tombstones P-9 and
@@ -434,7 +427,7 @@ class StreamingParitySpec extends SparkSpec {
     // that results match batch exactly across micro-batches
     val ivs = Seq(("k1", 1L, 0L, 10L), ("k1", 2L, 5L, 25L), ("k2", 3L, -6L, 4L))
     val pts = (0 until 30).map(i => ("k" + (i % 2 + 1), i.toLong, (i * 3 - 10).toLong))
-    val dir = Files.createTempDirectory("graft-range-json")
+    val dir = tempDir("graft-range-json")
     pts.grouped(10).zipWithIndex.foreach { case (ps, i) =>
       val lines = ps.map { case (k, id, t) => s"""{"key":"$k","pt_id":$id,"t":$t}""" }
       val f = dir.resolve(f"chunk-$i%03d.json")

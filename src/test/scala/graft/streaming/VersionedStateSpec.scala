@@ -16,7 +16,7 @@ class VersionedStateSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vstate").toString
+    tempDir("graft-vstate").toString
 
   private def keys(ks: Long*): DataFrame = ks.toDF("wh")
 

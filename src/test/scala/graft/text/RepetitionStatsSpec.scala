@@ -88,9 +88,7 @@ class RepetitionStatsSpec extends SparkSpec {
       TextStats.repetitionSignals(docs, "doc_id", "text")
         .collect().map(_.toSeq).toSeq
     val fast = run()
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try run() shouldBe fast
-    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    withConf(NoCodegen) { run() shouldBe fast }
     fast.length.toLong shouldBe docs.count()
   }
 

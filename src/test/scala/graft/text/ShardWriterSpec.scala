@@ -11,8 +11,7 @@ class ShardWriterSpec extends SparkSpec {
   "writeTokenShards" should "lay out balanced contiguous shards with a consistent manifest" in {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val nShards = 8
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-shards").toString + "/corpus"
+    val path = tempDir("graft-shards").toString + "/corpus"
     TextCuration.writeTokenShards(docs, "doc_id", "text", path, nShards)
 
     // layout: one directory per shard, one file per shard

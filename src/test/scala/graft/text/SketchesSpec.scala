@@ -48,7 +48,7 @@ class SketchesSpec extends SparkSpec {
     // chunk the documents into 5 json files → ≥5 micro-batches; the
     // monotone per-register max must merge incrementally to exactly the
     // batch table, with state bounded at 256 rows throughout.
-    val dir = Files.createTempDirectory("graft-hll-stream")
+    val dir = tempDir("graft-hll-stream")
     val lines = docs.orderBy("doc_id")
       .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
       .collect().map(_.getString(0))
@@ -60,7 +60,7 @@ class SketchesSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val ckpt = Files.createTempDirectory("graft-hll-ckpt").toString
+    val ckpt = tempDir("graft-hll-ckpt").toString
     val q = Sketches.hllRegisters(stream, "doc_id", "text")
       .writeStream.outputMode("complete").format("memory")
       .queryName("hll_regs_stream")
@@ -79,7 +79,7 @@ class SketchesSpec extends SparkSpec {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val dir = Files.createTempDirectory("graft-cms-stream")
+    val dir = tempDir("graft-cms-stream")
     val lines = docs.orderBy("doc_id")
       .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
       .collect().map(_.getString(0))
@@ -91,7 +91,7 @@ class SketchesSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val ckpt = Files.createTempDirectory("graft-cms-ckpt").toString
+    val ckpt = tempDir("graft-cms-ckpt").toString
     val q = Sketches.cmsCells(stream, "text")
       .writeStream.outputMode("complete").format("memory")
       .queryName("cms_cells_stream")
@@ -150,7 +150,7 @@ class SketchesSpec extends SparkSpec {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val dir = Files.createTempDirectory("graft-kmv-stream")
+    val dir = tempDir("graft-kmv-stream")
     val lines = docs.orderBy("doc_id")
       .select(to_json(struct(col("doc_id"), col("text"))).as("l"))
       .collect().map(_.getString(0))
@@ -162,7 +162,7 @@ class SketchesSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val ckpt = Files.createTempDirectory("graft-kmv-ckpt").toString
+    val ckpt = tempDir("graft-kmv-ckpt").toString
     // the id-only heap half of kmvState (the join back to values is
     // per-batch derivable; the STATE is the sampled id set)
     val sampled = stream
